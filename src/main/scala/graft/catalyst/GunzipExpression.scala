@@ -9,8 +9,8 @@ import org.apache.spark.sql.types.{BinaryType, DataType}
   * the Kinesis-payload decode fuses into the scan→filter pipeline instead
   * of breaking the generated loop at a UDF boundary.
   *
-  * Semantics match `Decode.gunzip`: null or undecodable input → null (the
-  * A8 dead-letter contract — corrupt payloads must not fail a 100 TB job).
+  * Null or undecodable input → null (the A8 dead-letter contract — corrupt
+  * payloads must not fail a 100 TB job).
   */
 case class GunzipExpression(child: Expression) extends UnaryExpression {
 

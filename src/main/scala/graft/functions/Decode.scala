@@ -1,9 +1,9 @@
 package graft.functions
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, IOException}
-import java.util.zip.{GZIPInputStream, GZIPOutputStream}
+import java.io.ByteArrayOutputStream
+import java.util.zip.GZIPOutputStream
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 
@@ -12,28 +12,11 @@ import org.apache.spark.sql.functions._
   * The reference consumes Kinesis records whose payloads are
   * base64-delivered, gzip-compressed JSON (reference: README.md:2; the
   * Kinesis/Arc delivery contract). Base64 is a Spark built-in
-  * (`base64`/`unbase64`, codegen'd); gzip has no built-in, so it is the one
-  * scalar UDF this engine allows on the decode path (SURVEY.md §2.E).
-  *
-  * Scale note: the UDF is a pure byte[]→byte[] function — no driver state,
-  * no shuffle — so it scales linearly with input splits. If profiling ever
-  * shows it dominating, the §4.3 plan is a codegen `UnaryExpression`.
+  * (`base64`/`unbase64`, codegen'd); gunzip is the native codegen
+  * expression [[graft.catalyst.GunzipExpression]], capped at
+  * [[GzipCodec.MaxDecompressedBytes]] per record.
   */
 object Decode {
-
-  /** Gunzip a binary column; malformed input → null (A8 tolerance). */
-  val gunzip: UserDefinedFunction = udf { (bytes: Array[Byte]) =>
-    if (bytes == null) null
-    else
-      try {
-        val in  = new GZIPInputStream(new ByteArrayInputStream(bytes))
-        val out = new ByteArrayOutputStream()
-        val buf = new Array[Byte](8192)
-        var n   = in.read(buf)
-        while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-        out.toByteArray
-      } catch { case _: IOException => null }
-  }
 
   /** Gzip a binary column (test/roundtrip support; sinks may emit gzip). */
   val gzip: UserDefinedFunction = udf { (bytes: Array[Byte]) =>
@@ -47,22 +30,16 @@ object Decode {
     }
   }
 
-  /** Kinesis payloads arrive base64-encoded; both directions as Columns.
-    * Decoding is null-tolerant (`try_to_binary`) — invalid base64 must
-    * dead-letter, not fail the batch (A8). */
-  def toBase64(bin: Column): Column   = base64(bin)
+  /** Kinesis payloads arrive base64-encoded. Decoding is null-tolerant
+    * (`try_to_binary`) — invalid base64 must dead-letter, not fail the
+    * batch (A8). */
   def fromBase64(str: Column): Column = try_to_binary(str, lit("base64"))
 
-  /** Full Kinesis-payload decode: base64 string → gunzip → UTF-8 JSON.
-    * Any stage failing (bad base64, bad gzip) yields null. */
-  def decodePayload(b64: Column): Column =
-    decode(gunzip(fromBase64(b64)), "UTF-8")
-
-  /** [[decodePayload]] through the native codegen gunzip
-    * ([[graft.catalyst.GunzipExpression]]) — same null semantics, fuses
-    * into the scan's codegen stage instead of crossing a UDF boundary. */
-  def decodePayloadNative(spark: org.apache.spark.sql.SparkSession, b64: Column): Column = {
+  /** gzip bytes → UTF-8 text through the native gunzip: fuses into the
+    * scan's codegen stage instead of crossing a UDF boundary. Bad gzip,
+    * an over-cap payload or null input yields null. */
+  def gunzipText(spark: SparkSession, gz: Column): Column = {
     graft.catalyst.GraftExtensions.register(spark)
-    decode(call_function("graft_gunzip", fromBase64(b64)), "UTF-8")
+    decode(call_function("graft_gunzip", gz), "UTF-8")
   }
 }

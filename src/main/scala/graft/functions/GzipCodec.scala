@@ -3,9 +3,10 @@ package graft.functions
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, IOException}
 import java.util.zip.GZIPInputStream
 
-/** JVM gzip decode helper, called from both the scalar UDF and the codegen
-  * path of [[graft.catalyst.GunzipExpression]] (Scala object methods emit
-  * static forwarders, so generated Java can call this directly). */
+/** JVM gzip decode helper, called from the `graft.gunzip` catalog function
+  * and the codegen path of [[graft.catalyst.GunzipExpression]] (Scala
+  * object methods emit static forwarders, so generated Java can call this
+  * directly). */
 object GzipCodec {
 
   /** Decompression ceiling per record. Kinesis payloads are untrusted; a

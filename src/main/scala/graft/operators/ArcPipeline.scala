@@ -22,6 +22,11 @@ import graft.functions.Decode
   * DataFrame — the plan is fully declarative, so the micro-batch engine
   * incrementalizes it exactly as Kinesis→Lambda invocations did, with
   * per-record tolerance instead of per-batch retry.
+  *
+  * The decoded envelope sits behind a plan boundary (a one-element
+  * `explode`) because predicate pushdown would otherwise substitute the
+  * whole gunzip → `from_json` chain into every filter conjunct and decode
+  * each record once per conjunct instead of once.
   */
 object ArcPipeline {
 
@@ -67,44 +72,45 @@ object ArcPipeline {
       sectionAllowlist: Seq[String] = Seq.empty
   )
 
+  /** The envelope an undecodable payload (bad base64 / gzip) decodes to. */
+  private val undecodable: Column = struct(
+    lit(null).cast(StringType).as("version"),
+    lit(null).cast(StringType).as("type"),
+    lit(null).cast(StringType).as("subtype"),
+    lit(null).cast(StringType).as("operation"),
+    lit(null).cast(StringType).as("date"),
+    lit(null).cast(StringType).as("id"),
+    lit(null).cast(bodySchema).as("body"),
+    lit("UNDECODABLE").as("_corrupt")
+  )
+
   /** Stage 1 — decode: base64 text → gunzip → UTF-8 JSON → envelope
     * struct. Malformed payloads land with a non-null `_corrupt` field
     * (A8), never fail the batch. */
   def decodeEnvelope(raw: DataFrame, payloadCol: Column): DataFrame =
-    raw
-      .withColumn("json", Decode.decodePayloadNative(raw.sparkSession, payloadCol))
-      .withColumn(
-        "event",
-        when(
-          col("json").isNull,
-          // undecodable payload (bad base64/gzip): synthesize a corrupt marker
-          struct(
-            lit(null).cast(StringType).as("version"),
-            lit(null).cast(StringType).as("type"),
-            lit(null).cast(StringType).as("subtype"),
-            lit(null).cast(StringType).as("operation"),
-            lit(null).cast(StringType).as("date"),
-            lit(null).cast(StringType).as("id"),
-            lit(null).cast(bodySchema).as("body"),
-            lit("UNDECODABLE").as("_corrupt")
-          )
-        ).otherwise(
-          from_json(col("json"), envelopeSchema, Map("mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> "_corrupt"))
-        )
-      )
+    decodeGzip(raw, Decode.fromBase64(payloadCol))
+
+  /** gzip bytes → `event`, every input column kept. The envelope leaves
+    * through a one-element `explode` (a `Generate`), the plan boundary the
+    * object doc explains. */
+  private def decodeGzip(raw: DataFrame, gz: Column): DataFrame = {
+    val json = raw.withColumn("__json", Decode.gunzipText(raw.sparkSession, gz))
+    val event = when(col("__json").isNull, undecodable).otherwise(
+      from_json(col("__json"), envelopeSchema, Map("mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> "_corrupt")))
+    json.select(col("*"), explode(array(event)).as("event")).drop("__json")
+  }
 
   /** Variant of [[run]] over the Kinesis record frame
     * ([[graft.sources.EventSource.recordSchema]]): payloads arrive as raw
-    * binary (already base64-decoded by the transport), so decode skips
-    * straight to gunzip → JSON. */
+    * binary (already base64-decoded by the transport), so decode goes
+    * straight to gunzip → JSON. Dead letters keep [[run]]'s schema: their
+    * `payload` is the base64 text of the original bytes. */
   def runRecords(
       records: DataFrame,
       cfg: FilterConfig,
       observation: Option[org.apache.spark.sql.Observation] = None
-  ): (DataFrame, DataFrame) = {
-    val b64 = records.withColumn("__payload_b64", base64(col("payload")))
-    run(b64, col("__payload_b64"), cfg, observation)
-  }
+  ): (DataFrame, DataFrame) =
+    split(decodeGzip(records, col("payload")), base64(col("payload")), cfg, observation)
 
   /** Stage 2 — THE filter (A6): conjunction of envelope predicates. */
   def eventFilter(cfg: FilterConfig): Column = {
@@ -153,8 +159,17 @@ object ArcPipeline {
       payloadCol: Column,
       cfg: FilterConfig,
       observation: Option[org.apache.spark.sql.Observation] = None
+  ): (DataFrame, DataFrame) =
+    split(decodeEnvelope(raw, payloadCol), payloadCol, cfg, observation)
+
+  /** Observe, split corrupt from good, filter and project one decoded frame;
+    * `payload` is the dead letters' payload column. */
+  private def split(
+      decoded0: DataFrame,
+      payload: Column,
+      cfg: FilterConfig,
+      observation: Option[org.apache.spark.sql.Observation]
   ): (DataFrame, DataFrame) = {
-    val decoded0 = decodeEnvelope(raw, payloadCol)
     val decoded = observation match {
       case Some(obs) =>
         decoded0.observe(
@@ -167,6 +182,6 @@ object ArcPipeline {
     val corrupt = decoded.filter(col("event._corrupt").isNotNull)
     val good    = decoded.filter(col("event._corrupt").isNull)
     val out     = project(good.filter(eventFilter(cfg)))
-    (out, corrupt.select(payloadCol.as("payload"), col("event._corrupt").as("error")))
+    (out, corrupt.select(payload.as("payload"), col("event._corrupt").as("error")))
   }
 }

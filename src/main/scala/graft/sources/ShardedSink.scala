@@ -1,6 +1,5 @@
 package graft.sources.sharded
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write.{
@@ -54,19 +53,9 @@ class ShardedWriteBuilder(path: String, info: LogicalWriteInfo) extends WriteBui
 
 class ShardedWrite(path: String, queryId: String, schema: StructType) extends Write {
   private def ord(name: String): Int = schema.fieldIndex(name)
-  // Capture the SESSION's Hadoop configuration on the DRIVER and ship it
-  // as a plain map: executors must open the target filesystem with the
-  // job's conf (credentials, fs.defaultFS, committer tuning), not a
-  // default-constructed one — the same reason Spark's own file sinks
-  // broadcast a SerializableConfiguration. Captured here (driver-side,
-  // at write build) because DataWriterFactory ships to executors.
-  private val confMap: Map[String, String] = {
-    val c = org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf()
-    val it = c.iterator()
-    val b  = Map.newBuilder[String, String]
-    while (it.hasNext) { val e = it.next(); b += (e.getKey -> e.getValue) }
-    b.result()
-  }
+  // Captured here (driver-side, at write build) because DataWriterFactory
+  // ships to executors.
+  private val confMap: Map[String, String] = SessionHadoopConf.capture()
   override def toBatch: BatchWrite =
     new ShardedBatchWrite(path, queryId, ord("shard"), ord("payload"), confMap)
   override def toStreaming: StreamingWrite =
@@ -76,15 +65,8 @@ class ShardedWrite(path: String, queryId: String, schema: StructType) extends Wr
 case class ShardedCommitMessage(files: Seq[(String, Int, String)]) extends WriterCommitMessage
 
 object ShardedCommit {
-  def confFrom(confMap: Map[String, String]): Configuration = {
-    // default-loaded base so an empty map (direct construction in tests)
-    // still resolves file:// — the captured map then overrides on top
-    val c = new Configuration()
-    confMap.foreach { case (k, v) => c.set(k, v) }
-    c
-  }
   private def fs(path: String, confMap: Map[String, String]) =
-    new Path(path).getFileSystem(confFrom(confMap))
+    new Path(path).getFileSystem(SessionHadoopConf.toConf(confMap))
 
   def commit(root: String, writeId: String, messages: Array[WriterCommitMessage],
       confMap: Map[String, String]): Unit = {
@@ -163,10 +145,8 @@ class ShardedDataWriter(
     payloadOrd: Int,
     confMap: Map[String, String] = Map.empty
 ) extends DataWriter[InternalRow] {
-  private val conf =
-    if (confMap.isEmpty) new Configuration() else ShardedCommit.confFrom(confMap)
   private val tmpDir  = new Path(root, s"_tmp/$writeId")
-  private val fsys    = tmpDir.getFileSystem(conf)
+  private val fsys    = tmpDir.getFileSystem(SessionHadoopConf.toConf(confMap))
   private val writers = scala.collection.mutable.Map.empty[Int, java.io.Writer]
   private val files   = scala.collection.mutable.ArrayBuffer.empty[(String, Int, String)]
 

@@ -106,6 +106,30 @@ object ShardedStream {
   }
 }
 
+/** The SESSION's Hadoop configuration, captured on the DRIVER and shipped
+  * as a plain map: executors must open shard files with the job's conf
+  * (credentials, fs.defaultFS, filesystem impls), not a default-constructed
+  * one — the same reason Spark's own file sources and sinks broadcast a
+  * SerializableConfiguration. Both halves of the connector ship it in
+  * their executor-side factory. */
+private[sharded] object SessionHadoopConf {
+  def capture(): Map[String, String] = {
+    val c  = SparkSession.active.sessionState.newHadoopConf()
+    val it = c.iterator()
+    val b  = Map.newBuilder[String, String]
+    while (it.hasNext) { val e = it.next(); b += (e.getKey -> e.getValue) }
+    b.result()
+  }
+
+  /** Default-loaded base so an empty map (direct construction in tests)
+    * still resolves file:// — the captured map then overrides on top. */
+  def toConf(confMap: Map[String, String]): org.apache.hadoop.conf.Configuration = {
+    val c = new org.apache.hadoop.conf.Configuration()
+    confMap.foreach { case (k, v) => c.set(k, v) }
+    c
+  }
+}
+
 /** Directory-backed shard access. Planning needs per-file RECORD counts
   * (offsets are record sequence numbers, the Kinesis contract), and a
   * plain file has no record count in its metadata — so the backend counts
@@ -228,8 +252,11 @@ class ShardedTable(path: String)
 class ShardedScan(path: String, options: CaseInsensitiveStringMap) extends Scan {
   override def readSchema(): StructType = ShardedStream.schema
 
+  // Captured at scan build (driver-side); the reader factory ships it.
+  private val confMap: Map[String, String] = SessionHadoopConf.capture()
+
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new ShardedMicroBatchStream(path, options)
+    new ShardedMicroBatchStream(path, options, confMap)
 
   /** Batch form: the full current range — lets the same layout be
     * backfilled with ordinary batch queries. */
@@ -240,7 +267,7 @@ class ShardedScan(path: String, options: CaseInsensitiveStringMap) extends Scan 
         ShardRangePartition(shard, 0L, fs.map(_._2).sum, fs): InputPartition
       }
     }
-    override def createReaderFactory(): PartitionReaderFactory = new ShardReaderFactory
+    override def createReaderFactory(): PartitionReaderFactory = ShardReaderFactory(confMap)
   }
 }
 
@@ -268,7 +295,8 @@ object ShardedOffset {
   }
 }
 
-class ShardedMicroBatchStream(path: String, options: CaseInsensitiveStringMap)
+class ShardedMicroBatchStream(path: String, options: CaseInsensitiveStringMap,
+    confMap: Map[String, String])
     extends MicroBatchStream
     with SupportsAdmissionControl
     with SupportsTriggerAvailableNow {
@@ -365,7 +393,7 @@ class ShardedMicroBatchStream(path: String, options: CaseInsensitiveStringMap)
     }
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = new ShardReaderFactory
+  override def createReaderFactory(): PartitionReaderFactory = ShardReaderFactory(confMap)
 
   override def commit(end: Offset): Unit = () // nothing to acknowledge (files are durable)
 
@@ -382,21 +410,19 @@ case class ShardRangePartition(
     files: Seq[(String, Long)])
     extends InputPartition
 
-class ShardReaderFactory extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[ShardRangePartition]
-    new ShardRangeReader(p)
-  }
+/** Serializable, shipped to executors once per stage (not per partition)
+  * with the session's Hadoop conf the readers open files with. */
+case class ShardReaderFactory(confMap: Map[String, String]) extends PartitionReaderFactory {
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    new ShardRangeReader(partition.asInstanceOf[ShardRangePartition], SessionHadoopConf.toConf(confMap))
 }
 
 /** Streams one shard's range: walks the pinned file list in order, skips
   * whole files below `fromSeq` by their record counts (never reads skipped
   * bytes), emits (shard, seq, payload) until `untilSeq`. Executor-side,
   * lazy, one open file at a time. */
-class ShardRangeReader(p: ShardRangePartition) extends PartitionReader[InternalRow] {
-  private val conf =
-    new org.apache.hadoop.conf.Configuration() // executor-side: default FS config reads local/HDFS URIs in the path
-
+class ShardRangeReader(p: ShardRangePartition, conf: org.apache.hadoop.conf.Configuration)
+    extends PartitionReader[InternalRow] {
   private var fileIdx                        = 0
   private var seq                            = 0L
   private var reader: java.io.BufferedReader = null

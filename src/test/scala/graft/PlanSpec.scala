@@ -75,6 +75,54 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
+  test("ArcPipeline decodes each record once: one graft_gunzip and one from_json per plan") {
+    import org.apache.spark.sql.functions.{col, encode}
+    import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
+    import graft.operators.ArcPipeline
+    import spark.implicits._
+    // every predicate the filter has, so every conjunct could re-decode
+    val cfg = ArcPipeline.FilterConfig(website = Some("site-a"), sectionAllowlist = Seq("news"))
+    def count(plan: String, s: String): Int = s.r.findAllIn(plan).length
+    def once(what: String, plan: String): Unit = {
+      assert(count(plan, "graft_gunzip") === 1, s"$what: payload gunzipped more than once:\n${plan.take(3000)}")
+      assert(count(plan, "from_json") === 1, s"$what: envelope parsed more than once:\n${plan.take(3000)}")
+    }
+    // records carry binary payloads straight into the gunzip: the only
+    // base64 left is the dead-letter payload, above the decode (plans
+    // print top-down, so everything the gunzip consumes follows it)
+    def direct(what: String, plan: String): Unit =
+      assert(!plan.substring(plan.indexOf("graft_gunzip")).contains("base64"),
+        s"$what: base64 round trip ahead of the gunzip:\n${plan.take(3000)}")
+    def plans(out: org.apache.spark.sql.DataFrame, dlq: org.apache.spark.sql.DataFrame) =
+      Seq("survivors" -> out.queryExecution.optimizedPlan.toString,
+        "dead letters" -> dlq.queryExecution.optimizedPlan.toString)
+
+    val events = spark.read.parquet(s"$sf/events.parquet")
+    val (out, dlq) = ArcPipeline.run(events.select(col("props").as("payload")), col("payload"), cfg)
+    plans(out, dlq).foreach { case (w, p) => once(s"run $w", p) }
+    val (rOut, rDlq) = ArcPipeline.runRecords(events.select(encode(col("props"), "UTF-8").as("payload")), cfg)
+    val rPlans = plans(rOut, rDlq)
+    rPlans.foreach { case (w, p) => once(s"runRecords $w", p); direct(s"runRecords $w", p) }
+    assert(!rPlans.head._2.contains("base64"), "survivors pay a base64 encode")
+
+    implicit val sqlCtx = spark.sqlContext
+    def streamed(name: String, df: org.apache.spark.sql.DataFrame, add: () => Unit): String = {
+      val q = df.writeStream.format("memory").queryName(name).outputMode("append").start()
+      try {
+        add(); q.processAllAvailable()
+        q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.optimizedPlan.toString
+      } finally q.stop()
+    }
+    val texts = MemoryStream[String]
+    val (sOut, _) = ArcPipeline.run(texts.toDF().withColumnRenamed("value", "payload"), col("payload"), cfg)
+    once("streaming run", streamed("t_arc_once_run", sOut, () => texts.addData("x")))
+    val bins = MemoryStream[Array[Byte]]
+    val (sr, _) = ArcPipeline.runRecords(bins.toDF().withColumnRenamed("value", "payload"), cfg)
+    val srPlan = streamed("t_arc_once_records", sr, () => bins.addData("x".getBytes("UTF-8")))
+    once("streaming runRecords", srPlan)
+    direct("streaming runRecords", srPlan)
+  }
+
   test("d2: no dedup query plans an all-pairs join (BNLJ/cartesian)") {
     Seq("d2_ngram_jaccard", "d2_neardup_minhash", "d2_simhash",
         "d9_semantic_clusters_lsh", "d8_payload_dedup").foreach { name =>

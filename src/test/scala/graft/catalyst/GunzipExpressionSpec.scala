@@ -6,7 +6,7 @@ import org.apache.spark.sql.types.BinaryType
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.functions.{Decode, GzipCodec}
+import graft.functions.{Decode, DecodeUdf, GzipCodec}
 
 class GunzipExpressionSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -35,7 +35,7 @@ class GunzipExpressionSpec extends AnyFunSuite {
       .withColumn("nul", lit(null).cast("binary"))
     val out = df.select(
       decode(call_function("graft_gunzip", col("gz")), "UTF-8").as("native"),
-      decode(Decode.gunzip(col("gz")), "UTF-8").as("viaUdf"),
+      decode(DecodeUdf.gunzip(col("gz")), "UTF-8").as("viaUdf"),
       call_function("graft_gunzip", col("corrupt")).as("corrupt_out"),
       call_function("graft_gunzip", col("nul")).as("null_out"),
       col("s")

@@ -98,7 +98,12 @@ class ArcPipelineSpec extends AnyFunSuite {
     ).toDF("payload", "partition_key", "sequence_number")
     val (out, dlq) = ArcPipeline.runRecords(recs, cfg)
     assert(out.select("event_id").as[String].collect().sorted === Array("21"))
-    assert(dlq.count() === 1)
+    // dead letters keep run()'s schema: payload is the base64 text of the
+    // original bytes, error the decode failure
+    val dead = dlq.collect()
+    assert(dlq.columns.toSeq === Seq("payload", "error"))
+    assert(dead.map(r => (r.getString(0), r.getString(1))).toSeq ===
+      Seq((Base64.getEncoder.encodeToString("junk".getBytes("UTF-8")), "UNDECODABLE")))
   }
 
   test("observe(): decode metrics count totals and corruptions exactly once") {
@@ -131,6 +136,29 @@ class ArcPipelineSpec extends AnyFunSuite {
     val (out, dlq) = ArcPipeline.run(all, col("payload"), cfg)
     assert(out.count() + dlq.count() <= 80L)
     assert(dlq.count() === corrupt)
+
+    // runRecords leg: the same records as the raw bytes a transport
+    // delivers (text that is not base64 arrives as its own bytes). Decoded
+    // without the base64 hop they classify as run() classifies their
+    // base64 text, and the observation counts each record once.
+    val bytes = (good ++ corrupted).map(p =>
+      scala.util.Try(Base64.getDecoder.decode(p)).getOrElse(p.getBytes("UTF-8")))
+    val inputs = bytes.map(Base64.getEncoder.encodeToString)
+    val binCorrupt = ArcPipeline.decodeEnvelope(inputs.toDF("payload"), col("payload"))
+      .filter(col("event._corrupt").isNotNull).count()
+    assert(binCorrupt >= 40L, "every corrupted record must stay corrupt as bytes")
+    val obs = new org.apache.spark.sql.Observation(s"arc_fuzz_${System.nanoTime()}")
+    val (rOut, rDlq) = ArcPipeline.runRecords(bytes.toDF("payload"), cfg, observation = Some(obs))
+    val kept = rOut.count()
+    assert(obs.get("total_records") === 80L)
+    assert(obs.get("corrupt_records") === binCorrupt)
+    val dead = rDlq.select("payload").as[String].collect()
+    assert(dead.length.toLong === binCorrupt)
+    assert(kept + dead.length <= 80L)
+    // Spark's base64() wraps long output MIME-style, so compare decoded bytes
+    val inputBytes = bytes.map(_.toSeq).toSet
+    assert(dead.forall(d => inputBytes.contains(Base64.getMimeDecoder.decode(d).toSeq)),
+      "dead-letter payload is not the base64 of an input record")
   }
 
   test("partitioned sink + dead-letter routing writes both sides") {

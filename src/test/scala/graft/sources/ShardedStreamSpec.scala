@@ -169,4 +169,37 @@ class ShardedStreamSpec extends AnyFunSuite {
     val ks = spark.table("sharded_decoded").select("k").as[Long].collect().sorted
     assert(ks.toSeq === Seq(50L, 99L)) // 5 filtered, not-json tolerated as null
   }
+
+  test("readers open shard files with the session's Hadoop conf, batch and streaming") {
+    // A scheme only the session's Hadoop conf knows; with the FileSystem
+    // cache off, every open resolves the scheme from the conf it is given,
+    // so a reader that builds a default Configuration cannot open a file.
+    val root = Files.createTempDirectory("sharded_session_conf")
+    writeShards(root, Map(0 -> Seq(Seq("a0", "a1")), 1 -> Seq(Seq("b0"))))
+    val hc = spark.sparkContext.hadoopConfiguration
+    hc.set("fs.graftsession.impl", classOf[SessionSchemeFs].getName)
+    hc.setBoolean("fs.graftsession.impl.disable.cache", true)
+    try {
+      val path = s"graftsession://${root.toAbsolutePath}"
+      val batch = spark.read.format(fmt).option("path", path).load()
+        .select("payload").as[String].collect().sorted
+      assert(batch.toSeq === Seq("a0", "a1", "b0"))
+      val q = spark.readStream.format(fmt).option("path", path).load()
+        .writeStream.format("memory").queryName("sharded_session_conf")
+        .trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination()
+      assert(spark.table("sharded_session_conf").select("payload").as[String].collect().sorted.toSeq ===
+        Seq("a0", "a1", "b0"))
+    } finally {
+      hc.unset("fs.graftsession.impl")
+      hc.unset("fs.graftsession.impl.disable.cache")
+    }
+  }
+}
+
+/** The local filesystem under its own `graftsession` scheme, which no
+  * default Hadoop configuration registers. */
+class SessionSchemeFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("graftsession:///")
+  override def getScheme: String = "graftsession"
 }
