@@ -60,69 +60,6 @@ object Cdc {
     untouched.unionByName(applied)
   }
 
-  /** STREAMING maintenance: each micro-batch of the changelog MERGEs
-    * into a versioned snapshot store — `storePath/v=<batchId>` holds the
-    * snapshot AFTER batch `batchId`, computed by upserting the batch
-    * into the latest version below it (or `seed` for the first). The
-    * write is overwrite-by-version-directory, so a replayed micro-batch
-    * (crash between commit points) re-reads the same parent version and
-    * rewrites the same directory instead of double-applying —
-    * exactly-once snapshot maintenance on top of the checkpoint's
-    * at-least-once replay, the same contract as [[Ivm.maintainView]]'s
-    * delta log. Unlike the Z-set path, the store holds full snapshots
-    * (MERGE is not associative over retract-free rows), so serving is a
-    * plain read of the newest version — [[readSnapshot]] — and version
-    * retention is a cadence decision exactly like lakehouse VACUUM.
-    * Per-batch work is |delta| × one window + |snapshot| × one
-    * anti-join, and the batch REWRITES the full snapshot — coarse
-    * copy-on-write. Honest scale note: at TB snapshots a real lakehouse
-    * narrows the rewrite to touched partitions/files (MERGE file
-    * skipping) or defers it entirely (delta log + merge-on-read — the
-    * [[Ivm]] path, which this store deliberately does not replicate
-    * because MERGE rows are not retract-complete Z-sets). The right
-    * cadence at scale is therefore micro-batches sized so |delta| ≫
-    * batch overhead, with this operator per PARTITION of a
-    * date/key-partitioned snapshot rather than the monolith. */
-  def maintainSnapshot(
-      changes: DataFrame,
-      seed: DataFrame,
-      keys: Seq[String],
-      orderCols: Seq[Column],
-      opCol: Column,
-      storePath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    changes.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        processSnapshotBatch(batch, seed, keys, orderCols, opCol, storePath, id)
-      }
-
-  /** One micro-batch of [[maintainSnapshot]], exposed for replay tests. */
-  def processSnapshotBatch(
-      batch: DataFrame,
-      seed: DataFrame,
-      keys: Seq[String],
-      orderCols: Seq[Column],
-      opCol: Column,
-      storePath: String,
-      id: Long): Unit = {
-    val spark = batch.sparkSession
-    val prior = committedVersions(spark, storePath).filter(_ < id).sorted.lastOption match {
-      case Some(v) => spark.read.parquet(s"$storePath/v=$v")
-      case None    => seed
-    }
-    upsert(prior, batch, keys, orderCols, opCol)
-      .write.mode("overwrite").parquet(s"$storePath/v=$id")
-  }
-
-  /** The maintained snapshot as of now: the newest committed version.
-    * Throws if the stream has not committed anything yet. */
-  def readSnapshot(spark: org.apache.spark.sql.SparkSession, storePath: String): DataFrame = {
-    val vs = committedVersions(spark, storePath)
-    if (vs.isEmpty) throw new IllegalStateException(s"no committed snapshot under $storePath")
-    spark.read.parquet(s"$storePath/v=${vs.max}")
-  }
-
   /** Committed version directories under `storePath` — enumerated via the
     * Hadoop FileSystem API (like CorpusPrep's delta listing), so the store
     * works on whatever filesystem the path names (local, hdfs://, s3a://);
@@ -144,10 +81,9 @@ object Cdc {
 
   // --- partition-scoped snapshot store ---------------------------------
   //
-  // [[maintainSnapshot]] rewrites the FULL snapshot every micro-batch —
-  // fine for demo-sized state, hopeless at a TB snapshot with a GB/day
-  // changelog. This store is the real lakehouse MERGE shape: the snapshot
-  // is hash-bucketed on the merge key, each micro-batch rewrites ONLY the
+  // Rewriting the FULL snapshot every micro-batch is fine for demo-sized
+  // state, hopeless at a TB snapshot with a GB/day changelog. This store
+  // is the real lakehouse MERGE shape: the snapshot is hash-bucketed on the merge key, each micro-batch rewrites ONLY the
   // buckets its delta touches, and a tiny per-version MANIFEST maps every
   // bucket to the batch that last wrote it — untouched buckets are carried
   // into the new version BY REFERENCE (a manifest row), their files never
@@ -167,8 +103,7 @@ object Cdc {
   // the checkpoint's replay of the same batch (the parts write is dynamic
   // partition overwrite keyed on (bucket, writer), and a replayed batch
   // recomputes the identical partitions from the identical parent
-  // manifest). Exactly-once on top of at-least-once replay, same contract
-  // as [[maintainSnapshot]] but per-bucket.
+  // manifest). Exactly-once on top of at-least-once replay, per bucket.
 
   private def partsPath(storePath: String)    = s"$storePath/parts"
   private def manifestPath(storePath: String) = s"$storePath/manifest"
@@ -554,9 +489,8 @@ object Cdc {
   def bucketExpr(keys: Seq[String], nBuckets: Int): Column =
     pmod(xxhash64(keys.map(col): _*), lit(nBuckets.toLong)).cast("int")
 
-  /** STREAMING partition-scoped maintenance: [[maintainSnapshot]]'s
-    * contract (exactly-once versioned snapshots, last-writer-wins MERGE)
-    * with per-batch work proportional to the TOUCHED buckets, not the
+  /** STREAMING partition-scoped maintenance: exactly-once versioned
+    * snapshots, last-writer-wins MERGE, with per-batch work proportional to the TOUCHED buckets, not the
     * snapshot. `nBuckets` sizes the rewrite granularity: a batch touching
     * k of n buckets rewrites k/n of the snapshot. Pick n so a bucket is a
     * few hundred MB at the target scale (file-sized), and note the
@@ -1314,8 +1248,9 @@ object Cdc {
     * reference, and carried files keep their NARROW physical type —
     * every read path requests the recorded (widened) schema and Spark's
     * parquet readers up-cast INT32→LONG / FLOAT→DOUBLE natively (both
-    * the vectorized and row-converter paths; the engine's own Group
-    * reader and footer-stats fold up-cast explicitly), so both eras
+    * the vectorized and row-converter paths — the CDC scans decode
+    * through the vectorized one; the footer-stats fold up-casts
+    * explicitly), so both eras
     * serve through one widened schema with zero rewrite. Exact: both
     * promotions are value-preserving embeddings.
     *
@@ -1343,8 +1278,7 @@ object Cdc {
       // first. Same scale is REQUIRED — a scale change rescales every
       // stored unscaled value, i.e. a rewrite, not metadata; precision
       // growth is free (carried files keep their narrow physical class,
-      // both the native parquet readers and the store's own row reader
-      // up-cast on read).
+      // Spark's parquet readers up-cast on read).
       case (from: DecimalType, t: DecimalType) =>
         t.precision > from.precision && t.scale == from.scale
       case _                        => false
@@ -3170,22 +3104,15 @@ object Cdc {
     Set(LongType, IntegerType, DoubleType, FloatType, DateType, BooleanType)
   }
 
-  /** Session toggle (default on) for ANALYZE-on-write: per-bucket column
-    * statistics cost ONE aggregate read-back over the buckets just
-    * written — IO of the same order as the write itself, distributed,
-    * touched-buckets-bounded. Turn off for latency-critical fine-grained
-    * streaming epochs; the CBO then falls back to row counts alone. */
-  private def collectStatsEnabled: Boolean =
-    scala.util.Try(org.apache.spark.sql.SparkSession.active.conf
-      .get("graft.cdc.collectStats")).toOption.forall(_.toBoolean)
-
-  /** Whether this commit should ANALYZE-on-write: the session toggle AND
-    * at least one column of a tracked type (the ONE definition every
-    * commit path shares — CoW, merge-on-read auto-compaction, and
-    * compactStore must record stats under identical rules or CBO
-    * estimates become path-dependent). */
+  /** Whether this commit should ANALYZE-on-write: at least one column of
+    * a tracked type (the ONE definition every commit path shares — CoW,
+    * merge-on-read auto-compaction, and compactStore must record stats
+    * under identical rules or CBO estimates become path-dependent).
+    * Per-bucket column statistics cost ONE aggregate read-back over the
+    * buckets just written — IO of the same order as the write itself,
+    * distributed, touched-buckets-bounded. */
   private def statsCollectionOn(schema: org.apache.spark.sql.types.StructType): Boolean =
-    collectStatsEnabled && schema.fields.exists(f =>
+    schema.fields.exists(f =>
       CboMinMaxTypes.contains(f.dataType) ||
         f.dataType == org.apache.spark.sql.types.StringType)
 

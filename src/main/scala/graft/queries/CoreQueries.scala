@@ -2058,7 +2058,8 @@ object CoreQueries {
     // lands as per-bucket DELTA files — O(delta) write IO, not one
     // rewritten bucket — and the DSv2 catalog scan FOLDS base + deltas
     // last-writer-wins at read time (sources/cdc/CdcScan
-    // CdcMorPartitionReader). Must hash-match the exact same oracle as
+    // CdcMorPartitionReader, over CdcColumnarReader's vectorized
+    // batches). Must hash-match the exact same oracle as
     // the copy-on-write twin: one MERGE semantics, two write-amplification
     // strategies. Serving query — the store is a session artifact; the
     // fold itself is what's measured.

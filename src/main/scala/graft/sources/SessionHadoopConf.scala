@@ -1,0 +1,28 @@
+package graft.sources
+
+import org.apache.spark.sql.SparkSession
+
+/** The SESSION's Hadoop configuration, captured on the DRIVER and shipped
+  * as a plain map: executors must open files with the job's conf
+  * (credentials, fs.defaultFS, filesystem impls), not a default-constructed
+  * one — the same reason Spark's own file sources and sinks broadcast a
+  * SerializableConfiguration. Each connector captures it once per scan or
+  * write and ships it in its executor-side factory: both halves of the
+  * sharded connector, and the CDC store, feed and footer-statistics scans. */
+private[sources] object SessionHadoopConf {
+  def capture(): Map[String, String] = {
+    val c  = SparkSession.active.sessionState.newHadoopConf()
+    val it = c.iterator()
+    val b  = Map.newBuilder[String, String]
+    while (it.hasNext) { val e = it.next(); b += (e.getKey -> e.getValue) }
+    b.result()
+  }
+
+  /** Default-loaded base so an empty map (direct construction in tests)
+    * still resolves file:// — the captured map then overrides on top. */
+  def toConf(confMap: Map[String, String]): org.apache.hadoop.conf.Configuration = {
+    val c = new org.apache.hadoop.conf.Configuration()
+    confMap.foreach { case (k, v) => c.set(k, v) }
+    c
+  }
+}

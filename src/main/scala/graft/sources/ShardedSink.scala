@@ -18,6 +18,8 @@ import org.apache.spark.sql.connector.write.streaming.{
 }
 import org.apache.spark.sql.types.StructType
 
+import graft.sources.SessionHadoopConf
+
 /** WRITE side of the sharded connector (A9 on the DSv2 API) — the same
   * `path/shard=N/<file>` layout [[ShardedStreamProvider]] reads, so the
   * connector round-trips: `df.write.format(provider).mode("append")` then

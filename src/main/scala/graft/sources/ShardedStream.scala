@@ -29,6 +29,8 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.sources.SessionHadoopConf
+
 /** A DataSource V2 connector for a SHARDED EVENT STREAM — the engine's A1
   * seam (SURVEY §2.A) implemented on Spark's public connector API rather
   * than the built-in file source, so the semantics match a shard-oriented
@@ -103,30 +105,6 @@ object ShardedStream {
       try out.write(parents.sorted.mkString(",").getBytes("UTF-8"))
       finally out.close()
     }
-  }
-}
-
-/** The SESSION's Hadoop configuration, captured on the DRIVER and shipped
-  * as a plain map: executors must open shard files with the job's conf
-  * (credentials, fs.defaultFS, filesystem impls), not a default-constructed
-  * one — the same reason Spark's own file sources and sinks broadcast a
-  * SerializableConfiguration. Both halves of the connector ship it in
-  * their executor-side factory. */
-private[sharded] object SessionHadoopConf {
-  def capture(): Map[String, String] = {
-    val c  = SparkSession.active.sessionState.newHadoopConf()
-    val it = c.iterator()
-    val b  = Map.newBuilder[String, String]
-    while (it.hasNext) { val e = it.next(); b += (e.getKey -> e.getValue) }
-    b.result()
-  }
-
-  /** Default-loaded base so an empty map (direct construction in tests)
-    * still resolves file:// — the captured map then overrides on top. */
-  def toConf(confMap: Map[String, String]): org.apache.hadoop.conf.Configuration = {
-    val c = new org.apache.hadoop.conf.Configuration()
-    confMap.foreach { case (k, v) => c.set(k, v) }
-    c
   }
 }
 

@@ -272,8 +272,8 @@ object CdcCatalog {
 
   /** Payload-type admission: the fixed primitive set plus any DECIMAL
     * (parameterized, so it can't live in the Set). Decimal columns serve
-    * through every read path — the custom readers decode all three
-    * parquet physical classes (INT32/INT64/FLBA) — but are excluded from
+    * through every read path — Spark's vectorized reader decodes all
+    * three parquet physical classes (INT32/INT64/FLBA) — but are excluded from
     * min/max stats machinery by the same Set-membership gates
     * (absence = unknown, never wrong). */
   private[cdc] def supportedType(dt: DataType): Boolean =

@@ -16,21 +16,24 @@ import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.ColumnarBatch
 
-/** VECTORIZED read path for CDC store and feed partitions: decodes each
-  * parquet file through Spark's own `VectorizedParquetRecordReader` into
+/** The ONE parquet decoder for CDC store and feed files: decodes each
+  * file through Spark's own `VectorizedParquetRecordReader` into
   * `ColumnarBatch`es — column-at-a-time, no per-value boxing, the same
-  * engine Spark's built-in parquet scans run on. At serve scale this is
-  * the dominant constant factor on every catalog query (typically 3-5×
-  * over row-at-a-time Group decoding).
+  * engine Spark's built-in parquet scans run on. Clean store, feed and
+  * bootstrap partitions serve its batches directly; the merge-on-read
+  * fold ([[CdcMorPartitionReader]]) walks the same batches as rows, and
+  * the footer-statistics scan decodes uncooperative files through it.
   *
-  * Contract parity with the row path ([[CdcPartitionReader]], kept as
-  * the `PartitionReader[InternalRow]` fallback):
+  * Contract:
   *  - COLUMN PRUNING: only `requiredSchema`'s data columns are requested
   *    from the file (`SPARK_ROW_REQUESTED_SCHEMA` — Spark's read support
   *    clips it per file against the file's own schema).
   *  - ADDITIVE EVOLUTION: columns a file predates decode as all-NULL
   *    vectors (the vectorized reader's native missing-column handling —
   *    exactly Spark's own mergeSchema behavior).
+  *  - TYPE WIDENING ([[graft.operators.Cdc.widenColumn]]): a
+  *    pre-widening file's INT32 / FLOAT / narrower DECIMAL decodes into
+  *    the recorded wider type through Spark's own vectorized updaters.
   *  - CONSTANT COLUMNS (the feed's `_commit_timestamp`): served through
   *    `initBatch`'s partition-value mechanism — a constant vector, never
   *    materialized in the files.
@@ -38,14 +41,18 @@ import org.apache.spark.sql.vectorized.ColumnarBatch
   *    record assembly in the vectorized path this is row-group/page
   *    (column-index) pruning ONLY — provably-non-matching ranges are
   *    skipped, everything else surfaces and Spark's residual predicates
-  *    re-check it, so here the panel really is IO advice. Key columns
-  *    exist in every store file (merge keys are payload from the seed
-  *    on — evolution is additive), so the filter never references an
-  *    absent column.
+  *    re-check it, so the panel really is IO advice. Key columns exist
+  *    in every store file (merge keys are payload from the seed on —
+  *    evolution is additive), so the filter never references an absent
+  *    column.
+  *  - HADOOP CONF: files open with the session's Hadoop conf, captured
+  *    on the driver ([[graft.sources.SessionHadoopConf]]) and shipped as
+  *    `confMap`.
   */
 class CdcColumnarReader(
     files: Array[String],
     requiredSchema: StructType,
+    confMap: Map[String, String],
     keyFilters: Array[(String, Array[Any])] = Array.empty,
     constants: Map[String, Any] = Map.empty,
     sourceFilters: Array[org.apache.spark.sql.sources.Filter] = Array.empty)
@@ -65,8 +72,7 @@ class CdcColumnarReader(
   }
   private val identityOrder = outPos.zipWithIndex.forall { case (p, i) => p == i }
 
-  /** Same panel → parquet-filter translation as the row path, minus the
-    * per-file schema clip (key columns exist in every store file). */
+  /** Key panels as a parquet filter: AND of per-key OR-of-eq. */
   private val filterPredicate: Option[org.apache.parquet.filter2.predicate.FilterPredicate] = {
     import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
     val conjuncts: Seq[FilterPredicate] = keyFilters.toSeq.flatMap { case (name, values) =>
@@ -89,16 +95,16 @@ class CdcColumnarReader(
     conjuncts.reduceOption(FilterApi.and(_, _))
   }
 
-  // executor-side; files carry their scheme. The confs are what Spark's
-  // own parquet scan ships to its readers: the requested catalyst schema
-  // plus the converter flags ParquetReadSupport/ParquetToSparkSchema-
+  // executor-side, over the session's Hadoop conf. The confs are what
+  // Spark's own parquet scan ships to its readers: the requested catalyst
+  // schema plus the converter flags ParquetReadSupport/ParquetToSparkSchema-
   // Converter read (they are REQUIRED conf — the no-arg ReadSupport path
   // has no SQLConf to fall back on). ONE Configuration per partition
   // (construction copies the default resources — per-file would tax
   // every small file), shared across this partition's files: schema and
   // filter are partition-constant.
   private lazy val conf: Configuration = {
-    val c = new Configuration()
+    val c = graft.sources.SessionHadoopConf.toConf(confMap)
     c.set(ParquetInputFormat.READ_SUPPORT_CLASS, classOf[ParquetReadSupport].getName)
     c.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, dataSchema.json)
     c.setBoolean(SQLConf.CASE_SENSITIVE.key, false)
@@ -137,6 +143,9 @@ class CdcColumnarReader(
   private var opened = 0
   private var reader: VectorizedParquetRecordReader = _
   private var batch: ColumnarBatch = _ // the reader's reused batch, remapped
+
+  /** Files opened so far (every file counts, row groups pruned or not). */
+  def filesOpened: Int = opened
 
   override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
     Array(CdcMetrics.Value("filesOpened", opened.toLong))

@@ -236,6 +236,9 @@ class CdcFeedScan(
     maxBucketsPerTrigger: Option[Int] = None)
     extends Scan with Batch with SupportsReportStatistics {
 
+  // the session's Hadoop conf, captured once for this scan's readers
+  private lazy val confMap: Map[String, String] = graft.sources.SessionHadoopConf.capture()
+
   /** Units OVERLAPPING the pushed version range: a compacted segment is
     * included whole when any of its versions is wanted — the residual
     * `_commit_version` predicates (every pushed filter is returned
@@ -280,9 +283,9 @@ class CdcFeedScan(
       .toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new CdcReaderFactory(requiredSchema)
+    new CdcReaderFactory(requiredSchema, confMap)
 
-  // the shared readers (CdcPartitionReader/CdcColumnarReader) report
+  // the shared reader (CdcColumnarReader) reports
   // per-task scan metrics; Spark's CustomMetrics.updateMetrics silently
   // DROPS any name the scan does not declare, so without this override
   // feed/bootstrap reads would lose the observability the store scan has
@@ -394,6 +397,9 @@ class CdcFeedStream(
     extends MicroBatchStream
     with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl
     with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
+
+  // the session's Hadoop conf, captured once for this stream's readers
+  private lazy val confMap: Map[String, String] = graft.sources.SessionHadoopConf.capture()
 
   // Trigger.AvailableNow contract, implemented NATIVELY: Spark's generic
   // wrapper for sources without this trait hides the delegate's
@@ -582,7 +588,7 @@ class CdcFeedStream(
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new CdcReaderFactory(requiredSchema)
+    new CdcReaderFactory(requiredSchema, confMap)
 
   override def deserializeOffset(json: String): Offset = CdcFeedOffset.fromJson(json)
   override def commit(end: Offset): Unit = ()

@@ -2,13 +2,7 @@ package graft.sources.cdc
 
 import java.util.OptionalLong
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
-import org.apache.parquet.hadoop.api.ReadSupport
-import org.apache.parquet.hadoop.example.GroupReadSupport
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
@@ -19,6 +13,8 @@ import org.apache.spark.sql.sources.{EqualNullSafe, EqualTo, Filter, In}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.ColumnarBatch
 import org.apache.spark.unsafe.types.UTF8String
+
+import graft.sources.SessionHadoopConf
 
 /** Column-pruning, bucket-pruning scan over a CDC store's directories.
   *
@@ -33,8 +29,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * join always expose identical partition-key sets.
   *
   * Pushdown, both kinds:
-  *  - COLUMNS ride `parquet.read.schema` — only requested columns are
-  *    materialized. The projection is clipped per file against the
+  *  - COLUMNS ride the reader's requested schema — only requested
+  *    columns are decoded. The projection is clipped per file against the
   *    file's own schema, so buckets carried by reference across an
   *    ADDITIVE schema evolution serve typed NULLs for columns their
   *    files predate (the same contract as
@@ -424,7 +420,7 @@ class CdcScan(
       * their file lists are the PARENT's files, and the reader must
       * slice rows to the partition's own bucket id with the layout
       * hash — one more reason (besides deltas) a partition takes the
-      * row-path reader. */
+      * row-path fold reader. */
     slicedBuckets: Set[Int] = Set.empty)
     extends Scan with Batch
     with SupportsReportPartitioning with SupportsReportStatistics
@@ -437,6 +433,9 @@ class CdcScan(
 
   override def outputPartitioning(): Partitioning =
     new KeyGroupedPartitioning(Array(Expressions.bucket(nBuckets, keys: _*)), buckets.length)
+
+  // the session's Hadoop conf, captured once for this scan's readers
+  private lazy val confMap: Map[String, String] = SessionHadoopConf.capture()
 
   // RUNTIME bucket pruning (the V2 DPP contract): when this scan joins a
   // filterable side on merge keys, Spark executes that side first,
@@ -539,8 +538,8 @@ class CdcScan(
     buckets
       .filter(b => runtimeBuckets.forall(_.contains(b)))
       .map { b =>
-        val deltas = deltaFilesByBucket.getOrElse(b, Array.empty)
-          .map(_.map(_._1))
+        // every delta level's files, oldest level first
+        val deltas = deltaFilesByBucket.getOrElse(b, Array.empty).flatMap(_.map(_._1))
         val sliced = slicedBuckets.contains(b)
         val rowPath = deltas.nonEmpty || sliced
         CdcBucketPartition(b, filesByBucket.getOrElse(b, Array.empty).map(_._1), panels,
@@ -549,10 +548,9 @@ class CdcScan(
           // row while keeping its base row — resurrecting the stale
           // version — so pushed data filters stay OFF the fold path
           // (key-equality panels remain safe: they drop a key's rows on
-          // every level together). Sliced partitions drop them too (the
-          // row-path reader record-filters; residuals re-check above).
+          // every level together). Sliced partitions drop them too.
           if (rowPath) Array.empty[Filter] else physFilters,
-          deltaLevels = deltas,
+          deltaFiles = deltas,
           morKeys = if (rowPath) physKeys else Array.empty,
           morKeyTypes = if (rowPath) keyTypes.toArray else Array.empty,
           sliceN = if (sliced) nBuckets else 0)
@@ -572,8 +570,9 @@ class CdcScan(
       CdcMetrics.Value("plannedBuckets", planned.length.toLong),
       CdcMetrics.Value("staticPrunedBuckets", (nBuckets - buckets.length).toLong),
       CdcMetrics.Value("runtimePrunedBuckets", (buckets.length - planned.length).toLong),
-      CdcMetrics.Value("plannedFiles",
-        planned.iterator.map(b => filesByBucket.getOrElse(b, Array.empty).length.toLong).sum))
+      CdcMetrics.Value("plannedFiles", planned.iterator.map(b =>
+        filesByBucket.getOrElse(b, Array.empty).length.toLong +
+          deltaFilesByBucket.getOrElse(b, Array.empty).iterator.map(_.length.toLong).sum).sum))
   }
 
   /** Real sizes for the planner: the PRUNED byte count, so a
@@ -700,13 +699,11 @@ class CdcScan(
     // plan's and the physical names stay the files'
     val fileSchema = StructType(requiredSchema.fields.map(f =>
       f.copy(name = physMap.getOrElse(f.name, f.name))))
-    // Spark refuses MIXED row/columnar partitions in one scan, so any
-    // pending delta level (fold) or lazily-split child (slice) anywhere
-    // drops the WHOLE scan to the row path; compaction restores the
-    // vectorized serve shape
-    new CdcReaderFactory(fileSchema,
-      columnar = CdcReaderFactory.columnarEnabled && deltaFilesByBucket.isEmpty &&
-        slicedBuckets.isEmpty)
+    // any pending delta level (fold) or lazily-split child (slice)
+    // anywhere takes the WHOLE scan to the row path; compaction restores
+    // the vectorized serve shape
+    new CdcReaderFactory(fileSchema, confMap,
+      columnar = deltaFilesByBucket.isEmpty && slicedBuckets.isEmpty)
   }
 }
 
@@ -715,11 +712,11 @@ case class CdcBucketPartition(
     files: Array[String],
     keyFilters: Array[(String, Array[Any])] = Array.empty,
     sourceFilters: Array[Filter] = Array.empty,
-    /** Merge-on-read delta FILE LISTS in manifest (commit) order — when
-      * non-empty the reader folds base + deltas last-writer-wins. */
-    deltaLevels: Array[Array[String]] = Array.empty,
+    /** Merge-on-read delta files, levels in manifest (commit) order —
+      * when non-empty the reader folds base + deltas last-writer-wins. */
+    deltaFiles: Array[String] = Array.empty,
     /** The merge keys' PHYSICAL column names + types (set when
-      * deltaLevels is non-empty or sliceN > 0): the fold's row identity
+      * deltaFiles is non-empty or sliceN > 0): the fold's row identity
       * and the slice's hash input, read from the files even when the
       * query projected the keys out. */
     morKeys: Array[String] = Array.empty,
@@ -732,18 +729,20 @@ case class CdcBucketPartition(
   override def partitionKey(): InternalRow = InternalRow(bucket)
 }
 
-object CdcReaderFactory {
-  /** Session toggle for the vectorized path (A/B escape hatch; default
-    * on). Resolved DRIVER-side when the factory is created, so a plain
-    * `spark.conf.set("graft.cdc.columnar", "false")` steers executors. */
-  private[cdc] def columnarEnabled: Boolean =
-    scala.util.Try(SparkSession.active.conf.get("graft.cdc.columnar"))
-      .toOption.forall(_.toBoolean)
-}
-
+/** Executor-side readers for every CDC partition shape; every one
+  * decodes through [[CdcColumnarReader]]. `columnar` is the scan's SHAPE,
+  * never a setting: Spark refuses mixed row/columnar partitions in one
+  * scan, so a store scan with any pending delta level or lazily-split
+  * bucket reads ROWS through the fold reader (clean buckets included —
+  * they fold over no deltas and no slice); every other scan (clean
+  * store, feed, bootstrap snapshot) serves the batches as they decode,
+  * feeding whole-stage codegen exactly like Spark's built-in parquet
+  * source. `confMap` is the session's Hadoop conf, captured once per
+  * scan on the driver. */
 class CdcReaderFactory(
     requiredSchema: StructType,
-    columnar: Boolean = CdcReaderFactory.columnarEnabled)
+    confMap: Map[String, String],
+    columnar: Boolean = true)
     extends PartitionReaderFactory {
   // a compacted segment's files carry _commit_timestamp as DATA
   // (materialized at compaction); single-version files serve it as the
@@ -765,241 +764,67 @@ class CdcReaderFactory(
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     partition match {
-      case b: CdcBucketPartition if b.deltaLevels.nonEmpty || b.sliceN > 0 =>
-        new CdcMorPartitionReader(b.files, b.deltaLevels, requiredSchema,
-          b.morKeys, b.morKeyTypes, b.keyFilters, bucketConstants(b),
+      case b: CdcBucketPartition =>
+        new CdcMorPartitionReader(b.files, b.deltaFiles, requiredSchema, confMap,
+          b.morKeys, b.morKeyTypes, b.keyFilters, b.sourceFilters, bucketConstants(b),
           slice = if (b.sliceN > 0) Some((b.sliceN, b.bucket)) else None)
-      case b: CdcBucketPartition => new CdcPartitionReader(b.files, requiredSchema, b.keyFilters,
-        constants = bucketConstants(b))
-      case f: CdcFeedPartition   => new CdcPartitionReader(f.files, requiredSchema,
-        constants = feedConstants(f))
-      case s: CdcSnapshotPartition => new CdcPartitionReader(s.files, requiredSchema,
-        constants = snapshotConstants(s))
-      case p => throw new IllegalArgumentException(s"not a CDC partition: $p")
+      case p => throw new IllegalArgumentException(s"not a row-path CDC partition: $p")
     }
 
-  // The serve path is COLUMNAR ([[CdcColumnarReader]]): every supported
-  // payload type decodes through Spark's vectorized parquet reader, so
-  // the scan feeds whole-stage codegen ColumnarBatches exactly like
-  // Spark's built-in parquet source. The row reader above remains the
-  // spec-pinned fallback for Spark code paths that ask for rows.
   override def supportColumnarReads(partition: InputPartition): Boolean = columnar
   override def createColumnarReader(partition: InputPartition): PartitionReader[ColumnarBatch] =
     partition match {
-      case b: CdcBucketPartition => new CdcColumnarReader(b.files, requiredSchema,
+      case b: CdcBucketPartition => new CdcColumnarReader(b.files, requiredSchema, confMap,
         b.keyFilters, constants = bucketConstants(b), sourceFilters = b.sourceFilters)
-      case f: CdcFeedPartition   => new CdcColumnarReader(f.files, requiredSchema,
+      case f: CdcFeedPartition   => new CdcColumnarReader(f.files, requiredSchema, confMap,
         constants = feedConstants(f))
-      case s: CdcSnapshotPartition => new CdcColumnarReader(s.files, requiredSchema,
+      case s: CdcSnapshotPartition => new CdcColumnarReader(s.files, requiredSchema, confMap,
         constants = snapshotConstants(s))
       case p => throw new IllegalArgumentException(s"not a CDC partition: $p")
     }
 }
 
-/** Streams one bucket's files. Per file: read the footer, clip the
-  * requested projection against the file schema (copying the FILE's
-  * parquet types so physical layouts always match), push it through
-  * `parquet.read.schema`, then decode Groups positionally. Columns the
-  * file predates (additive evolution) decode as NULL. */
-class CdcPartitionReader(
-    files: Array[String],
-    requiredSchema: StructType,
-    keyFilters: Array[(String, Array[Any])] = Array.empty,
-    constants: Map[String, Any] = Map.empty)
-    extends PartitionReader[InternalRow] {
-
-  /** Key panels as a parquet filter (AND of per-key OR-of-eq): row groups
-    * whose tight key statistics (files are key-sorted at write) exclude
-    * every value never decode.
-    *
-    * CORRECTNESS INVARIANT (this filter is load-bearing in THIS reader):
-    * `FilterCompat.get` enables parquet's RECORD-level filtering too, so
-    * rows outside the panel are dropped before Spark ever sees them — and
-    * Spark's residual re-evaluation cannot restore a dropped row. That is
-    * only sound because every per-key panel is a SUPERSET of the values
-    * any row matching the pushed predicates can carry (panels derive from
-    * =/IN conjuncts via minBy/intersect — never widened, only tightened).
-    * Any future panel derivation that loosens this must restrict the
-    * filter to row-group stats pruning instead. (The vectorized columnar
-    * path has no record assembly, so there the same filter really is
-    * row-group/page pruning only.) Only built from columns the projection
-    * carries (and the file contains). */
-  private def parquetFilter(fileSchema: MessageType): Option[org.apache.parquet.filter2.predicate.FilterPredicate] = {
-    import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
-    val conjuncts: Seq[FilterPredicate] =
-      keyFilters.toSeq.filter(f => fileSchema.containsField(f._1)).flatMap {
-      case (name, values) =>
-        val eqs: Seq[FilterPredicate] =
-          requiredSchema.fields.find(_.name == name).map(_.dataType) match {
-          case Some(LongType) =>
-            values.toSeq.map(v => FilterApi.eq(
-              FilterApi.longColumn(name), java.lang.Long.valueOf(v.asInstanceOf[Number].longValue)))
-          case Some(IntegerType) =>
-            values.toSeq.map(v => FilterApi.eq(
-              FilterApi.intColumn(name), java.lang.Integer.valueOf(v.asInstanceOf[Number].intValue)))
-          case Some(StringType) =>
-            values.toSeq.map(v => FilterApi.eq(
-              FilterApi.binaryColumn(name),
-              org.apache.parquet.io.api.Binary.fromString(v.toString)))
-          case _ => Nil
-        }
-        if (eqs.isEmpty) None else Some(eqs.reduce(FilterApi.or(_, _)))
-    }
-    conjuncts.reduceOption(FilterApi.and(_, _))
-  }
-
-  // executor-side: files carry their scheme (file://, hdfs://); a default
-  // Configuration resolves the right FileSystem for both
-  private val conf = new Configuration()
-
-  private var opened = 0
-  override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    Array(CdcMetrics.Value("filesOpened", opened.toLong))
-
-  private var fileIdx = -1
-  private var reader: ParquetReader[org.apache.parquet.example.data.Group] = _
-  // for the current file: required-field index → (group field position | -1 for absent)
-  private var fieldPos: Array[Int] = _
-  // the FILE's primitive per required field (null when absent): what lets
-  // decode up-cast a pre-widening file's INT32/FLOAT into the recorded
-  // LONG/DOUBLE (metadata-only type widening — Cdc.widenColumn)
-  private var filePrim: Array[org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName] = _
-  private var current: InternalRow = _
-
-  private def openNext(): Boolean = {
-    if (reader != null) { reader.close(); reader = null }
-    fileIdx += 1
-    if (fileIdx >= files.length) return false
-    opened += 1
-    val path = new Path(files(fileIdx))
-    val footer = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf))
-    val fileSchema = try footer.getFileMetaData.getSchema finally footer.close()
-    val present = requiredSchema.fields.filter(f => fileSchema.containsField(f.name))
-    val projection = new MessageType("spark_schema",
-      present.map(f => fileSchema.getType(Seq(f.name): _*)): _*)
-    fieldPos = {
-      var pos = -1
-      requiredSchema.fields.map { f =>
-        if (fileSchema.containsField(f.name)) { pos += 1; pos } else -1
-      }
-    }
-    filePrim = requiredSchema.fields.map { f =>
-      if (!fileSchema.containsField(f.name)) null
-      else fileSchema.getType(Seq(f.name): _*).asPrimitiveType().getPrimitiveTypeName
-    }
-    val fileConf = new Configuration(conf)
-    fileConf.set(ReadSupport.PARQUET_READ_SCHEMA, projection.toString)
-    val builder = ParquetReader.builder(new GroupReadSupport(), path).withConf(fileConf)
-    reader = parquetFilter(fileSchema)
-      .map(p => builder.withFilter(org.apache.parquet.filter2.compat.FilterCompat.get(p)))
-      .getOrElse(builder)
-      .build()
-    true
-  }
-
-  override def next(): Boolean = {
-    while (true) {
-      if (reader == null && !openNext()) return false
-      val g = reader.read()
-      if (g != null) { current = decode(g); return true }
-      reader.close(); reader = null
-    }
-    false // unreachable
-  }
-
-  private def decode(g: org.apache.parquet.example.data.Group): InternalRow = {
-    val values = new Array[Any](requiredSchema.length)
-    var i = 0
-    while (i < requiredSchema.length) {
-      val pos = fieldPos(i)
-      values(i) =
-        // partition-level constants (e.g. the feed's `_commit_timestamp`)
-        // serve columns no file carries; other absent columns are NULL
-        // (additive evolution)
-        if (pos < 0 || g.getFieldRepetitionCount(pos) == 0)
-          constants.getOrElse(requiredSchema.fields(i).name, null)
-        else requiredSchema.fields(i).dataType match {
-          // widened columns (Cdc.widenColumn): a pre-widening file's
-          // narrow primitive up-casts — exact embeddings both
-          case LongType
-            if filePrim(i) == org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT32 =>
-            g.getInteger(pos, 0).toLong
-          case DoubleType
-            if filePrim(i) == org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.FLOAT =>
-            g.getFloat(pos, 0).toDouble
-          case LongType    => g.getLong(pos, 0)
-          case IntegerType => g.getInteger(pos, 0)
-          case DoubleType  => g.getDouble(pos, 0)
-          case FloatType   => g.getFloat(pos, 0)
-          case StringType  => UTF8String.fromBytes(g.getBinary(pos, 0).getBytes)
-          case BooleanType => g.getBoolean(pos, 0)
-          case DateType    => g.getInteger(pos, 0) // parquet DATE = days since epoch
-          case TimestampType => g.getLong(pos, 0)  // TIMESTAMP(MICROS) in segment files
-          // DECIMAL: decode whatever physical class the FILE chose
-          // (INT32 for p<=9, INT64 for p<=18, FLBA/BINARY above) into the
-          // REQUESTED precision/scale — precision widening
-          // (Cdc.widenColumn DECIMAL(p,s)->DECIMAL(p+k,s)) is exactly a
-          // narrow physical read under a wider logical type; the scale
-          // never changes across a widening, so the unscaled value maps 1:1
-          case dec: DecimalType => filePrim(i) match {
-            case org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT32 =>
-              org.apache.spark.sql.types.Decimal(
-                g.getInteger(pos, 0).toLong, dec.precision, dec.scale)
-            case org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT64 =>
-              org.apache.spark.sql.types.Decimal(
-                g.getLong(pos, 0), dec.precision, dec.scale)
-            case _ => // FIXED_LEN_BYTE_ARRAY / BINARY: big-endian unscaled bytes
-              org.apache.spark.sql.types.Decimal(
-                BigDecimal(
-                  new java.math.BigInteger(g.getBinary(pos, 0).getBytes), dec.scale),
-                dec.precision, dec.scale)
-          }
-          case t => throw new IllegalArgumentException(
-            s"unsupported type $t (CdcStoreTable validates at load — this is a bug)")
-        }
-      i += 1
-    }
-    InternalRow.fromSeq(values.toIndexedSeq)
-  }
-
-  override def get(): InternalRow = current
-  override def close(): Unit = if (reader != null) { reader.close(); reader = null }
-}
-
-/** MERGE-ON-READ fold of ONE bucket: apply the bucket's ordered delta
-  * files (per-key changelog survivors with a `_cdc_op` tombstone marker,
+/** MERGE-ON-READ fold of ONE bucket over the rows of
+  * [[CdcColumnarReader]] batches: apply the bucket's ordered delta files
+  * (per-key changelog survivors with a `_cdc_op` tombstone marker,
   * written by [[graft.operators.Cdc]] delta commits) over its base files,
   * last-writer-wins per merge key, streaming.
   *
-  * Shape: (1) drain the delta levels OLDEST → NEWEST into a key-indexed
+  * Shape: (1) drain the delta files OLDEST → NEWEST into a key-indexed
   * verdict map — later puts overwrite earlier ones, so the map ends at
-  * each key's final verdict; (2) stream the base files, emitting every
-  * row whose key has no verdict (verdict'd keys are superseded — updated
-  * or deleted); (3) emit the non-tombstone verdicts. Memory is
+  * each key's final verdict; batch rows are reused, so every retained
+  * row is copied out; (2) stream the base batches row by row, emitting
+  * every row whose key has no verdict (verdict'd keys are superseded —
+  * updated or deleted); (3) emit the non-tombstone verdicts. Memory is
   * O(delta rows in this bucket) — exactly the merge-on-read premise
   * (deltas are DML-sized, the base is bucket-sized and streams through).
   * Compaction ([[graft.operators.Cdc.compactStore]]) bounds delta depth.
   *
   * The keys are read from the files even when the query projected them
   * out (`innerSchema` appends them); emitted rows are trimmed back to
-  * the scan's declared schema. Key panels apply inside both sub-readers
-  * — key-equality pruning drops a key's rows on every level together, so
-  * the fold stays consistent; arbitrary payload filters are excluded by
-  * the planner for exactly the opposite reason. */
+  * the scan's declared schema. Key panels prune row groups on both
+  * levels — key-equality pruning drops a key's rows on every level
+  * together, so the fold stays consistent; arbitrary payload filters
+  * could drop a key's newest delta row while keeping its base row, so
+  * the planner hands a folding partition none (`sourceFilters` reach the
+  * base only, and only on partitions with no deltas and no slice). */
 class CdcMorPartitionReader(
     baseFiles: Array[String],
-    deltaLevels: Array[Array[String]],
+    /** Every delta level's files, oldest level first. */
+    deltaFiles: Array[String],
     requiredSchema: StructType,
+    confMap: Map[String, String],
     keyNames: Array[String],
     keyTypes: Array[DataType],
     keyFilters: Array[(String, Array[Any])] = Array.empty,
+    sourceFilters: Array[Filter] = Array.empty,
     constants: Map[String, Any] = Map.empty,
     /** Lazy bucket-split slice `(nBuckets, bucket)`: base files are the
       * PARENT's (shared with sibling children) — emit only rows whose
       * layout hash lands in `bucket`. Delta rows are native to the child
       * (written post-split at its coordinate) and need no slicing. With
-      * empty `deltaLevels` this degenerates to a sliced base stream —
-      * the lazily-split clean-bucket reader. */
+      * no delta files this degenerates to a sliced base stream — the
+      * lazily-split clean-bucket reader. */
     slice: Option[(Int, Int)] = None)
     extends PartitionReader[InternalRow] {
 
@@ -1033,40 +858,59 @@ class CdcMorPartitionReader(
 
   // final verdict per delta'd key: true = tombstoned, false = row below wins
   private val verdicts = new java.util.LinkedHashMap[List[Any], (Boolean, InternalRow)]()
-  locally {
-    deltaLevels.foreach { files =>
-      // constants (e.g. the `_bucket` metadata column) fill absent fields
-      // inside the sub-reader, same as for base files
-      val r = new CdcPartitionReader(files, deltaSchema, keyFilters, constants)
-      try while (r.next()) {
-        val row = r.get() // fresh GenericInternalRow per next(): safe to retain
-        val del = !row.isNullAt(opIdx) && row.getUTF8String(opIdx).toString == "D"
-        verdicts.put(keyOf(row), (del, row))
-      } finally r.close()
-    }
+  private val deltaFilesOpened: Int = {
+    // constants (e.g. the `_bucket` metadata column) fill absent fields
+    // inside the reader, same as for base files
+    val r = new CdcColumnarReader(deltaFiles, deltaSchema, confMap, keyFilters, constants)
+    try {
+      while (r.next()) {
+        val rows = r.get().rowIterator()
+        while (rows.hasNext) {
+          val row = rows.next().copy()
+          val del = !row.isNullAt(opIdx) && row.getUTF8String(opIdx).toString == "D"
+          verdicts.put(keyOf(row), (del, row))
+        }
+      }
+      r.filesOpened
+    } finally r.close()
   }
 
-  private val base = new CdcPartitionReader(baseFiles, innerSchema, keyFilters, constants)
+  private val base = new CdcColumnarReader(baseFiles, innerSchema, confMap, keyFilters,
+    constants, sourceFilters)
+  private var batch: ColumnarBatch = _ // current base batch, innerSchema-wide
+  private var out: ColumnarBatch = _   // the same vectors, requiredSchema-wide
+  private var rowId = 0
   private var baseDone = false
   private var verdictIt: java.util.Iterator[(Boolean, InternalRow)] = _
   private var current: InternalRow = _
 
-  private def trim(row: InternalRow): InternalRow =
-    if (extraKeys.isEmpty && (row.numFields == requiredSchema.length)) row
-    else {
-      val out = new Array[Any](requiredSchema.length)
-      var i = 0
-      while (i < out.length) { out(i) = row.get(i, requiredSchema.fields(i).dataType); i += 1 }
-      InternalRow.fromSeq(out.toIndexedSeq)
-    }
+  override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
+    Array(CdcMetrics.Value("filesOpened", (deltaFilesOpened + base.filesOpened).toLong))
+
+  // a verdict row carries the op marker (and any appended keys) past the
+  // scan's declared schema
+  private def trim(row: InternalRow): InternalRow = {
+    val out = new Array[Any](requiredSchema.length)
+    var i = 0
+    while (i < out.length) { out(i) = row.get(i, requiredSchema.fields(i).dataType); i += 1 }
+    InternalRow.fromSeq(out.toIndexedSeq)
+  }
 
   override def next(): Boolean = {
     while (!baseDone) {
-      if (base.next()) {
-        val row = base.get()
-        if (inSlice(row) && !verdicts.containsKey(keyOf(row))) {
-          current = trim(row); return true
+      if (batch != null && rowId < batch.numRows()) {
+        val i = rowId
+        rowId += 1
+        val row = batch.getRow(i)
+        if (inSlice(row) && (verdicts.isEmpty || !verdicts.containsKey(keyOf(row)))) {
+          current = out.getRow(i); return true
         }
+      } else if (base.next()) {
+        batch = base.get()
+        out =
+          if (extraKeys.isEmpty) batch
+          else new ColumnarBatch(Array.tabulate(requiredSchema.length)(batch.column), batch.numRows())
+        rowId = 0
       } else {
         baseDone = true
         base.close()
@@ -1081,5 +925,5 @@ class CdcMorPartitionReader(
   }
 
   override def get(): InternalRow = current
-  override def close(): Unit = if (!baseDone) base.close()
+  override def close(): Unit = base.close()
 }

@@ -177,16 +177,17 @@ class CdcStatsScan(
   override def supportedCustomMetrics():
       Array[org.apache.spark.sql.connector.metric.CustomMetric] = CdcMetrics.scanMetrics
 
+  // the session's Hadoop conf, captured once for this scan's readers
   override def createReaderFactory(): PartitionReaderFactory =
-    new CdcStatsReaderFactory(aggs)
+    new CdcStatsReaderFactory(aggs, graft.sources.SessionHadoopConf.capture())
 }
 
 case class CdcStatsPartition(files: Array[String]) extends InputPartition
 
-class CdcStatsReaderFactory(aggs: Seq[CdcStatsScan.FooterAgg])
+class CdcStatsReaderFactory(aggs: Seq[CdcStatsScan.FooterAgg], confMap: Map[String, String])
     extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    new CdcStatsReader(p.asInstanceOf[CdcStatsPartition].files, aggs)
+    new CdcStatsReader(p.asInstanceOf[CdcStatsPartition].files, aggs, confMap)
 }
 
 /** Folds one bucket's file footers into a single partial-aggregate row.
@@ -200,7 +201,8 @@ class CdcStatsReaderFactory(aggs: Seq[CdcStatsScan.FooterAgg])
   * exotic file. Exactness is preserved: the fallback reads rows, it
   * never guesses. (The `graft.cdc.statsPushdown=false` session toggle
   * remains the plan-level escape hatch.) */
-class CdcStatsReader(files: Array[String], aggs: Seq[CdcStatsScan.FooterAgg])
+class CdcStatsReader(
+    files: Array[String], aggs: Seq[CdcStatsScan.FooterAgg], confMap: Map[String, String])
     extends PartitionReader[InternalRow] {
   import CdcStatsScan._
 
@@ -226,7 +228,7 @@ class CdcStatsReader(files: Array[String], aggs: Seq[CdcStatsScan.FooterAgg])
   private class MissingStatsException(msg: String) extends RuntimeException(msg)
 
   private def fold(): InternalRow = {
-    val conf = new Configuration()
+    val conf = graft.sources.SessionHadoopConf.toConf(confMap)
     // running partials, positionally aligned with `aggs`
     val mins = new Array[Any](aggs.length)
     val maxs = new Array[Any](aggs.length)
@@ -335,7 +337,7 @@ class CdcStatsReader(files: Array[String], aggs: Seq[CdcStatsScan.FooterAgg])
     val schema = StructType(needed.map { case (c, dt) => StructField(c, dt, nullable = true) })
     val idx: Map[String, Int] = needed.map(_._1).zipWithIndex.toMap
     if (needed.nonEmpty) {
-      val rdr = new CdcColumnarReader(Array(f), schema)
+      val rdr = new CdcColumnarReader(Array(f), schema, confMap)
       try {
         while (rdr.next()) {
           val batch = rdr.get()

@@ -267,8 +267,7 @@ class CdcStagingWriter(path: String, schema: StructType)
       // Configuration resolves the right FileSystem (same as the reader).
       // The write-support confs mirror Spark's own parquet sink: modern
       // (non-legacy) layout, micros timestamps, CORRECTED rebase — the
-      // exact physical shapes CdcColumnarReader/CdcPartitionReader and
-      // spark.read decode.
+      // exact physical shapes CdcColumnarReader and spark.read decode.
       val conf = new Configuration()
       org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
         .setSchema(schema, conf)

@@ -1747,7 +1747,7 @@ class CdcSpec extends AnyFunSuite {
       .map { case (k, r) => k -> r.toPlainString }.toMap ===
       Map(1L -> "10.25", 2L -> "20.50", 3L -> "30.75"))
     // a wide MoR delta (value only DECIMAL(14,2) can carry) folds over the
-    // narrow base; serve it through the CATALOG so the store's own row
+    // narrow base; serve it through the CATALOG so the store's own fold
     // reader decodes both physical classes (INT32 base + INT64 delta)
     val wide = Seq((2L, "123456789012.34", 100L, "U"), (4L, "40.00", 101L, "U"))
       .toDF("k", "rev", "seq", "op")

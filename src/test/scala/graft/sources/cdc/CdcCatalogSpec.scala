@@ -959,7 +959,54 @@ class CdcCatalogSpec extends AnyFunSuite {
       val point = scanMetrics(spark.table("graft.cat_met").filter(col("k") === 2L))
       assert(point("plannedBuckets") === 1L, s"point lookup metrics: $point")
       assert(point("staticPrunedBuckets") === (nBuckets - 1).toLong)
+      // a PENDING merge-on-read delta: the fold reader opens base AND
+      // delta files, and the plan counts both
+      Cdc.processPartitionedBatch(
+        log((3L, "d3", 33.0, 300L, "U"), (4L, "x", 0.0, 301L, "D")),
+        seed40("m").toDF("k", "name", "bal"), keys, Seq(col("seq")), col("op"),
+        store, nBuckets, 2L, casCommit = true, morCommit = true)
+      val mor = scanMetrics(spark.table("graft.cat_met"))
+      assert(mor("plannedFiles") > full("plannedFiles"), s"delta files not planned: $mor")
+      assert(mor("filesOpened") >= 1L)
+      assert(mor("filesOpened") === mor("plannedFiles"),
+        s"merge-on-read scan must open exactly the planned files: $mor")
     } finally CdcCatalog.unregister("cat_met")
+  }
+
+  test("store, fold and footer-stats readers open files with the session's Hadoop conf") {
+    // A scheme only the session's Hadoop conf knows; with the FileSystem
+    // cache off, every open resolves the scheme from the conf it is given,
+    // so a reader that builds a default Configuration cannot open a file.
+    val store = buildStore("sess", seed40("q"))
+    val hc = spark.sparkContext.hadoopConfiguration
+    hc.set("fs.graftsession.impl", classOf[graft.sources.SessionSchemeFs].getName)
+    hc.setBoolean("fs.graftsession.impl.disable.cache", true)
+    CdcCatalog.register("cat_sess", s"graftsession://$store", keys, nBuckets)
+    try {
+      val t = spark.table("graft.cat_sess")
+      assert(collectRows(t) === collectRows(Cdc.readPartitionedSnapshot(spark, store)))
+      val stats = t.agg(min(col("bal")), max(col("bal")))
+      val statsScans = stats.queryExecution.executedPlan.collect {
+        case b: BatchScanExec => Seq(b.scan)
+        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+          a.executedPlan.collect { case b: BatchScanExec => b.scan }
+      }.flatten
+      assert(statsScans.exists(_.isInstanceOf[CdcStatsScan]), statsScans.map(_.description()))
+      assert(stats.collect().toSeq ===
+        Cdc.readPartitionedSnapshot(spark, store).agg(min(col("bal")), max(col("bal")))
+          .collect().toSeq)
+      // a pending delta takes the scan to the fold reader
+      Cdc.processPartitionedBatch(log((5L, "d5", 55.0, 300L, "U")),
+        seed40("q").toDF("k", "name", "bal"), keys, Seq(col("seq")), col("op"),
+        store, nBuckets, 2L, casCommit = true, morCommit = true)
+      val folded = collectRows(spark.table("graft.cat_sess"))
+      assert(folded === collectRows(Cdc.readPartitionedSnapshot(spark, store)))
+      assert(folded.contains((5L, "d5", 55.0)))
+    } finally {
+      CdcCatalog.unregister("cat_sess")
+      hc.unset("fs.graftsession.impl")
+      hc.unset("fs.graftsession.impl.disable.cache")
+    }
   }
 
   test("unknown table and non-additive surface fail loudly") {

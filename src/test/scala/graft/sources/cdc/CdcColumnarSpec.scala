@@ -13,8 +13,10 @@ import graft.operators.Cdc
   *  - the plan actually goes columnar: a `ColumnarToRow` sits over the
   *    store's `BatchScan` (the batches feed whole-stage codegen like
   *    Spark's own parquet source);
-  *  - columnar ≡ row: every supported payload type round-trips
-  *    identically through both readers, including NULLs;
+  *  - every supported payload type, NULLs and DECIMAL included, serves
+  *    exactly what Spark's own parquet FileSourceScan reads from the same
+  *    files (`Cdc.readPartitionedSnapshot`), and a pending I/U/D delta
+  *    folds (row path over the same reader) to the DataFrame window fold;
   *  - additive evolution: files predating a column serve all-NULL
   *    vectors through the columnar path;
   *  - the feed table's `_commit_timestamp` constant survives the
@@ -37,50 +39,60 @@ class CdcColumnarSpec extends AnyFunSuite {
     assert(hasColumnarScan, s"scan did not go columnar:\n${plan.toString.take(2000)}")
   }
 
-  test("all supported payload types round-trip columnar ≡ row, NULLs included") {
+  test("every payload type reads as FileSourceScan does; MoR folds too") {
     val store = java.nio.file.Files.createTempDirectory("graft_colall").toString
-    val schema = "k LONG, i INT, d DOUBLE, f FLOAT, s STRING, b BOOLEAN, dt DATE"
-    val rows = spark.sql(
-      """SELECT id AS k, CAST(id AS INT) AS i, id * 1.5 AS d,
-        |  CAST(id * 0.5 AS FLOAT) AS f,
-        |  CASE WHEN id % 5 = 0 THEN NULL ELSE concat('s', id) END AS s,
-        |  id % 2 = 0 AS b,
-        |  CASE WHEN id % 7 = 0 THEN NULL ELSE date_add(DATE'2024-01-01', CAST(id AS INT)) END AS dt
-        |FROM range(0, 200)""".stripMargin)
+    val schema = "k LONG, i INT, d DOUBLE, f FLOAT, s STRING, b BOOLEAN, dt DATE, m DECIMAL(12,2)"
+    val cols = org.apache.spark.sql.types.StructType.fromDDL(schema).fieldNames.toSeq
+    // payload of row `id`, version `v`; NULLs in every nullable column
+    def payload(v: Int): String =
+      s"""id AS k, CAST(id + $v AS INT) AS i, CAST(id * 1.5 + $v AS DOUBLE) AS d,
+         |  CAST(id * 0.5 + $v AS FLOAT) AS f,
+         |  CASE WHEN id % 5 = 0 THEN NULL ELSE concat('s$v-', id) END AS s,
+         |  (id + $v) % 2 = 0 AS b,
+         |  CASE WHEN id % 7 = 0 THEN NULL
+         |    ELSE date_add(DATE'2024-01-01', CAST(id + $v AS INT)) END AS dt,
+         |  CASE WHEN id % 11 = 0 THEN NULL ELSE CAST(id * 1.25 + $v AS DECIMAL(12,2)) END AS m""".stripMargin
+    val rows = spark.sql(s"SELECT ${payload(0)} FROM range(0, 200)")
     Cdc.processPartitionedBatch(
       rows.withColumn("seq", lit(1L)).withColumn("op", lit("U")),
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         org.apache.spark.sql.types.StructType.fromDDL(schema)),
       Seq("k"), Seq(col("seq")), col("op"), store, nBuckets, 0L)
     CdcCatalog.register("col_all", store, Seq("k"), nBuckets)
+    // the independent reference: Spark's own parquet FileSourceScan over
+    // the same files, merge-on-read folded by the DataFrame window fold
+    def rowsOf(df: DataFrame): Set[Seq[Any]] =
+      df.select(cols.map(col): _*).collect().map(_.toSeq).toSet
     try {
       val served = spark.table("graft.col_all")
       assertColumnar(served.select("k", "s"))
-      val viaColumnar = served.collect().map(_.toSeq).toSet
-      val viaRows = {
-        // drive the row fallback directly over the same partitions
-        val scan = served.queryExecution.executedPlan
-          .collectFirst { case b: BatchScanExec => b }.get
-        val factory = scan.scan.toBatch.createReaderFactory()
-        scan.scan.toBatch.planInputPartitions().flatMap { p =>
-          val r = factory.createReader(p)
-          val buf = scala.collection.mutable.ArrayBuffer.empty[Seq[Any]]
-          while (r.next()) {
-            val ir = r.get().copy()
-            buf += served.schema.fields.zipWithIndex.map { case (fld, i) =>
-              if (ir.isNullAt(i)) null else fld.dataType match {
-                case org.apache.spark.sql.types.StringType => ir.getUTF8String(i).toString
-                case org.apache.spark.sql.types.DateType =>
-                  java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(ir.getInt(i).toLong))
-                case t => ir.get(i, t)
-              }
-            }.toSeq
-          }
-          r.close(); buf
-        }.toSet
-      }
-      assert(viaColumnar === viaRows, "columnar and row readers disagree")
+      val viaColumnar = rowsOf(served)
+      assert(viaColumnar === rowsOf(Cdc.readPartitionedSnapshot(spark, store)),
+        "columnar reader and FileSourceScan disagree")
       assert(viaColumnar.size === 200)
+      // a PENDING merge-on-read delta over every type: updates (new
+      // values, NULLs included), deletes, and inserts of new keys
+      val delta = spark.sql(
+        s"""SELECT ${payload(1)}, 2L AS seq,
+           |  CASE WHEN id >= 200 THEN 'I' WHEN id % 2 = 0 THEN 'D' ELSE 'U' END AS op
+           |FROM range(0, 220, 3)""".stripMargin)
+      Cdc.processPartitionedBatch(delta, Cdc.readPartitionedSnapshot(spark, store).limit(0),
+        Seq("k"), Seq(col("seq")), col("op"), store, nBuckets, 1L,
+        casCommit = true, morCommit = true)
+      val folded = spark.table("graft.col_all")
+      val plan = folded.queryExecution.executedPlan
+      assert(plan.collect { case c: ColumnarToRowExec => c }.isEmpty,
+        s"a delta'd store must fold on the row path:\n${plan.toString.take(2000)}")
+      val viaFold = rowsOf(folded)
+      assert(viaFold === rowsOf(Cdc.readPartitionedSnapshot(spark, store)),
+        "the fold reader and the DataFrame window fold disagree")
+      val touched = (0L until 220L by 3)
+      val deleted = touched.filter(k => k < 200 && k % 2 == 0).toSet
+      assert(viaFold.size === 200 - deleted.size + touched.count(_ >= 200))
+      assert(viaFold.map(_.head.asInstanceOf[Long]).intersect(deleted).isEmpty)
+      val updated = viaFold.find(_.head == 3L).get
+      assert(updated(4) === "s1-3" && updated(7) === new java.math.BigDecimal("4.75"),
+        s"key 3 must serve its delta row: $updated")
     } finally CdcCatalog.unregister("col_all")
   }
 
@@ -179,7 +191,7 @@ class CdcColumnarSpec extends AnyFunSuite {
       .filter(_.getName.endsWith(".parquet")).head.getAbsolutePath
     val schema = org.apache.spark.sql.types.StructType.fromDDL("v LONG, s STRING")
     def rowsReturned(filters: Array[org.apache.spark.sql.sources.Filter]): Long = {
-      val r = new CdcColumnarReader(Array(file), schema, sourceFilters = filters)
+      val r = new CdcColumnarReader(Array(file), schema, Map.empty, sourceFilters = filters)
       var total = 0L
       while (r.next()) total += r.get().numRows()
       r.close(); total

@@ -19,9 +19,11 @@ import graft.operators.Cdc
   *    the file's first/last key, which is exactly what parquet's
   *    row-group filter needs to skip groups a point read can't match;
   *  - the scan's key panels reach the parquet reader as real filter
-  *    predicates: a panel read through [[CdcPartitionReader]] decodes
-  *    only matching rows (Spark re-checks every predicate above, so the
-  *    pushdown stays IO advice, never correctness).
+  *    predicates: over a key-sorted file of many row groups,
+  *    [[CdcColumnarReader]] decodes nothing for a key outside every
+  *    group and only a fraction of the file for a hit (row-group
+  *    pruning — Spark re-checks every predicate above, so the pushdown
+  *    stays IO advice, never correctness).
   */
 class CdcSortedStoreSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -50,10 +52,12 @@ class CdcSortedStoreSpec extends AnyFunSuite {
   }
 
   private def readKeys(file: String, filters: Array[(String, Array[Any])] = Array.empty): Seq[Long] = {
-    val r = new CdcPartitionReader(Array(file), payload, filters)
+    val r = new CdcColumnarReader(Array(file), payload, Map.empty, filters)
     val out = scala.collection.mutable.ArrayBuffer.empty[Long]
-    while (r.next()) out += r.get().getLong(0)
-    r.close()
+    try while (r.next()) {
+      val batch = r.get()
+      (0 until batch.numRows()).foreach(i => out += batch.column(0).getLong(i))
+    } finally r.close()
     out.toSeq
   }
 
@@ -84,28 +88,36 @@ class CdcSortedStoreSpec extends AnyFunSuite {
     }
   }
 
-  test("a key panel pushed to the reader decodes only matching rows") {
-    val store = buildStore()
-    val all = bucketFiles(store).flatMap(f => readKeys(f))
-    assert(all.toSet === (1L to 200L).toSet)
-    // probe each bucket file with one key it holds and one it cannot
-    bucketFiles(store).foreach { f =>
-      val ks = readKeys(f)
-      val hit = ks.head
-      assert(readKeys(f, Array(("k", Array[Any](hit)))) === Seq(hit))
-      // 999 is outside every file's [min,max]: the row-group filter drops
-      // the whole group before any record decodes
-      assert(readKeys(f, Array(("k", Array[Any](999L)))).isEmpty)
-      // a two-value panel ORs; an unrelated string panel conjunct ANDs
-      val two = ks.take(2)
-      assert(readKeys(f, Array(("k", two.map(_.asInstanceOf[Any]).toArray))) === two)
-      assert(readKeys(f, Array(
-        ("k", Array[Any](hit)),
-        ("name", Array[Any](s"orig$hit")))) === Seq(hit))
-      assert(readKeys(f, Array(
-        ("k", Array[Any](hit)),
-        ("name", Array[Any]("no-such-name")))).isEmpty)
-    }
+  test("key panels prune row groups: a miss decodes no rows") {
+    // one key-sorted file of many small row groups (tight key stats)
+    val dir = java.nio.file.Files.createTempDirectory("graft_sorted_rg").toString + "/data"
+    spark.range(0, 200000)
+      .selectExpr("id AS k", "concat('n', id) AS name", "CAST(id AS DOUBLE) AS bal")
+      .coalesce(1).sortWithinPartitions("k")
+      .write.option("parquet.block.size", 64 * 1024).parquet(dir)
+    val file = new java.io.File(dir).listFiles()
+      .filter(_.getName.endsWith(".parquet")).head.getAbsolutePath
+    val footer = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(file), new Configuration()))
+    val groups = try footer.getFooter.getBlocks.size finally footer.close()
+    assert(groups >= 4, s"fixture must have many row groups, got $groups")
+    val all = readKeys(file)
+    assert(all === (0L until 200000L))
+    // 999999 is outside every group's [min,max]: nothing decodes
+    assert(readKeys(file, Array(("k", Array[Any](999999L)))).isEmpty)
+    // a hit decodes its own row group: at least the row, less than the file
+    val hit = 123457L
+    val one = readKeys(file, Array(("k", Array[Any](hit))))
+    assert(one.contains(hit) && one.size < all.size, s"${one.size} of ${all.size} rows decoded")
+    // a two-value panel ORs: both groups, still a fraction of the file
+    val two = readKeys(file, Array(("k", Array[Any](5L, 190000L))))
+    assert(two.contains(5L) && two.contains(190000L) && two.size < all.size)
+    // an unrelated string panel conjunct ANDs: a name outside every
+    // group's range prunes the hit's group too
+    assert(readKeys(file, Array(("k", Array[Any](hit)), ("name", Array[Any](s"n$hit"))))
+      .contains(hit))
+    assert(readKeys(file, Array(
+      ("k", Array[Any](hit)),
+      ("name", Array[Any]("no-such-name")))).isEmpty)
   }
 
   test("catalog point reads stay exact end to end with the parquet filter active") {

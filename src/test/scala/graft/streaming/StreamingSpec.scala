@@ -630,56 +630,6 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("streaming CDC: micro-batch changelogs merge into a versioned snapshot; replay is exactly-once") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.operators.Cdc
-    val store = java.nio.file.Files.createTempDirectory("graft_cdc_store").toString
-    val ckpt  = java.nio.file.Files.createTempDirectory("graft_cdc_ckpt").toString
-    val keys  = Seq("k")
-    val seed  = Seq((1L, "a", 1.0), (2L, "b", 2.0)).toDF("k", "name", "bal")
-    // batch 1 updates key 1 + inserts key 3; batch 2 deletes key 2 and
-    // re-updates key 3 — final: {1→a1, 3→c2}
-    val b1 = Seq((1L, "a1", 10.0, 1L, "U"), (3L, "c", 30.0, 2L, "I"))
-    val b2 = Seq((2L, "x", 0.0, 3L, "D"), (3L, "c2", 33.0, 4L, "U"))
-    val mem = MemoryStream[(Long, String, Double, Long, String)]
-    val q = Cdc
-      .maintainSnapshot(
-        mem.toDF().toDF("k", "name", "bal", "seq", "op"),
-        seed, keys, Seq(col("seq")), col("op"), store, ckpt)
-      .start()
-    try {
-      mem.addData(b1: _*); q.processAllAvailable()
-      mem.addData(b2: _*); q.processAllAvailable()
-    } finally q.stop()
-    def served = Cdc.readSnapshot(spark, store)
-      .as[(Long, String, Double)].collect().map(r => r._1 -> (r._2, r._3)).toMap
-    val oneShot = Cdc
-      .upsert(seed, (b1 ++ b2).toDF("k", "name", "bal", "seq", "op"),
-        keys, Seq(col("seq")), col("op"))
-      .as[(Long, String, Double)].collect().map(r => r._1 -> (r._2, r._3)).toMap
-    assert(served === oneShot)
-    assert(served === Map(1L -> ("a1", 10.0), 3L -> ("c2", 33.0)))
-    // Crash-replay: re-running committed micro-batch 0 re-reads the same
-    // parent (the seed) and rewrites v=0; the SERVED (newest) snapshot
-    // is unchanged.
-    Cdc.processSnapshotBatch(b1.toDF("k", "name", "bal", "seq", "op"),
-      seed, keys, Seq(col("seq")), col("op"), store, 0L)
-    assert(served === oneShot)
-    // Torn write: a version directory WITHOUT the _SUCCESS marker (crash
-    // mid-write) must be invisible — both to serving and as a parent
-    val torn = new java.io.File(store, "v=9")
-    torn.mkdirs()
-    new java.io.File(torn, "part-00000.parquet").createNewFile()
-    assert(served === oneShot, "torn uncommitted version leaked into serving")
-    Cdc.processSnapshotBatch(
-      Seq((7L, "g", 70.0, 9L, "I")).toDF("k", "name", "bal", "seq", "op"),
-      seed, keys, Seq(col("seq")), col("op"), store, 10L)
-    val after = Cdc.readSnapshot(spark, store)
-      .as[(Long, String, Double)].collect().map(r => r._1 -> (r._2, r._3)).toMap
-    assert(after === oneShot + (7L -> ("g", 70.0)),
-      "batch 10 failed to build on the newest COMMITTED version")
-  }
-
   test("streaming partitioned CDC: touched buckets rewrite, untouched buckets carry by reference") {
     implicit val sqlCtx = spark.sqlContext
     import graft.operators.Cdc
