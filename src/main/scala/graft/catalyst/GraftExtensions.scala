@@ -13,6 +13,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectFunction(GraftExtensions.gunzipDescriptor)
+    ext.injectFunction(GraftExtensions.gunzipJsonDescriptor)
     ext.injectFunction(GraftExtensions.cosineDescriptor)
     ext.injectFunction(GraftExtensions.l2DistDescriptor)
     ext.injectFunction(GraftExtensions.morton3Descriptor)
@@ -39,6 +40,28 @@ object GraftExtensions {
       ""
     ),
     (children: Seq[Expression]) => GunzipExpression(children.head)
+  )
+
+  private[catalyst] val gunzipJsonDescriptor
+      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
+    FunctionIdentifier("graft_gunzip_json"),
+    new ExpressionInfo(
+      classOf[GunzipJsonExpression].getName,
+      null,
+      "graft_gunzip_json",
+      "graft_gunzip_json(payload, schema) - gunzip a BINARY column and parse its JSON document " +
+        "into a struct of the DDL `schema`, which carries a STRING `_corrupt` field; an " +
+        "undecodable payload or a malformed document sets `_corrupt` instead of failing.",
+      ""
+    ),
+    (children: Seq[Expression]) => children match {
+      case Seq(payload, org.apache.spark.sql.catalyst.expressions.Literal(
+          ddl: org.apache.spark.unsafe.types.UTF8String, _: org.apache.spark.sql.types.StringType)) =>
+        GunzipJsonExpression(payload, org.apache.spark.sql.types.StructType.fromDDL(ddl.toString))
+      case other =>
+        throw new IllegalArgumentException(
+          s"graft_gunzip_json(payload, schema): schema must be a DDL string literal, got $other")
+    }
   )
 
   private[catalyst] val cosineDescriptor
@@ -181,7 +204,7 @@ object GraftExtensions {
     * existing session (sessions built with `spark.sql.extensions` get both
     * through [[GraftExtensions]] instead). */
   def register(spark: SparkSession): Unit = {
-    Seq(gunzipDescriptor, cosineDescriptor, l2DistDescriptor, morton3Descriptor,
+    Seq(gunzipDescriptor, gunzipJsonDescriptor, cosineDescriptor, l2DistDescriptor, morton3Descriptor,
         sigAgreementDescriptor, lshBucketDescriptor,
         interleaveBitsDescriptor, bloomAggDescriptor, mightContainDescriptor)
       .foreach { case (ident, info, builder) =>

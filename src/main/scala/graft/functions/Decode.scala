@@ -3,7 +3,7 @@ package graft.functions
 import java.io.ByteArrayOutputStream
 import java.util.zip.GZIPOutputStream
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 
@@ -12,8 +12,10 @@ import org.apache.spark.sql.functions._
   * The reference consumes Kinesis records whose payloads are
   * base64-delivered, gzip-compressed JSON (reference: README.md:2; the
   * Kinesis/Arc delivery contract). Base64 is a Spark built-in
-  * (`base64`/`unbase64`, codegen'd); gunzip is the native codegen
-  * expression [[graft.catalyst.GunzipExpression]], capped at
+  * (`base64`/`unbase64`, codegen'd); gunzip is [[GzipCodec]], reached
+  * through the native expressions [[graft.catalyst.GunzipExpression]]
+  * and, for the Arc envelope, the fused gunzip → JSON decode
+  * [[graft.catalyst.GunzipJsonExpression]]; both are capped at
   * [[GzipCodec.MaxDecompressedBytes]] per record.
   */
 object Decode {
@@ -34,12 +36,4 @@ object Decode {
     * (`try_to_binary`) — invalid base64 must dead-letter, not fail the
     * batch (A8). */
   def fromBase64(str: Column): Column = try_to_binary(str, lit("base64"))
-
-  /** gzip bytes → UTF-8 text through the native gunzip: fuses into the
-    * scan's codegen stage instead of crossing a UDF boundary. Bad gzip,
-    * an over-cap payload or null input yields null. */
-  def gunzipText(spark: SparkSession, gz: Column): Column = {
-    graft.catalyst.GraftExtensions.register(spark)
-    decode(call_function("graft_gunzip", gz), "UTF-8")
-  }
 }

@@ -25,8 +25,8 @@ import graft.functions.Decode
   *
   * The decoded envelope sits behind a plan boundary (a one-element
   * `explode`) because predicate pushdown would otherwise substitute the
-  * whole gunzip → `from_json` chain into every filter conjunct and decode
-  * each record once per conjunct instead of once.
+  * whole decode into every filter conjunct and decode each record once per
+  * conjunct instead of once.
   */
 object ArcPipeline {
 
@@ -72,32 +72,21 @@ object ArcPipeline {
       sectionAllowlist: Seq[String] = Seq.empty
   )
 
-  /** The envelope an undecodable payload (bad base64 / gzip) decodes to. */
-  private val undecodable: Column = struct(
-    lit(null).cast(StringType).as("version"),
-    lit(null).cast(StringType).as("type"),
-    lit(null).cast(StringType).as("subtype"),
-    lit(null).cast(StringType).as("operation"),
-    lit(null).cast(StringType).as("date"),
-    lit(null).cast(StringType).as("id"),
-    lit(null).cast(bodySchema).as("body"),
-    lit("UNDECODABLE").as("_corrupt")
-  )
-
   /** Stage 1 — decode: base64 text → gunzip → UTF-8 JSON → envelope
     * struct. Malformed payloads land with a non-null `_corrupt` field
     * (A8), never fail the batch. */
   def decodeEnvelope(raw: DataFrame, payloadCol: Column): DataFrame =
     decodeGzip(raw, Decode.fromBase64(payloadCol))
 
-  /** gzip bytes → `event`, every input column kept. The envelope leaves
-    * through a one-element `explode` (a `Generate`), the plan boundary the
-    * object doc explains. */
+  /** gzip bytes → `event`, every input column kept, through the fused
+    * decode [[graft.catalyst.GunzipJsonExpression]]: a payload it cannot
+    * gunzip lands with `_corrupt = "UNDECODABLE"`, a malformed document
+    * with `_corrupt` = its text. The envelope leaves through a one-element
+    * `explode` (a `Generate`), the plan boundary the object doc explains. */
   private def decodeGzip(raw: DataFrame, gz: Column): DataFrame = {
-    val json = raw.withColumn("__json", Decode.gunzipText(raw.sparkSession, gz))
-    val event = when(col("__json").isNull, undecodable).otherwise(
-      from_json(col("__json"), envelopeSchema, Map("mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> "_corrupt")))
-    json.select(col("*"), explode(array(event)).as("event")).drop("__json")
+    graft.catalyst.GraftExtensions.register(raw.sparkSession)
+    val event = call_function("graft_gunzip_json", gz, lit(envelopeSchema.toDDL))
+    raw.select(col("*"), explode(array(event)).as("event"))
   }
 
   /** Variant of [[run]] over the Kinesis record frame

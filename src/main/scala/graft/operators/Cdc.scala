@@ -1109,7 +1109,10 @@ object Cdc {
       .withColumn("__op", upper(opCol))
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
-      .select(target.fields.map(f => col(f.name).as(targetMeta.phys(f.name))).toIndexedSeq
+      // in the store's recorded types: a coercible changelog type (DECIMAL
+      // for a DOUBLE column) must not land delta files of another type
+      .select(target.fields.map(f =>
+        col(f.name).cast(f.dataType).as(targetMeta.phys(f.name))).toIndexedSeq
         :+ when(col("__op") === "D", lit("D")).otherwise(lit("U")).as(DeltaOpCol): _*)))
     // AUTO-COMPACT path: depth-capped buckets fold (parent base+deltas)
     // and MERGE this batch's slice — one fresh base per deep bucket.
@@ -1127,7 +1130,7 @@ object Cdc {
         val merged = upsert(prior, deepBatch, keys, orderCols, opCol)
         val cp = layout(
           merged.select(target.fields.map(f =>
-            col(f.name).as(targetMeta.phys(f.name))).toIndexedSeq: _*))
+            col(f.name).cast(f.dataType).as(targetMeta.phys(f.name))).toIndexedSeq: _*))
           .localCheckpoint(true)
         writeParts(cp)
         Some(cp)
@@ -2956,13 +2959,13 @@ object Cdc {
       return Seq.empty[(Int, Long, String, Long, Option[Long], Long, Boolean, Option[Int])]
         .toDF("_bucket", "_writer", "path", "bytes", "bucket_rows", "file_rows", "is_delta",
           "base_mod")
+    val confMap = graft.sources.SessionHadoopConf.capture()
     dirRows.toDF("_bucket", "_writer", "dir", "bucket_rows", "is_delta", "base_mod")
       .repartition(math.max(1, math.min(dirRows.size, 32)))
       .mapPartitions { it =>
-        // executor-side LIST + footer reads: dirs carry their scheme, a
-        // default Configuration resolves the right FileSystem (same
-        // pattern as the scan readers)
-        val c = new org.apache.hadoop.conf.Configuration()
+        // executor-side LIST + footer reads, with the session's Hadoop
+        // conf (same as the scan readers)
+        val c = graft.sources.SessionHadoopConf.toConf(confMap)
         it.flatMap { r =>
           val dir = new org.apache.hadoop.fs.Path(r.getString(2))
           val fs = dir.getFileSystem(c)

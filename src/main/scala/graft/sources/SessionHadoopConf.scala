@@ -8,8 +8,9 @@ import org.apache.spark.sql.SparkSession
   * one — the same reason Spark's own file sources and sinks broadcast a
   * SerializableConfiguration. Each connector captures it once per scan or
   * write and ships it in its executor-side factory: both halves of the
-  * sharded connector, and the CDC store, feed and footer-statistics scans. */
-private[sources] object SessionHadoopConf {
+  * sharded connector, the CDC store, feed and footer-statistics scans, the
+  * CDC staging writers and the `$files` footer reads. */
+private[graft] object SessionHadoopConf {
   def capture(): Map[String, String] = {
     val c  = SparkSession.active.sessionState.newHadoopConf()
     val it = c.iterator()
@@ -18,10 +19,12 @@ private[sources] object SessionHadoopConf {
     b.result()
   }
 
-  /** Default-loaded base so an empty map (direct construction in tests)
-    * still resolves file:// — the captured map then overrides on top. */
+  /** The captured map is the full resolved session conf (defaults
+    * included), so the executor copy skips loading and parsing the default
+    * XML resources again; Hadoop resolves built-in schemes such as file://
+    * from its service registry, so an empty map still opens local files. */
   def toConf(confMap: Map[String, String]): org.apache.hadoop.conf.Configuration = {
-    val c = new org.apache.hadoop.conf.Configuration()
+    val c = new org.apache.hadoop.conf.Configuration(false)
     confMap.foreach { case (k, v) => c.set(k, v) }
     c
   }

@@ -122,10 +122,11 @@ class CdcDeltaWriterFactory(
     idSchema: StructType,
     keys: Seq[String])
     extends DeltaWriterFactory {
+  private val confMap = graft.sources.SessionHadoopConf.capture()
   override def createWriter(partitionId: Int, taskId: Long): DeltaWriter[InternalRow] =
     new CdcDeltaWriter(
       s"$stagingDir/part-$partitionId-$taskId.parquet",
-      payload, stagingSchema, rowSchema, idSchema, keys)
+      payload, stagingSchema, rowSchema, idSchema, keys, confMap)
 }
 
 /** Stages each verdict as one changelog row in a per-task parquet file
@@ -139,10 +140,11 @@ class CdcDeltaWriter(
     stagingSchema: StructType,
     rowSchema: StructType,
     idSchema: StructType,
-    keys: Seq[String])
+    keys: Seq[String],
+    confMap: Map[String, String])
     extends DeltaWriter[InternalRow] {
 
-  private val out = new CdcStagingWriter(path, stagingSchema)
+  private val out = new CdcStagingWriter(path, stagingSchema, confMap)
   // payload position i ← row position rowPos(i). LAZY: a delete-only
   // statement plans an EMPTY row projection (only ids flow), so this
   // mapping must not resolve unless an insert/update actually arrives.

@@ -9,6 +9,7 @@ import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactor
 import org.apache.spark.sql.types._
 
 import graft.operators.Cdc
+import graft.sources.SessionHadoopConf
 
 /** `df.writeStream.toTable("graft.x")` — STREAMING keyed upsert into a
   * catalog CDC store: every micro-batch commits exactly ONE new store
@@ -239,11 +240,12 @@ object CdcStreamingWrite {
   * contributes to the merge. */
 class CdcStagingWriterFactory(storePath: String, queryId: String, schema: StructType)
     extends StreamingDataWriterFactory {
+  private val confMap = SessionHadoopConf.capture()
   override def createWriter(
       partitionId: Int, taskId: Long, epochId: Long): DataWriter[InternalRow] =
     new CdcStagingWriter(
       s"${CdcStreamingWrite.stagingDir(storePath, queryId, epochId)}/part-$partitionId-$taskId.parquet",
-      schema)
+      schema, confMap)
 }
 
 case class StagedEpochFile(path: String, rows: Long) extends WriterCommitMessage
@@ -255,7 +257,7 @@ case class StagedEpochFile(path: String, rows: Long) extends WriterCommitMessage
   * consuming `InternalRow` directly — no per-value Group boxing, the
   * same writer Spark's parquet sink runs (the write twin of
   * [[CdcColumnarReader]]'s vectorized read path). */
-class CdcStagingWriter(path: String, schema: StructType)
+class CdcStagingWriter(path: String, schema: StructType, confMap: Map[String, String])
     extends DataWriter[InternalRow] {
 
   private var writer: org.apache.parquet.hadoop.ParquetWriter[InternalRow] = _
@@ -263,12 +265,11 @@ class CdcStagingWriter(path: String, schema: StructType)
 
   override def write(row: InternalRow): Unit = {
     if (writer == null) {
-      // executor-side: the path carries its scheme; a default
-      // Configuration resolves the right FileSystem (same as the reader).
-      // The write-support confs mirror Spark's own parquet sink: modern
-      // (non-legacy) layout, micros timestamps, CORRECTED rebase — the
-      // exact physical shapes CdcColumnarReader and spark.read decode.
-      val conf = new Configuration()
+      // executor-side, with the session's Hadoop conf (same as the
+      // reader). The write-support confs mirror Spark's own parquet sink:
+      // modern (non-legacy) layout, micros timestamps, CORRECTED rebase —
+      // the exact physical shapes CdcColumnarReader and spark.read decode.
+      val conf = SessionHadoopConf.toConf(confMap)
       org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
         .setSchema(schema, conf)
       val sql = org.apache.spark.sql.internal.SQLConf
@@ -292,7 +293,7 @@ class CdcStagingWriter(path: String, schema: StructType)
 
   override def abort(): Unit = {
     if (writer != null) writer.close()
-    new Path(path).getFileSystem(new Configuration()).delete(new Path(path), false)
+    new Path(path).getFileSystem(SessionHadoopConf.toConf(confMap)).delete(new Path(path), false)
   }
 
   override def close(): Unit = ()

@@ -75,7 +75,7 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
-  test("ArcPipeline decodes each record once: one graft_gunzip and one from_json per plan") {
+  test("ArcPipeline decodes each record once: one fused graft_gunzip_json and no from_json per plan") {
     import org.apache.spark.sql.functions.{col, encode}
     import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
     import graft.operators.ArcPipeline
@@ -84,15 +84,17 @@ class PlanSpec extends AnyFunSuite {
     val cfg = ArcPipeline.FilterConfig(website = Some("site-a"), sectionAllowlist = Seq("news"))
     def count(plan: String, s: String): Int = s.r.findAllIn(plan).length
     def once(what: String, plan: String): Unit = {
-      assert(count(plan, "graft_gunzip") === 1, s"$what: payload gunzipped more than once:\n${plan.take(3000)}")
-      assert(count(plan, "from_json") === 1, s"$what: envelope parsed more than once:\n${plan.take(3000)}")
+      assert(count(plan, "graft_gunzip_json") === 1, s"$what: payload decoded more than once:\n${plan.take(3000)}")
+      assert(count(plan, "graft_gunzip(?!_json)") === 0, s"$what: a standalone gunzip:\n${plan.take(3000)}")
+      assert(count(plan, "from_json") === 0, s"$what: a from_json beside the fused decode:\n${plan.take(3000)}")
+      assert(count(plan, "\\bdecode\\(") === 0, s"$what: a UTF-8 decode beside the fused decode:\n${plan.take(3000)}")
     }
-    // records carry binary payloads straight into the gunzip: the only
+    // records carry binary payloads straight into the decode: the only
     // base64 left is the dead-letter payload, above the decode (plans
-    // print top-down, so everything the gunzip consumes follows it)
+    // print top-down, so everything the decode consumes follows it)
     def direct(what: String, plan: String): Unit =
-      assert(!plan.substring(plan.indexOf("graft_gunzip")).contains("base64"),
-        s"$what: base64 round trip ahead of the gunzip:\n${plan.take(3000)}")
+      assert(!plan.substring(plan.indexOf("graft_gunzip_json")).contains("base64"),
+        s"$what: base64 round trip ahead of the decode:\n${plan.take(3000)}")
     def plans(out: org.apache.spark.sql.DataFrame, dlq: org.apache.spark.sql.DataFrame) =
       Seq("survivors" -> out.queryExecution.optimizedPlan.toString,
         "dead letters" -> dlq.queryExecution.optimizedPlan.toString)

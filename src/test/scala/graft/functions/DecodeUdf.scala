@@ -7,13 +7,15 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 
-/** A scalar-UDF gunzip, written independently of [[GzipCodec]]: the
-  * reference the native [[graft.catalyst.GunzipExpression]] is checked
-  * against. Test-only — it has no decompression cap. */
+/** A scalar-UDF gunzip over `java.util.zip.GZIPInputStream`, written
+  * independently of [[GzipCodec]]: the reference the engine's decoder and
+  * the native expressions are checked against. Test-only — it has no
+  * decompression cap. */
 object DecodeUdf {
 
-  /** Gunzip a binary column; malformed input → null (A8 tolerance). */
-  val gunzip: UserDefinedFunction = udf { (bytes: Array[Byte]) =>
+  /** `java.util.zip.GZIPInputStream` over the whole payload; null where
+    * it throws. */
+  def gunzipBytes(bytes: Array[Byte]): Array[Byte] =
     if (bytes == null) null
     else
       try {
@@ -24,7 +26,9 @@ object DecodeUdf {
         while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
         out.toByteArray
       } catch { case _: IOException => null }
-  }
+
+  /** Gunzip a binary column; malformed input → null (A8 tolerance). */
+  val gunzip: UserDefinedFunction = udf((bytes: Array[Byte]) => gunzipBytes(bytes))
 
   /** Full Kinesis-payload decode: base64 string → gunzip → UTF-8 JSON.
     * Any stage failing (bad base64, bad gzip) yields null. */

@@ -12,10 +12,10 @@ class ArcPipelineSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def gz(s: String): Array[Byte] = {
+  private def gz(s: String, charset: String = "UTF-8"): Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream()
     val g   = new java.util.zip.GZIPOutputStream(bos)
-    g.write(s.getBytes("UTF-8")); g.close()
+    g.write(s.getBytes(charset)); g.close()
     bos.toByteArray
   }
   private def payload(json: String): String = Base64.getEncoder.encodeToString(gz(json))
@@ -159,6 +159,36 @@ class ArcPipelineSpec extends AnyFunSuite {
     val inputBytes = bytes.map(_.toSeq).toSet
     assert(dead.forall(d => inputBytes.contains(Base64.getMimeDecoder.decode(d).toSeq)),
       "dead-letter payload is not the base64 of an input record")
+  }
+
+  test("invalid UTF-8 in one payload dead-letters that record, batch and streaming; the rest survive") {
+    // a Latin-1 é (0xE9) in the headline: the document is not UTF-8
+    val bad = gz(envelope("31").replace("headline 31", "caf\u00e9"), "ISO-8859-1")
+    val good = Seq(gz(envelope("30")), gz(envelope("32", op = "update")))
+    val records = good.head +: bad +: good.tail
+    def verdicts(out: org.apache.spark.sql.DataFrame, dlq: org.apache.spark.sql.DataFrame) = {
+      assert(out.select("event_id").as[String].collect().sorted === Array("30", "32"))
+      val dead = dlq.collect()
+      assert(dead.length === 1)
+      assert(Base64.getMimeDecoder.decode(dead.head.getString(0)).toSeq === bad.toSeq)
+      assert(dead.head.getString(1) != null && dead.head.getString(1) != "UNDECODABLE")
+    }
+    val (out, dlq) = ArcPipeline.run(records.map(Base64.getEncoder.encodeToString).toDF("payload"), col("payload"), cfg)
+    verdicts(out, dlq)
+    val (rOut, rDlq) = ArcPipeline.runRecords(records.toDF("payload"), cfg)
+    verdicts(rOut, rDlq)
+
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[Array[Byte]]
+    val (sOut, sDlq) = ArcPipeline.runRecords(mem.toDF().withColumnRenamed("value", "payload"), cfg)
+    val qs = Seq(sOut -> "t_arc_utf8_out", sDlq -> "t_arc_utf8_dlq").map { case (df, name) =>
+      df.writeStream.format("memory").queryName(name).outputMode("append").start()
+    }
+    try {
+      mem.addData(records: _*)
+      qs.foreach(_.processAllAvailable())
+      verdicts(spark.table("t_arc_utf8_out"), spark.table("t_arc_utf8_dlq"))
+    } finally qs.foreach(_.stop())
   }
 
   test("partitioned sink + dead-letter routing writes both sides") {

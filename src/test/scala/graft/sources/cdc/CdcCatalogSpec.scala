@@ -973,7 +973,8 @@ class CdcCatalogSpec extends AnyFunSuite {
     } finally CdcCatalog.unregister("cat_met")
   }
 
-  test("store, fold and footer-stats readers open files with the session's Hadoop conf") {
+  test("store, fold and footer-stats readers, the $files footer reads and the staging " +
+      "writers open files with the session's Hadoop conf") {
     // A scheme only the session's Hadoop conf knows; with the FileSystem
     // cache off, every open resolves the scheme from the conf it is given,
     // so a reader that builds a default Configuration cannot open a file.
@@ -1002,11 +1003,43 @@ class CdcCatalogSpec extends AnyFunSuite {
       val folded = collectRows(spark.table("graft.cat_sess"))
       assert(folded === collectRows(Cdc.readPartitionedSnapshot(spark, store)))
       assert(folded.contains((5L, "d5", 55.0)))
+      // x$files lists and footer-reads every live file executor-side
+      val files = spark.table("graft.`cat_sess$files`").select("path", "file_rows")
+        .as[(String, Long)].collect()
+      assert(files.nonEmpty && files.forall(_._1.startsWith("graftsession:")), files.toSeq)
+      assert(files.map(_._2).sum >= folded.size)
+      // a predicate wider than a key panel stages its verdicts through
+      // the row-level delta writer
+      spark.sql("DELETE FROM graft.cat_sess WHERE k = 3 AND bal > 1.0")
+      assert(!collectRows(spark.table("graft.cat_sess")).exists(_._1 == 3L))
+      // a streaming write stages each epoch through the staging writer
+      implicit val sqlCtx = spark.sqlContext
+      val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String, Double)]
+      val ckpt = java.nio.file.Files.createTempDirectory("graft_cat_sess_ckpt").toString
+      val q = mem.toDF().toDF("k", "name", "bal").writeStream
+        .option("checkpointLocation", ckpt).toTable("graft.cat_sess")
+      try { mem.addData((6L, "s6", 66.0)); q.processAllAvailable() } finally q.stop()
+      assert(collectRows(spark.table("graft.cat_sess")).contains((6L, "s6", 66.0)))
     } finally {
       CdcCatalog.unregister("cat_sess")
       hc.unset("fs.graftsession.impl")
       hc.unset("fs.graftsession.impl.disable.cache")
     }
+  }
+
+  test("a merge-on-read changelog of a coercible but different type reads back through the catalog") {
+    // the store records `bal` as DOUBLE; the changelog carries DECIMAL
+    val store = buildStore("coerce", seed40("c"))
+    CdcCatalog.register("cat_coerce", store, keys, nBuckets)
+    try {
+      val changes = log((7L, "c7", 0.0, 300L, "U"), (8L, "c8", 0.0, 301L, "I"))
+        .withColumn("bal", (col("k") * lit(BigDecimal("1.5"))).cast("decimal(12,2)"))
+      Cdc.processPartitionedBatch(changes, seed40("c").toDF("k", "name", "bal"), keys,
+        Seq(col("seq")), col("op"), store, nBuckets, 2L, casCommit = true, morCommit = true)
+      val served = collectRows(spark.table("graft.cat_coerce"))
+      assert(served.contains((7L, "c7", 10.5)) && served.contains((8L, "c8", 12.0)), served)
+      assert(served === collectRows(Cdc.readPartitionedSnapshot(spark, store)))
+    } finally CdcCatalog.unregister("cat_coerce")
   }
 
   test("unknown table and non-additive surface fail loudly") {
