@@ -39,28 +39,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // One-file-per-bucket is guaranteed by the warehouse writer
-      // (repartition-by-bucket-hash before bucketBy), so the reader may
-      // trust per-file sortBy order and SMJ over co-bucketed twins skips
-      // its Sorts too (Spark 3+ keeps this behind the legacy flag after
-      // SPARK-28595 because generic writers can't promise 1 file/bucket).
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      // Session artifacts (bucketed twins) are per-run: a FRESH warehouse
-      // dir per JVM, or saveAsTable collides with a previous run's orphan
-      // location (catalog is in-memory, the default ./spark-warehouse is
-      // not).
-      .config("spark.sql.warehouse.dir",
-        Files.createTempDirectory("graft_warehouse").toString)
-      // The engine's own V2 catalog: partitioned CDC stores served as
-      // bucket-reporting tables (storage-partitioned joins; sources/cdc)
-      .config("spark.sql.catalog.graft", "graft.sources.cdc.CdcCatalog")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus.toInt, "graft-bench")
     spark.sparkContext.setLogLevel("WARN")
 
     // Warm-up outside the measured section: shuffle + codegen + parquet
@@ -181,58 +160,34 @@ object Bench {
     val selected =
       if (qArgs.isEmpty) SparkEntry.queries.toSeq.sortBy(_._1)
       else SparkEntry.queries.filter { case (n, _) => qArgs.contains(n) }.toSeq.sortBy(_._1)
-    // Per-query IO totals (guide §1 / VERDICT r20 next-7): bytes read from
-    // storage and shuffle bytes written, summed over the query's tasks via
-    // a SparkListener — so the scale claims ("probes read ~nprobe/nlist
-    // partitions", "write IO is O(epoch delta)") are committed NUMBERS in
-    // the bench file, not plan-audit prose, and sf-to-sf comparisons stop
-    // depending on host-day normalization. Counters reset per runOnce and
-    // drain to quiescence AFTER the timed region (listener events are
-    // async; the poll adds no time to any reported number). Published as
-    // a separate top-level "io" map — "queries" keeps its name→sec shape
-    // and the driver-parsed short line is unchanged.
-    val ioRead = new java.util.concurrent.atomic.AtomicLong
-    val ioShuffle = new java.util.concurrent.atomic.AtomicLong
-    val ioTasks = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null) {
-          ioRead.addAndGet(t.taskMetrics.inputMetrics.bytesRead)
-          ioShuffle.addAndGet(t.taskMetrics.shuffleWriteMetrics.bytesWritten)
-          ioTasks.incrementAndGet()
-          ()
-        }
-    })
-    def drainThenSnapshot(): (Long, Long) = {
-      // poll until the async listener bus stops moving (bounded: ~1 s)
-      var prev = -1L; var cur = ioTasks.get(); var spins = 0
-      while (prev != cur && spins < 20) {
-        Thread.sleep(50); prev = cur; cur = ioTasks.get(); spins += 1
+    // Per-query IO and layer totals (guide §1 / VERDICT r20 next-7), from
+    // the one collector: `filesSize` bytes of the file scans each query
+    // executed and the shuffle bytes it wrote, plus its jobs, stages,
+    // tasks, executor task-seconds, Catalyst planning ms and driver gap —
+    // so the scale claims ("probes read ~nprobe/nlist partitions", "write
+    // IO is O(epoch delta)") are committed NUMBERS in the bench file, not
+    // plan-audit prose. The bus drains fall outside the timed body.
+    // Published as separate top-level "io" and "layers" maps — "queries"
+    // keeps its name→sec shape and the short total-only line is
+    // unchanged.
+    val metrics = new QueryMetrics(spark)
+    val snapByQuery = scala.collection.mutable.LinkedHashMap.empty[String, QuerySnapshot]
+    def runOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double =
+      try {
+        // noop sink: materializes every output column (count() would let
+        // Catalyst prune projection work away and under-measure).
+        val snap = metrics.measure(fn(spark, sfDir).write.format("noop").mode("overwrite").save())
+        snapByQuery(name) = snap
+        // Rounded to 0.1 ms — sub-100µs digits are noise, and a shorter
+        // JSON line survives a bounded stdout-tail capture (BENCH_r04/r05
+        // "parsed": null came from a truncated line).
+        math.rint(snap.wallNs / 1e9 * 10000) / 10000
+      } catch {
+        case e: Throwable =>
+          System.err.println(s"bench query $name FAILED: $e")
+          // -1 sentinel: a failed query must not masquerade as a fast success.
+          -1.0
       }
-      (ioRead.get(), ioShuffle.get())
-    }
-    val ioByQuery = scala.collection.mutable.LinkedHashMap.empty[String, (Long, Long)]
-    def runOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      ioRead.set(0L); ioShuffle.set(0L); ioTasks.set(0L)
-      val t0 = System.nanoTime()
-      // noop sink: materializes every output column (count() would let
-      // Catalyst prune projection work away and under-measure).
-      val ok =
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-        catch {
-          case e: Throwable =>
-            System.err.println(s"bench query $name FAILED: $e")
-            false
-        }
-      // timed region ends HERE; the listener drain below is bookkeeping
-      val sec = math.rint((System.nanoTime() - t0) / 1e9 * 10000) / 10000
-      if (ok) ioByQuery(name) = drainThenSnapshot()
-      // -1 sentinel: a failed query must not masquerade as a fast success.
-      // Rounded to 0.1 ms — sub-100µs digits are noise, and a shorter JSON
-      // line survives the driver's bounded stdout-tail capture
-      // (BENCH_r04/r05 "parsed": null came from a truncated line).
-      if (ok) sec else -1.0
-    }
     val results = selected.map { case (name, fn) =>
       // Session hygiene between queries: localCheckpoint RDDs persisted by
       // a query are never referenced again once its sink completes, but
@@ -298,14 +253,20 @@ object Bench {
       .mkString("{", ",", "}")
     val retimedJson = retimed.map { case (k, (a, b)) => s"\"" + k + s"\":[$a,$b]" }
       .mkString("{", ",", "}")
-    // per-query [bytes_read, shuffle_bytes_written] from the LAST run of
-    // each query (IO is deterministic per plan; reruns re-read the same
-    // bytes). File/full-line only — the driver-parsed short line stays
-    // total-only.
-    val ioJson = ioByQuery.map { case (k, (br, sw)) => s"\"" + k + s"\":[$br,$sw]" }
-      .mkString("{", ",", "}")
+    // per-query [scan_bytes, shuffle_bytes_written] and layers from the
+    // LAST run of each query (IO is deterministic per plan; reruns re-read
+    // the same bytes). scan_bytes counts file scans only: DSv2 CDC catalog
+    // scans carry no byte metric yet. File/full-line only — the short
+    // last line stays total-only.
+    val ioJson = snapByQuery.map { case (k, s) =>
+      s"\"" + k + s"\":[${s.scanBytes},${s.shuffleBytes}]"
+    }.mkString("{", ",", "}")
+    val layersJson = snapByQuery.map { case (k, s) =>
+      s"\"" + k + s"\":{\"jobs\":${s.jobs},\"stages\":${s.stages},\"tasks\":${s.tasks}," +
+        s"\"task_s\":${s.taskSec},\"plan_ms\":${s.planMs},\"driver_gap_ms\":${s.driverGapMs}}"
+    }.mkString("{", ",", "}")
     val total = math.rint(finalResults.map(_._2).filter(_ >= 0).sum * 10000) / 10000
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","load":$load,"load_warn":$loadWarn,"calib_sec":$calibSec,"calib_io_sec":$calibIoSec,"artifact_build_sec":$artifactSec,"retimed":$retimedJson,"queries":$qs,"io":$ioJson,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","load":$load,"load_warn":$loadWarn,"calib_sec":$calibSec,"calib_io_sec":$calibIoSec,"artifact_build_sec":$artifactSec,"retimed":$retimedJson,"queries":$qs,"io":$ioJson,"layers":$layersJson,"sf":"$sfDir"}"""
     // A TARGETED run (query-name args) must not clobber the full-run
     // snapshot: the next full run self-primes its outlier re-timing
     // against outFile, and a 2-query file would strip the baseline for

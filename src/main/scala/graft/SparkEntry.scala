@@ -19,7 +19,7 @@ object SparkEntry {
     * project over the event feed (SURVEY §7.2). */
   def entry(spark: SparkSession): DataFrame = {
     // The driver owns this session, so the events-table read conf is
-    // applied here (everywhere else it lives in the session builders).
+    // applied here (everywhere else GraftSession.local sets it).
     graft.tables.Tables.ensureNanosConf(spark)
     EventQueries.arcEventFilter(spark, "/root/testdata/sf0.001")
   }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,29 +9,7 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     val only            = args.drop(2).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // One-file-per-bucket is guaranteed by the warehouse writer
-      // (repartition-by-bucket-hash before bucketBy), so the reader may
-      // trust per-file sortBy order and SMJ over co-bucketed twins skips
-      // its Sorts too (Spark 3+ keeps this behind the legacy flag after
-      // SPARK-28595 because generic writers can't promise 1 file/bucket).
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      // Session artifacts (bucketed twins) are per-run: a FRESH warehouse
-      // dir per JVM, or saveAsTable collides with a previous run's orphan
-      // location (catalog is in-memory, the default ./spark-warehouse is
-      // not).
-      .config("spark.sql.warehouse.dir",
-        Files.createTempDirectory("graft_warehouse").toString)
-      // The engine's own V2 catalog: partitioned CDC stores served as
-      // bucket-reporting tables (storage-partitioned joins; sources/cdc)
-      .config("spark.sql.catalog.graft", "graft.sources.cdc.CdcCatalog")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus.toInt, "graft-verify")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter { case (n, _) => only.isEmpty || only(n) }.foreach { case (name, fn) =>

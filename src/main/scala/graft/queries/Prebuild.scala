@@ -4,8 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 import graft.tables.Tables
 
-/** One combined concurrent artifact phase for the session mains (Bench,
-  * ProfileQueries): the LLM-index units and the core/CDC units share one
+/** One combined concurrent artifact phase for the bench session: the
+  * LLM-index units and the core/CDC units share one
   * pool instead of running as two sequential phases, so the second
   * phase's builds back-fill the first's straggler tail (guide §2.6 —
   * r22: the tail of the LLM phase left the pool near-idle for its last

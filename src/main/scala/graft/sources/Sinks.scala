@@ -4,14 +4,12 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
-/** Sink surface (SURVEY.md §2.A A9/A10): partitioned batched emit and
-  * dead-letter routing.
+/** Sink surface (SURVEY.md §2.A A9): partitioned batched emit.
   *
   * The reference forwards surviving events downstream partition-keyed by
   * document id in bounded put_records batches; the Spark-native equivalent
   * is a keyed repartition + partitioned write (batch) or foreachBatch
-  * (streaming), with the corrupt-record split routed to a dead-letter
-  * location instead of being dropped.
+  * (streaming).
   */
 object Sinks {
 
@@ -24,22 +22,6 @@ object Sinks {
       .mode("overwrite")
       .partitionBy(partitionCol)
       .parquet(path)
-
-  /** A10: split a decoded stream on corruption and emit both sides — the
-    * main output and the dead-letter queue. `corruptCol` is any boolean
-    * marker column (e.g. parsed-struct IS NULL). */
-  def writeWithDeadLetter(
-      df: DataFrame,
-      corrupt: org.apache.spark.sql.Column,
-      mainPath: String,
-      dlqPath: String
-  ): Unit = {
-    val marked = df.withColumn("__is_corrupt", corrupt).cache()
-    try {
-      marked.filter(!col("__is_corrupt")).drop("__is_corrupt").write.mode("overwrite").parquet(mainPath)
-      marked.filter(col("__is_corrupt")).drop("__is_corrupt").write.mode("overwrite").parquet(dlqPath)
-    } finally marked.unpersist()
-  }
 
   /** Compact a directory of small files into ~`targetBytes` outputs —
     * streaming sinks produce a file per micro-batch per partition, and at
@@ -230,9 +212,10 @@ object Sinks {
       .option("compression", "gzip")
       .json(path)
 
-  /** Streaming form: foreachBatch applies the same split per micro-batch —
-    * the exactly-once contract comes from the checkpoint + idempotent
-    * (overwrite-by-batch-path) writes. */
+  /** Streaming split on corruption: foreachBatch writes each micro-batch's
+    * rows to the main output and its `corrupt` rows to the dead-letter
+    * queue — the exactly-once contract comes from the checkpoint +
+    * idempotent (overwrite-by-batch-path) writes. */
   def streamWithDeadLetter(
       df: DataFrame,
       corrupt: org.apache.spark.sql.Column,

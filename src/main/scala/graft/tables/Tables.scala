@@ -111,7 +111,7 @@ object Tables {
     *    instant type they expect.
     *
     * The `nanosAsLong` flag is session configuration, not per-query state:
-    * it is set where sessions are built (Verify/Bench/TestSpark builders,
+    * it is set where sessions are built ([[graft.GraftSession.local]], and
     * [[graft.SparkEntry.entry]] for the driver-owned session) so query
     * functions stay side-effect-free (SURVEY §7.5). [[ensureNanosConf]] is
     * that one idempotent knob; it is harmless when the fixture is µs. */

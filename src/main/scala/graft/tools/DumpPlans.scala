@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev artifact generator: dumps `explain("formatted")` physical plans of
   * the headline queries to PLANS.md — committed plan evidence for the
   * shapes the test suite pins (broadcasts broadcast, top-k avoids global
@@ -57,20 +55,7 @@ object DumpPlans {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out   = args.lift(1).getOrElse("PLANS.md")
     val names = if (args.length > 2) args.drop(2).toSeq else Headline
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
-      // The engine's own V2 catalog: partitioned CDC stores served as
-      // bucket-reporting tables (storage-partitioned joins; sources/cdc)
-      .config("spark.sql.catalog.graft", "graft.sources.cdc.CdcCatalog")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .getOrCreate()
+    val spark = graft.GraftSession.local(4, "graft-dumpplans")
     spark.sparkContext.setLogLevel("ERROR")
     val sb = new StringBuilder
     sb.append("# Headline physical plans\n\n")

@@ -512,11 +512,18 @@ class PlanSpec extends AnyFunSuite {
     assert(!pe.contains("SortMergeJoin"), "PRF dim join degraded to SMJ")
   }
 
-  test("every registered query compiles to a physical plan") {
-    SparkEntry.queries.foreach { case (name, fn) =>
-      val df = fn(spark, sf)
-      assert(df.queryExecution.executedPlan != null, s"$name failed to plan")
+  /** The whole board planned once, shared by the two board-wide laws
+    * below: each query's executed plan string, or why it failed to plan. */
+  private lazy val boardPlans: Seq[(String, scala.util.Try[String])] =
+    SparkEntry.queries.toSeq.map { case (name, fn) =>
+      name -> scala.util.Try(fn(spark, sf).queryExecution.executedPlan.toString)
     }
+  private def unplanned: Seq[String] = boardPlans.collect {
+    case (name, scala.util.Failure(e)) => s"$name: $e"
+  }
+
+  test("every registered query compiles to a physical plan") {
+    assert(unplanned.isEmpty, s"failed to plan: ${unplanned.mkString("; ")}")
   }
 
   test("no registered query plans a CartesianProduct — anywhere, ever") {
@@ -527,11 +534,12 @@ class PlanSpec extends AnyFunSuite {
     // construction), but a CartesianProduct means two data-sized sides
     // crossed — at 100 TB that plan never finishes. Even the explicit
     // cross join (c08) rides a broadcast of the 5-row dim.
-    val offenders = SparkEntry.queries.toSeq.flatMap { case (name, fn) =>
-      val p = fn(spark, sf).queryExecution.executedPlan.toString
-      if (p.contains("CartesianProduct")) Some(name) else None
+    val offenders = boardPlans.collect {
+      case (name, scala.util.Success(p)) if p.contains("CartesianProduct") => name
     }
-    assert(offenders.isEmpty, s"CartesianProduct planned in: $offenders")
+    // a query that cannot plan cannot be cleared of the shape either
+    assert(unplanned.isEmpty && offenders.isEmpty,
+      s"CartesianProduct planned in: $offenders; failed to plan: ${unplanned.mkString("; ")}")
   }
 
   test("r11 continuation wave keeps its scale shapes") {

@@ -5,29 +5,7 @@ import org.apache.spark.sql.SparkSession
 /** Shared local SparkSession for all suites (one forked test JVM). */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession
-      .builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // One-file-per-bucket is guaranteed by the warehouse writer
-      // (repartition-by-bucket-hash before bucketBy), so the reader may
-      // trust per-file sortBy order and SMJ over co-bucketed twins skips
-      // its Sorts too (Spark 3+ keeps this behind the legacy flag after
-      // SPARK-28595 because generic writers can't promise 1 file/bucket).
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .config(
-        "spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_warehouse").toString
-      )
-      // The engine's own V2 catalog: partitioned CDC stores served as
-      // bucket-reporting tables (storage-partitioned joins; sources/cdc)
-      .config("spark.sql.catalog.graft", "graft.sources.cdc.CdcCatalog")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .getOrCreate()
+    val s = GraftSession.local(4, "graft-tests")
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -657,7 +657,7 @@ class CdcSpec extends AnyFunSuite {
   }
 
   /** Total input records read by the jobs `action` runs (listener-fed,
-    * so poll until the task stream quiets before reading). */
+    * so drain the listener bus before reading). */
   private def recordsReadDuring(action: => Unit): Long = {
     val reads = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -669,14 +669,7 @@ class CdcSpec extends AnyFunSuite {
     spark.sparkContext.addSparkListener(listener)
     try {
       action
-      var last = -1
-      var stable = 0
-      var waited = 0
-      while (stable < 3 && waited < 100) {
-        Thread.sleep(100)
-        waited += 1
-        if (reads.size == last) stable += 1 else { stable = 0; last = reads.size }
-      }
+      org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
       reads.toArray(Array.empty[java.lang.Long]).map(_.longValue).sum
     } finally spark.sparkContext.removeSparkListener(listener)
   }

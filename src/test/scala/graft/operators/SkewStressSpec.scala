@@ -3,7 +3,7 @@ package graft.operators
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftBridge}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -31,8 +31,8 @@ class SkewStressSpec extends AnyFunSuite {
   import spark.implicits._
 
   /** Max shuffle-read records of any task spawned by `action`. Listener
-    * events are posted asynchronously; poll until the task stream goes
-    * quiet (bounded wait) before reading the max. */
+    * events are posted asynchronously; drain the listener bus before
+    * reading the max. */
   private def maxTaskShuffleRead(action: => Unit): Long = {
     val reads = new ConcurrentLinkedQueue[Long]()
     val listener = new SparkListener {
@@ -44,14 +44,7 @@ class SkewStressSpec extends AnyFunSuite {
     spark.sparkContext.addSparkListener(listener)
     try {
       action
-      var last = -1
-      var stable = 0
-      var waited = 0
-      while (stable < 3 && waited < 100) { // quiet = size unchanged 3 polls
-        Thread.sleep(100)
-        waited += 1
-        if (reads.size == last) stable += 1 else { stable = 0; last = reads.size }
-      }
+      GraftBridge.drainListenerBus(spark)
       reads.toArray(Array.empty[java.lang.Long]).map(_.longValue).foldLeft(0L)(math.max)
     } finally spark.sparkContext.removeSparkListener(listener)
   }

@@ -1373,11 +1373,9 @@ class CdcCatalogSpec extends AnyFunSuite {
       def jobsIn(group: String)(body: => Unit): Int = {
         sc.setJobGroup(group, group, interruptOnCancel = false)
         try body finally sc.clearJobGroup()
-        // the status tracker is listener-fed (async): poll until stable
-        var last = -1; var cur = sc.statusTracker.getJobIdsForGroup(group).length
-        while (cur != last) { last = cur; Thread.sleep(300)
-          cur = sc.statusTracker.getJobIdsForGroup(group).length }
-        cur
+        // the status tracker is listener-fed (async): drain the bus first
+        org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
+        sc.statusTracker.getJobIdsForGroup(group).length
       }
       // RESOLUTION (loadTable + schema + analysis) is job-free: the
       // metadata computation is deferred past the logical plan. (Physical

@@ -1,7 +1,11 @@
 package graft.sources.cdc
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftBridge}
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -39,6 +43,28 @@ class CdcRowLevelSpec extends AnyFunSuite {
   private def rows(df: DataFrame): Set[(Long, String, Double)] =
     df.select("k", "name", "bal").as[(Long, String, Double)].collect().toSet
 
+  /** The CDC scans in the executed plans of every query `action` runs,
+    * read off the execution listener once the listener bus has drained. */
+  private def cdcScansDuring(action: => Unit): List[CdcScan] = {
+    @volatile var captured = List.empty[CdcScan]
+    def scansIn(p: SparkPlan): Seq[CdcScan] = p.collect {
+      case b: BatchScanExec => Seq(b.scan).collect { case s: CdcScan => s }
+      case a: AdaptiveSparkPlanExec => scansIn(a.executedPlan)
+      case q: QueryStageExec => scansIn(q.plan)
+    }.flatten
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        captured = scansIn(qe.executedPlan).toList ++ captured
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      action
+      GraftBridge.drainListenerBus(spark)
+      captured
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   test("UPDATE with an arbitrary predicate rewrites matched rows as one MERGE version") {
     val store = freshStore("upd")
     CdcCatalog.register("rlo_upd", store, keys, n)
@@ -61,34 +87,15 @@ class CdcRowLevelSpec extends AnyFunSuite {
   test("a key-pinned UPDATE statically prunes the target scan to the key's bucket") {
     val store = freshStore("updpt")
     CdcCatalog.register("rlo_updpt", store, keys, n)
-    @volatile var captured = List.empty[CdcScan]
-    def scansIn(p: org.apache.spark.sql.execution.SparkPlan): Seq[CdcScan] = p.collect {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-        Seq(b.scan).collect { case s: CdcScan => s }
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => scansIn(a.executedPlan)
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => scansIn(q.plan)
-    }.flatten
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
-          d: Long): Unit = captured = scansIn(qe.executedPlan).toList ++ captured
-      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
-          e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
     try {
-      spark.sql("UPDATE graft.rlo_updpt SET bal = 0.0 WHERE k = 7")
+      val captured = cdcScansDuring(spark.sql("UPDATE graft.rlo_updpt SET bal = 0.0 WHERE k = 7"))
       assert(rows(spark.table("graft.rlo_updpt")).contains((7L, "orig7", 0.0)))
-      var waited = 0
-      while (captured.isEmpty && waited < 30000) { Thread.sleep(200); waited += 200 }
       assert(captured.nonEmpty, "no target scan captured")
       // the static k=7 conjunct pushed into the row-level scan builder:
       // ONE bucket planned (the description carries buckets=planned/total)
       val d7 = captured.map(_.description()).find(_.contains("buckets=1/"))
       assert(d7.isDefined, s"expected a 1-bucket scan, got ${captured.map(_.description())}")
-    } finally {
-      CdcCatalog.unregister("rlo_updpt")
-      spark.listenerManager.unregister(listener)
-    }
+    } finally CdcCatalog.unregister("rlo_updpt")
   }
 
   test("an UPDATE that moves the key retires the old identity and lands the new") {
@@ -137,38 +144,22 @@ class CdcRowLevelSpec extends AnyFunSuite {
     // DeltaDmlRuntimeFiltering must SKIP: pruning target buckets by the
     // source's keys would hide exactly the rows NOT MATCHED BY SOURCE
     // exists to see. Capture the target scans to prove no panel landed.
-    @volatile var captured = List.empty[CdcScan]
-    def scansIn(p: org.apache.spark.sql.execution.SparkPlan): Seq[CdcScan] = p.collect {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-        Seq(b.scan).collect { case s: CdcScan => s }
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => scansIn(a.executedPlan)
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => scansIn(q.plan)
-    }.flatten
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
-          d: Long): Unit = captured = scansIn(qe.executedPlan).toList ++ captured
-      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
-          e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
     try {
       // source: updates 1-2, keeps 3-5 verbatim, adds 50; everything else
       // in the 40-row target is absent from the source
       val src = Seq((1L, "s1", 101.0), (2L, "s2", 102.0), (50L, "s50", 500.0)) ++
         (3L to 5L).map(k => (k, s"orig$k", k * 1.0))
       src.toDF("k", "name", "bal").createOrReplaceTempView("rlo_sync_src")
-      spark.sql("""
+      val captured = cdcScansDuring(spark.sql("""
         MERGE INTO graft.rlo_sync t USING rlo_sync_src s ON t.k = s.k
         WHEN MATCHED THEN UPDATE SET t.name = s.name, t.bal = s.bal
         WHEN NOT MATCHED THEN INSERT (k, name, bal) VALUES (s.k, s.name, s.bal)
-        WHEN NOT MATCHED BY SOURCE THEN DELETE""")
+        WHEN NOT MATCHED BY SOURCE THEN DELETE"""))
       assert(Cdc.manifestVersions(spark, store).sorted === Seq(0L, 1L),
         "sync-merge must commit exactly one version")
       assert(rows(spark.table("graft.rlo_sync")) === src.toSet,
         "sync-merge result must equal the source snapshot")
       // the target scans of the by-source rewrite carried NO runtime panel
-      var waited = 0
-      while (captured.isEmpty && waited < 30000) { Thread.sleep(200); waited += 200 }
       assert(captured.nonEmpty, "no target scan captured")
       assert(captured.forall(_.runtimePrunedBuckets.isEmpty),
         s"a by-source MERGE was runtime-pruned: ${captured.map(_.runtimePrunedBuckets)}")
@@ -179,10 +170,7 @@ class CdcRowLevelSpec extends AnyFunSuite {
       val got = rows(spark.table("graft.rlo_sync"))
       assert(got.contains((50L, "flagged", 500.0)), s"conditional by-source UPDATE missed: $got")
       assert(got.contains((1L, "s1", 101.0)), "the matched row must stay untouched")
-    } finally {
-      CdcCatalog.unregister("rlo_sync")
-      spark.listenerManager.unregister(listener)
-    }
+    } finally CdcCatalog.unregister("rlo_sync")
   }
 
   test("a MERGE that matches nothing is a no-op: no version minted") {
@@ -206,26 +194,12 @@ class CdcRowLevelSpec extends AnyFunSuite {
       .write.mode("overwrite").parquet(dimPath)
     spark.read.parquet(dimPath).createOrReplaceTempView("rlo_dpp_src")
     spark.conf.set("spark.sql.optimizer.dynamicPartitionPruning.useStats", "false")
-    // the command executes eagerly — capture its executed plan off the
-    // (async) execution listener and fish the target scan out of it
-    @volatile var captured = List.empty[CdcScan]
-    def scansIn(p: org.apache.spark.sql.execution.SparkPlan): Seq[CdcScan] = p.collect {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-        Seq(b.scan).collect { case s: CdcScan => s }
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => scansIn(a.executedPlan)
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => scansIn(q.plan)
-    }.flatten
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
-          d: Long): Unit = captured = scansIn(qe.executedPlan).toList ++ captured
-      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
-          e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
     try {
-      spark.sql("""MERGE INTO graft.rlo_dpp t
+      // the command executes eagerly — capture its executed plan off the
+      // execution listener and fish the target scan out of it
+      val captured = cdcScansDuring(spark.sql("""MERGE INTO graft.rlo_dpp t
         USING (SELECT k, nb FROM rlo_dpp_src WHERE tag = 'x') s ON t.k = s.k
-        WHEN MATCHED THEN UPDATE SET t.bal = s.nb""")
+        WHEN MATCHED THEN UPDATE SET t.bal = s.nb"""))
       // correctness first: pruning must stay layout advice
       val got = rows(spark.table("graft.rlo_dpp"))
       val expected = (1L to 40L).map {
@@ -236,20 +210,13 @@ class CdcRowLevelSpec extends AnyFunSuite {
       assert(got === expected)
       // then the scale law: the source's surviving keys arrived as a
       // runtime panel and dropped every bucket they don't hash to
-      var waited = 0
-      while (captured.forall(_.runtimePrunedBuckets.isEmpty) && waited < 30000) {
-        Thread.sleep(200); waited += 200
-      }
       val pruned = captured.flatMap(_.runtimePrunedBuckets).headOption
       assert(pruned.isDefined,
         s"the runtime panel never reached the MERGE target scan (captured ${captured.size} scans)")
       val want = Set(5L, 7L).map(k =>
         CdcScan.bucketOfLiterals(Seq(k -> org.apache.spark.sql.types.LongType), n))
       assert(pruned.get === want, s"pruned to ${pruned.get}, expected buckets $want")
-    } finally {
-      CdcCatalog.unregister("rlo_dpp")
-      spark.listenerManager.unregister(listener)
-    }
+    } finally CdcCatalog.unregister("rlo_dpp")
   }
 
   test("version-pinned tables refuse row-level DML loudly") {
