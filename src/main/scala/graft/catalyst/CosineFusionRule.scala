@@ -17,8 +17,7 @@ import org.apache.spark.sql.types.DoubleType
   * The rewrite is semantics-preserving bit-for-bit: the native expression
   * accumulates in the same index order (CosineExpressionSpec).
   *
-  * Registered via `GraftExtensions` (`injectOptimizerRule`) or appended to
-  * `spark.experimental.extraOptimizations` by
+  * Appended to `spark.experimental.extraOptimizations` by
   * [[GraftExtensions.register]].
   */
 object CosineFusionRule extends Rule[LogicalPlan] {

@@ -33,8 +33,8 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
   * planning instead of running twice. Pruning stays layout advice: the
   * join still re-checks every key on the rows that survive.
   *
-  * Registered through [[GraftExtensions]]; the register() path lands in
-  * the optimizer's final user batch, where the subquery feeds straight
+  * Registered by [[GraftExtensions.register]], which lands it in the
+  * optimizer's final user batch, where the subquery feeds straight
   * into physical planning's dynamic-pruning machinery (the same
   * `BatchScanExec.filter` path the catalog's DPP law pins). */
 object DeltaDmlRuntimeFiltering extends Rule[LogicalPlan] with PredicateHelper {

@@ -1,32 +1,14 @@
 package graft.catalyst
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** Session extensions for the engine's native Catalyst pieces. Activate
-  * with `spark.sql.extensions=graft.catalyst.GraftExtensions`, or call
-  * [[GraftExtensions.register]] on an already-built session (the driver
-  * harness builds its own sessions, so query code uses the latter).
+/** The engine's native Catalyst pieces — SQL functions and optimizer
+  * rules — installed on an already-built session by
+  * [[GraftExtensions.register]] (the driver harness builds its own
+  * sessions, so every caller registers after the fact).
   */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(GraftExtensions.gunzipDescriptor)
-    ext.injectFunction(GraftExtensions.gunzipJsonDescriptor)
-    ext.injectFunction(GraftExtensions.cosineDescriptor)
-    ext.injectFunction(GraftExtensions.l2DistDescriptor)
-    ext.injectFunction(GraftExtensions.morton3Descriptor)
-    ext.injectFunction(GraftExtensions.sigAgreementDescriptor)
-    ext.injectFunction(GraftExtensions.lshBucketDescriptor)
-    ext.injectFunction(GraftExtensions.interleaveBitsDescriptor)
-    ext.injectFunction(GraftExtensions.bloomAggDescriptor)
-    ext.injectFunction(GraftExtensions.mightContainDescriptor)
-    ext.injectOptimizerRule(_ => CosineFusionRule)
-    ext.injectOptimizerRule(_ => DeltaDmlRuntimeFiltering)
-  }
-}
-
 object GraftExtensions {
 
   private[catalyst] val gunzipDescriptor

@@ -19,7 +19,7 @@ import graft.catalyst.GraftExtensions
   * the corpus keys answers "definitely new" with zero false negatives, so
   * only the `might_contain` hits (true duplicates + the εn false
   * positives) ever reach the exact join. The sketch is Spark's own
-  * runtime-filter aggregate (registered via [[GraftExtensions]]): built
+  * runtime-filter aggregate (registered by [[GraftExtensions.register]]): built
   * with map-side partial merges in one corpus pass, OR-merge associative
   * and commutative, so the artifact is also incrementally maintainable —
   * OR in each new shard's sketch instead of rebuilding (no deletes, which

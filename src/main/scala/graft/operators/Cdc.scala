@@ -148,22 +148,6 @@ object Cdc {
     def physBucket(bucket: Int): Int = baseMod.fold(bucket)(m => bucket % m)
   }
 
-  /** Per-version payload schema (DDL text under `schema/v=<id>`), written
-    * just before the manifest commit so every COMMITTED version carries
-    * one. This is what makes ADDITIVE EVOLUTION serveable: buckets carried
-    * by reference keep their old files, so a post-evolution snapshot mixes
-    * parquet files with and without the new columns — reading them under
-    * the version's recorded schema fills the absent columns with NULL
-    * (plain parquet schema-on-read), no footer-merging pass, no rewrite of
-    * untouched data. None for stores written before schemas were recorded
-    * (their schema is uniform by construction, so the file-derived read
-    * stays correct). */
-  private[operators] def storedSchema(
-      spark: org.apache.spark.sql.SparkSession,
-      storePath: String,
-      v: Long): Option[org.apache.spark.sql.types.StructType] =
-    storedMeta(spark, storePath, v).map(_.schema)
-
   /** A version's full schema metadata: the LOGICAL payload schema the
     * version serves, the COLUMN MAPPING from logical names to the
     * physical names stored in parquet files (entries only for columns
@@ -259,26 +243,30 @@ object Cdc {
         mkeys, mBuckets)
     }
 
+  /** A version's recorded metadata. Per-version payload schema, written
+    * just before the manifest commit so every COMMITTED version carries
+    * one: this is what makes ADDITIVE EVOLUTION serveable — buckets
+    * carried by reference keep their old files, and reading them under
+    * the version's recorded schema fills the absent columns with NULL
+    * (plain parquet schema-on-read, no footer merge, no rewrite). None
+    * for stores written before schemas were recorded (their schema is
+    * uniform by construction, so the file-derived read stays correct). */
   private[graft] def storedMeta(
       spark: org.apache.spark.sql.SparkSession,
       storePath: String,
       v: Long): Option[StoreMeta] = {
     val dir = new org.apache.hadoop.fs.Path(s"${schemaPath(storePath)}/v=$v")
     val fs  = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // the schema EMBEDDED in the committed manifest dir is AUTHORITATIVE
-    // when present: CAS commits ([[commitCas]]) rename it atomically with
-    // the manifest, while the sidecar dir can be a stale leftover of a
-    // crashed earlier (non-CAS) attempt at the same id — preferring the
-    // sidecar would serve the crashed attempt's schema for a committed
-    // version in the window before the winner's sidecar overwrite
-    val embedded = new org.apache.hadoop.fs.Path(
-      s"${manifestPath(storePath)}/v=$v/_schema.ddl")
-    if (fs.exists(embedded)) {
-      val buf = new Array[Byte](fs.getFileStatus(embedded).getLen.toInt)
-      val in = fs.open(embedded)
-      try in.readFully(0, buf) finally in.close()
-      Some(parseMetaLine(new String(buf, java.nio.charset.StandardCharsets.UTF_8)))
-    } else if (fs.exists(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"))) {
+    // the metadata EMBEDDED in a CAS-committed manifest dir is
+    // AUTHORITATIVE: commitCas renames it atomically with the manifest,
+    // while the sidecar dir can be a stale leftover of a crashed earlier
+    // (non-CAS) attempt at the same id — preferring the sidecar would
+    // serve the crashed attempt's schema for a committed version in the
+    // window before the winner's sidecar overwrite
+    if (isCasCommit(spark, storePath, v))
+      Some(parseMetaLine(readUtf8(fs,
+        new org.apache.hadoop.fs.Path(s"${manifestPath(storePath)}/v=$v/$CasMetaFile"))))
+    else if (fs.exists(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"))) {
       // r22: read the one-line sidecar DRIVER-SIDE — spark.read.text spun
       // up a whole Spark job (scheduling >> the few hundred bytes read)
       // on every meta lookup of a streaming-committed store
@@ -289,12 +277,33 @@ object Cdc {
         .headOption
         .getOrElse(throw new IllegalStateException(
           s"schema sidecar $dir carries _SUCCESS but no data file"))
-      val buf = new Array[Byte](part.getLen.toInt)
-      val in = fs.open(part.getPath)
-      try in.readFully(0, buf) finally in.close()
-      val text = new String(buf, java.nio.charset.StandardCharsets.UTF_8)
-      Some(parseMetaLine(text.linesIterator.next()))
+      Some(parseMetaLine(readUtf8(fs, part.getPath).linesIterator.next()))
     } else None
+  }
+
+  /** The metadata file [[commitCas]] embeds inside the manifest dir it
+    * renames onto `v=<id>`. Only CAS commits write it. */
+  private val CasMetaFile = "_schema.ddl"
+
+  /** COMMIT PROVENANCE: whether `v` was committed through [[commitCas]]
+    * (batch DML, compaction, splits, metadata-only commits) rather than
+    * by a streaming epoch — provable on disk because only commitCas
+    * lands [[CasMetaFile]] inside the manifest dir. The one place that
+    * knows how that is marked: the stream's version reservation, its
+    * mixed-mode guards and the catalog's streaming write all ask here. */
+  private[graft] def isCasCommit(
+      spark: org.apache.spark.sql.SparkSession, storePath: String, v: Long): Boolean = {
+    val marker = new org.apache.hadoop.fs.Path(s"${manifestPath(storePath)}/v=$v/$CasMetaFile")
+    marker.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(marker)
+  }
+
+  /** A small metadata file's whole content, decoded as UTF-8. */
+  private def readUtf8(
+      fs: org.apache.hadoop.fs.FileSystem, p: org.apache.hadoop.fs.Path): String = {
+    val buf = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
+    val in = fs.open(p)
+    try in.readFully(0, buf) finally in.close()
+    new String(buf, java.nio.charset.StandardCharsets.UTF_8)
   }
 
   /** Write the one-line schema sidecar dir driver-side, in exactly the
@@ -327,19 +336,19 @@ object Cdc {
       StructField("_writer", LongType, nullable = true)))
   }
 
-  /** Read bucket directories of version `v` under that version's recorded
-    * schema when one exists (nulls for columns predating the files), or
-    * file-derived schema for pre-evolution stores. Files are read under
-    * their PHYSICAL column names and served under the version's LOGICAL
-    * names (column mapping — renames never rewrote them). Returns payload
-    * columns only (`_bucket`/`_writer` dropped). */
+  /** Read bucket directories under the serving version's recorded
+    * metadata `meta` when one exists (nulls for columns predating the
+    * files), or file-derived schema for pre-evolution stores. Files are
+    * read under their PHYSICAL column names and served under the
+    * version's LOGICAL names (column mapping — renames never rewrote
+    * them). Returns payload columns only (`_bucket`/`_writer` dropped). */
   private def readBucketDirs(
       spark: org.apache.spark.sql.SparkSession,
       storePath: String,
       dirs: Seq[String],
-      v: Long): DataFrame = {
+      meta: Option[StoreMeta]): DataFrame = {
     val base = spark.read.option("basePath", partsPath(storePath))
-    storedMeta(spark, storePath, v) match {
+    meta match {
       case None =>
         base.parquet(dirs: _*).drop("_bucket", "_writer")
       case Some(m) =>
@@ -349,18 +358,17 @@ object Cdc {
     }
   }
 
-  /** Read merge-on-read DELTA directories of version `v`: like
-    * [[readBucketDirs]] (physical→logical names, recorded-schema NULL
-    * fill) plus the delta files' `_cdc_op` tombstone column, served as
-    * `__mor_op`. */
+  /** Read merge-on-read DELTA directories: like [[readBucketDirs]]
+    * (physical→logical names, recorded-schema NULL fill) plus the delta
+    * files' `_cdc_op` tombstone column, served as `__mor_op`. */
   private def readDeltaDirs(
       spark: org.apache.spark.sql.SparkSession,
       storePath: String,
       dirs: Seq[String],
-      v: Long): DataFrame = {
+      meta: Option[StoreMeta]): DataFrame = {
     import org.apache.spark.sql.types.{StringType, StructField, StructType}
     val base = spark.read.option("basePath", partsPath(storePath))
-    storedMeta(spark, storePath, v) match {
+    meta match {
       case None =>
         base.parquet(dirs: _*).drop("_bucket", "_writer")
           .withColumnRenamed(DeltaOpCol, "__mor_op")
@@ -388,6 +396,8 @@ object Cdc {
       spark: org.apache.spark.sql.SparkSession,
       storePath: String,
       v: Long,
+      /** `v`'s recorded metadata, resolved once by the caller. */
+      meta: Option[StoreMeta],
       entries: Seq[(Int, BucketEntry)],
       keys: Seq[String],
       /** Optional predicate over the MERGE KEY columns only (a bounded
@@ -404,7 +414,8 @@ object Cdc {
         * contain lazily-split children (`baseMod` set): their parent-file
         * rows slice to each child by `hash mod nBuckets`. */
       nBuckets: Int = 0): DataFrame = {
-    require(entries.nonEmpty, "readResolvedBuckets needs at least one bucket entry")
+    if (entries.isEmpty)
+      throw new IllegalStateException(s"snapshot v=$v is empty (all buckets deleted)")
     def sliced(df: DataFrame): DataFrame = keyFilter.fold(df)(df.filter)
     if (entries.exists(_._2.baseMod.isDefined)) {
       require(keys.nonEmpty,
@@ -424,14 +435,14 @@ object Cdc {
       val nativeDf = {
         val dirs = native.sortBy(_._1)
           .flatMap { case (p, e) => e.base.map(bucketDir(storePath, p, _)) }
-        if (dirs.isEmpty) None else Some(readBucketDirs(spark, storePath, dirs, v))
+        if (dirs.isEmpty) None else Some(readBucketDirs(spark, storePath, dirs, meta))
       }
       val legacyDf = {
         val dirs = legacy.sortBy(_._1)
           .flatMap { case (p, e) => e.base.map(w => bucketDir(storePath, e.physBucket(p), w)) }
           .distinct
         if (dirs.isEmpty) None
-        else Some(readBucketDirs(spark, storePath, dirs, v)
+        else Some(readBucketDirs(spark, storePath, dirs, meta)
           .filter(bucketExpr(keys, nBuckets).isin(legacy.map(_._1): _*)))
       }
       (nativeDf, legacyDf) match {
@@ -458,7 +469,7 @@ object Cdc {
             case (p, e) if e.deltas.length > i => bucketDir(storePath, p, e.deltas(i))
           }
           if (dirs.isEmpty) None
-          else Some(sliced(readDeltaDirs(spark, storePath, dirs, v))
+          else Some(sliced(readDeltaDirs(spark, storePath, dirs, meta))
             .withColumn("__mor_seq", lit(i + 1)))
         }
         val all = (baseDf.toSeq ++ levels).reduce(_.unionByName(_))
@@ -488,6 +499,37 @@ object Cdc {
     * stored in the data, so the payload schema stays exactly the user's. */
   def bucketExpr(keys: Seq[String], nBuckets: Int): Column =
     pmod(xxhash64(keys.map(col): _*), lit(nBuckets.toLong)).cast("int")
+
+  /** [[bucketExpr]] over literal key values, driver-side, evaluated
+    * through Catalyst's own XxHash64 — what point lookups and the
+    * catalog scan's bucket pruning hash their key panels with. Accepts
+    * both EXTERNAL values (rows, v1 Filter literals: String,
+    * java.sql.Date) and INTERNAL ones (V2 runtime predicates:
+    * UTF8String, epoch-day Int). */
+  private[graft] def bucketOfLiterals(
+      values: Seq[(Any, org.apache.spark.sql.types.DataType)], nBuckets: Int): Int = {
+    import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
+    val lits = values.map {
+      case (u: org.apache.spark.unsafe.types.UTF8String, t) => Literal(u, t)
+      case (i: Integer, t) if t == org.apache.spark.sql.types.DateType => Literal(i, t)
+      case (v, t) => Literal.create(v, t)
+    }
+    val m = XxHash64(lits, 42L).eval(null).asInstanceOf[Long] % nBuckets
+    (if (m < 0) m + nBuckets else m).toInt
+  }
+
+  /** Refuse layout arguments that disagree with what the store RECORDED:
+    * a wrong nBuckets silently writes rows into (or looks them up in)
+    * buckets no reader's hash agrees with; wrong keys silently merge
+    * distinct identities. Stores that recorded neither pass. */
+  private def requireLayout(
+      meta: StoreMeta, storePath: String, keys: Seq[String], nBuckets: Int): Unit = {
+    meta.nBuckets.foreach(n => require(n == nBuckets,
+      s"nBuckets mismatch for $storePath: store is bucketed mod $n, caller passed $nBuckets"))
+    if (meta.keys.nonEmpty) require(meta.keys == keys,
+      s"merge-key mismatch for $storePath: store records (${meta.keys.mkString(",")}), " +
+        s"caller passed (${keys.mkString(",")})")
+  }
 
   /** STREAMING partition-scoped maintenance: exactly-once versioned
     * snapshots, last-writer-wins MERGE, with per-batch work proportional to the TOUCHED buckets, not the
@@ -635,27 +677,17 @@ object Cdc {
     var renameFailures = 0
     while (true) {
       if (fs.exists(f)) {
-        val in = fs.open(f)
-        val v =
-          try {
-            val buf = new java.io.ByteArrayOutputStream()
-            val b   = new Array[Byte](64)
-            var n   = in.read(b)
-            while (n >= 0) { buf.write(b, 0, n); n = in.read(b) }
-            java.lang.Long.parseLong(
-              new String(buf.toByteArray, java.nio.charset.StandardCharsets.UTF_8).trim)
-          } finally in.close()
+        val v = java.lang.Long.parseLong(readUtf8(fs, f).trim)
         // STALE-RESERVATION heal: if this batch crashed BETWEEN reserving
         // and committing, an out-of-band CAS commit (split, compaction,
         // DML) may have legitimately taken the reserved slot in the
-        // meantime. That case is provable — our own streaming commit
-        // never lands `_schema.ddl` inside the manifest dir, commitCas
-        // always does — and nothing of ours is at v (a committed batch
-        // would hold the slot WITHOUT the marker), so re-reserving past
-        // it is safe and un-wedges the stream; without this the replay
-        // would hit the mixed-mode guard's loud refusal forever.
+        // meantime. That case is provable ([[isCasCommit]]) and nothing
+        // of ours is at v (a committed batch of ours would be a non-CAS
+        // commit), so re-reserving past it is safe and un-wedges the
+        // stream; without this the replay would hit the mixed-mode
+        // guard's loud refusal forever.
         val taken = manifestVersions(spark, storePath).contains(v) &&
-          fs.exists(new Path(s"${manifestPath(storePath)}/v=$v/_schema.ddl"))
+          isCasCommit(spark, storePath, v)
         if (!taken) return v
         fs.delete(f, false)
       } else {
@@ -760,16 +792,7 @@ object Cdc {
     val parentEntries: Map[Int, BucketEntry] =
       parent.map(v => readManifestFull(spark, storePath, v)).getOrElse(Map.empty)
     val parentMeta: Option[StoreMeta] = parent.flatMap(v => storedMeta(spark, storePath, v))
-    // layout arguments are validated against what the store RECORDED: a
-    // wrong nBuckets silently writes rows into buckets no reader's hash
-    // would ever look in; wrong keys silently merge distinct identities
-    for (m <- parentMeta) {
-      m.nBuckets.foreach(n => require(n == nBuckets,
-        s"nBuckets mismatch for $storePath: store is bucketed mod $n, caller passed $nBuckets"))
-      if (m.keys.nonEmpty) require(m.keys == keys,
-        s"merge-key mismatch for $storePath: store records (${m.keys.mkString(",")}), " +
-          s"caller passed (${keys.mkString(",")})")
-    }
+    parentMeta.foreach(requireLayout(_, storePath, keys, nBuckets))
     val priorSchema = parentMeta.map(_.schema).getOrElse(seed.schema)
     require(!priorSchema.fieldNames.contains(DeltaOpCol) && !batch.columns.contains(DeltaOpCol),
       s"$DeltaOpCol is a reserved layout column name (merge-on-read tombstone marker)")
@@ -819,10 +842,7 @@ object Cdc {
     // below, at its original copy-on-write call site.)
     if (!casCommit) {
       if (manifestVersions(spark, storePath).contains(id)) {
-        val fsg = new org.apache.hadoop.fs.Path(storePath)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fsg.exists(new org.apache.hadoop.fs.Path(
-            s"${manifestPath(storePath)}/v=$id/_schema.ddl")))
+        if (isCasCommit(spark, storePath, id))
           throw new IllegalStateException(
             s"streaming replay of v=$id would overwrite a BATCH-DML (CAS) commit: the " +
               s"store's version line at $storePath moved while the stream was down — " +
@@ -856,8 +876,8 @@ object Cdc {
         // byte-equivalent to the all-CoW history
         val touchedSnap =
           if (touchedEntries.isEmpty) conformTo(seed.limit(0), target)
-          else conformTo(readResolvedBuckets(spark, storePath, v, touchedEntries, keys,
-            nBuckets = nBuckets), target)
+          else conformTo(readResolvedBuckets(spark, storePath, v, parentMeta, touchedEntries,
+            keys, nBuckets = nBuckets), target)
         (touchedSnap, parentEntries.view.filterKeys(p => !touchedBuckets.contains(p)).toMap)
     }
     // Stale-attempt hygiene: an EARLIER run of this same id (fresh
@@ -875,8 +895,8 @@ object Cdc {
     // the purge is only for genuinely uncommitted stale attempts.
     // (MIXED-MODE GUARD + purge ran above, before the mor dispatch: the
     // streaming path may only overwrite v=id as a REPLAY of its own
-    // earlier commit — a CAS commit at this slot is provable on disk via
-    // `_schema.ddl` inside the manifest dir and refuses loudly; a
+    // earlier commit — a CAS commit at this slot is provable on disk
+    // ([[isCasCommit]]) and refuses loudly; a
     // never-committed id's stale `_writer=<id>` dirs are purged so
     // listWrittenBuckets reflects exactly this attempt.)
     // ONE pass over delta + touched buckets; dynamic partition overwrite
@@ -1016,9 +1036,8 @@ object Cdc {
     if (fs.exists(dst)) {
       // commit-point re-check of the mixed-mode guard: the epoch-start
       // check ran before the (possibly long) merge job; a batch-DML
-      // statement may have committed this id since. Its _schema.ddl is
-      // the provenance — never delete it.
-      if (fs.exists(new org.apache.hadoop.fs.Path(dst, "_schema.ddl"))) {
+      // statement may have committed this id since — never delete it.
+      if (isCasCommit(spark, storePath, id)) {
         fs.delete(staging, true)
         throw new IllegalStateException(
           s"streaming commit of v=$id would overwrite a BATCH-DML (CAS) commit that " +
@@ -1124,7 +1143,7 @@ object Cdc {
       else {
         val deepEntries = deep.toSeq.sorted.flatMap(p => parentEntries.get(p).map(p -> _))
         val prior = conformTo(
-          readResolvedBuckets(spark, storePath, parentV, deepEntries, keys,
+          readResolvedBuckets(spark, storePath, parentV, parentMeta, deepEntries, keys,
             nBuckets = nBuckets), target)
         val deepBatch = batch.filter(bucketExpr(keys, nBuckets).isin(deep.toSeq: _*))
         val merged = upsert(prior, deepBatch, keys, orderCols, opCol)
@@ -1200,7 +1219,7 @@ object Cdc {
       storePath: String,
       from: String,
       to: String): Long = retryMetadataConflicts {
-    val (parentV, meta) = latestMeta(spark, storePath)
+    val (parentV, meta, parentEntries, _) = servingState(spark, storePath)
     require(meta.schema.fieldNames.contains(from), s"no column $from in ${meta.schema.toDDL}")
     require(!meta.schema.fieldNames.contains(to),
       s"column $to already exists — renames cannot merge columns")
@@ -1210,7 +1229,7 @@ object Cdc {
     // a renamed merge key stays the key under its new logical name (the
     // layout hash is over VALUES); the recorded keys follow the rename
     val newKeys = meta.keys.map(k => if (k == from) to else k)
-    commitMetadataOnly(spark, storePath, parentV, meta,
+    commitMetadataOnly(spark, storePath, parentV, parentEntries, meta,
       StoreMeta(renamed, meta.mapping - from ++ (if (phys == to) Nil else Seq(to -> phys)),
         meta.retired, mapChangeV = Some(parentV + 1), keys = newKeys,
         nBuckets = meta.nBuckets))
@@ -1232,13 +1251,13 @@ object Cdc {
       storePath: String,
       name: String,
       dataType: org.apache.spark.sql.types.DataType): Long = retryMetadataConflicts {
-    val (parentV, meta) = latestMeta(spark, storePath)
+    val (parentV, meta, parentEntries, _) = servingState(spark, storePath)
     require(!meta.schema.fieldNames.contains(name),
       s"column $name already exists in ${meta.schema.toDDL}")
     require(name != DeltaOpCol && name != "_bucket" && name != "_writer",
       s"$name is a reserved layout column name")
     val phys = mintPhysical(meta.usedPhysical, name)
-    commitMetadataOnly(spark, storePath, parentV, meta,
+    commitMetadataOnly(spark, storePath, parentV, parentEntries, meta,
       meta.copy(
         schema = org.apache.spark.sql.types.StructType(meta.schema.fields :+
           org.apache.spark.sql.types.StructField(name, dataType, nullable = true)),
@@ -1271,7 +1290,7 @@ object Cdc {
       name: String,
       to: org.apache.spark.sql.types.DataType): Long = retryMetadataConflicts {
     import org.apache.spark.sql.types.{DecimalType, DoubleType, FloatType, IntegerType, LongType}
-    val (parentV, meta) = latestMeta(spark, storePath)
+    val (parentV, meta, parentEntries, _) = servingState(spark, storePath)
     val f = meta.schema.fields.find(_.name == name).getOrElse(
       throw new IllegalArgumentException(s"no column $name in ${meta.schema.toDDL}"))
     val widening = (f.dataType, to) match {
@@ -1296,7 +1315,7 @@ object Cdc {
     for (regKeys <- mergeKeyRegistry.get(storePath))
       require(!regKeys.contains(name),
         s"cannot widen $name: a catalog registration for $storePath names it as a merge key")
-    commitMetadataOnly(spark, storePath, parentV, meta,
+    commitMetadataOnly(spark, storePath, parentV, parentEntries, meta,
       meta.copy(schema = org.apache.spark.sql.types.StructType(
         meta.schema.fields.map(x => if (x.name == name) x.copy(dataType = to) else x))))
   }
@@ -1351,13 +1370,12 @@ object Cdc {
       storePath: String,
       factor: Int = 2): Long = retryMetadataConflicts {
     require(factor >= 2, "splitBuckets needs factor >= 2")
-    val (parentV, meta) = latestMeta(spark, storePath)
+    val (parentV, meta, parentEntries, _) = servingState(spark, storePath)
     val oldN = meta.nBuckets.getOrElse(throw new IllegalStateException(
       s"$storePath records no bucket count (written before layout recording) — " +
         "commit one batch with the current maintenance API first"))
     require(meta.keys.nonEmpty,
       s"$storePath records no merge keys — the split's read-time slice needs them")
-    val parentEntries = readManifestFull(spark, storePath, parentV)
     val pendingDeltas = parentEntries.filter(_._2.deltas.nonEmpty).keys.toSeq.sorted
     require(pendingDeltas.isEmpty,
       s"splitBuckets refuses stores with pending merge-on-read deltas (buckets " +
@@ -1382,7 +1400,7 @@ object Cdc {
       name: String,
       keys: Seq[String] = Nil): Long = retryMetadataConflicts {
     require(!keys.contains(name), s"cannot drop merge key $name")
-    val (parentV, meta) = latestMeta(spark, storePath)
+    val (parentV, meta, parentEntries, _) = servingState(spark, storePath)
     require(!meta.keys.contains(name),
       s"cannot drop $name: the store records it as a merge key")
     for (regKeys <- mergeKeyRegistry.get(storePath))
@@ -1390,7 +1408,7 @@ object Cdc {
         s"cannot drop $name: a catalog registration for $storePath names it as a merge key")
     require(meta.schema.fieldNames.contains(name), s"no column $name in ${meta.schema.toDDL}")
     require(meta.schema.length > 1, "cannot drop the last column")
-    commitMetadataOnly(spark, storePath, parentV, meta,
+    commitMetadataOnly(spark, storePath, parentV, parentEntries, meta,
       StoreMeta(
         org.apache.spark.sql.types.StructType(meta.schema.fields.filterNot(_.name == name)),
         meta.mapping - name,
@@ -1444,16 +1462,6 @@ object Cdc {
   private[graft] def unregisterMergeKeys(storePath: String): Unit =
     mergeKeyRegistry.remove(storePath)
 
-  private def latestMeta(
-      spark: org.apache.spark.sql.SparkSession, storePath: String): (Long, StoreMeta) = {
-    val vs = manifestVersions(spark, storePath)
-    require(vs.nonEmpty, s"no committed snapshot under $storePath")
-    val v = vs.max
-    val meta = storedMeta(spark, storePath, v).getOrElse(
-      StoreMeta(readPartitionedSnapshot(spark, storePath, Some(v)).schema))
-    (v, meta)
-  }
-
   /** Commit a new version identical to `parentV` except for its schema
     * metadata: parent manifest entries carried verbatim (rows, colstats
     * and delta lists included — colstats are keyed by PHYSICAL name,
@@ -1465,9 +1473,9 @@ object Cdc {
       spark: org.apache.spark.sql.SparkSession,
       storePath: String,
       parentV: Long,
+      parentEntries: Map[Int, BucketEntry],
       parentMeta: StoreMeta,
       newMeta: StoreMeta): Long = {
-    val parentEntries = readManifestFull(spark, storePath, parentV)
     val entries = parentEntries.toSeq
       .map { case (p, e) =>
         // backfill only CLEAN NATIVE entries (same rule as the CoW
@@ -1497,8 +1505,8 @@ object Cdc {
   /** Compare-and-swap manifest commit: stage the manifest parquet under a
     * token-unique `_attempt_w=<token>` dir (underscore-prefixed —
     * invisible to every manifest reader), embed the version's schema DDL
-    * inside it as `_schema.ddl` (so ONE atomic rename commits manifest
-    * and schema together; [[storedSchema]] reads it from the committed
+    * inside it as [[CasMetaFile]] (so ONE atomic rename commits manifest
+    * and schema together; [[storedMeta]] reads it from the committed
     * dir), then rename onto `v=<id>`.
     *
     * Rename-as-CAS needs one extra verification on local filesystems:
@@ -1571,8 +1579,7 @@ object Cdc {
       require(fs.exists(new org.apache.hadoop.fs.Path(staging, "_SUCCESS")),
         "CAS commit requires the _SUCCESS visibility marker " +
           s"(written by writeManifestParquet): staged manifest $staging has none")
-      val ddl = new org.apache.hadoop.fs.Path(staging, "_schema.ddl")
-      val out = fs.create(ddl, true)
+      val out = fs.create(new org.apache.hadoop.fs.Path(staging, CasMetaFile), true)
       try out.write(metaLn.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       finally out.close()
       // TORN-DIRECTORY HEAL: a v=<id> dir WITHOUT _SUCCESS is a crashed
@@ -1594,8 +1601,9 @@ object Cdc {
         !fs.exists(new org.apache.hadoop.fs.Path(dst, stagingName))
       if (landed) {
         // compatibility sidecar for external tooling that lists schema/
-        // dirs; the committed manifest's _schema.ddl is authoritative
-        // (storedSchema reads it first), so a crash here loses nothing
+        // dirs; the committed manifest's embedded metadata is
+        // authoritative (storedMeta reads it first), so a crash here
+        // loses nothing
         writeSchemaSidecar(spark, storePath, curId, metaLn)
         maybeCheckpointHistory(spark, storePath, curId)
         return curId
@@ -1659,19 +1667,9 @@ object Cdc {
       spark: org.apache.spark.sql.SparkSession,
       storePath: String,
       version: Option[Long] = None): DataFrame = {
-    val vs = manifestVersions(spark, storePath)
-    val v = version.getOrElse {
-      if (vs.isEmpty) throw new IllegalStateException(s"no committed snapshot under $storePath")
-      vs.max
-    }
-    require(vs.contains(v), s"version $v is not committed under $storePath")
-    val manifest = readManifestFull(spark, storePath, v)
-    if (manifest.isEmpty)
-      throw new IllegalStateException(s"snapshot v=$v is empty (all buckets deleted)")
-    val meta = storedMeta(spark, storePath, v)
-    readResolvedBuckets(spark, storePath, v, manifest.toSeq.sortBy(_._1),
-      meta.map(_.keys).getOrElse(Nil),
-      nBuckets = meta.flatMap(_.nBuckets).getOrElse(0))
+    val (v, meta, manifest, _) = servingState(spark, storePath, version)
+    readResolvedBuckets(spark, storePath, v, Some(meta), manifest.toSeq.sortBy(_._1), meta.keys,
+      nBuckets = meta.nBuckets.getOrElse(0))
   }
 
   /** Committed manifest versions (the store's serving history). */
@@ -1909,34 +1907,6 @@ object Cdc {
     }
   }
 
-  /** The serving layout of `version` (default: newest committed) for
-    * EXTERNAL readers — the DSv2 catalog table (sources/cdc) plans its
-    * bucket-aligned scan from this: resolved version, payload schema the
-    * version recorded (file-derived for pre-evolution stores), and the
-    * bucket → parts-directory map the manifest names. */
-  def servingLayout(
-      spark: org.apache.spark.sql.SparkSession,
-      storePath: String,
-      version: Option[Long] = None): (Long, org.apache.spark.sql.types.StructType, Map[Int, String]) = {
-    val vs = manifestVersions(spark, storePath)
-    val v = version.getOrElse {
-      if (vs.isEmpty) throw new IllegalStateException(s"no committed snapshot under $storePath")
-      vs.max
-    }
-    require(vs.contains(v), s"version $v is not committed under $storePath")
-    val manifest = readManifestFull(spark, storePath, v)
-    val schema = storedSchema(spark, storePath, v).getOrElse {
-      if (manifest.isEmpty)
-        throw new IllegalStateException(s"snapshot v=$v is empty (all buckets deleted)")
-      readPartitionedSnapshot(spark, storePath, Some(v)).schema
-    }
-    val dirs = manifest.collect { case (p, e) if e.base.isDefined =>
-      // a lazily-split child's base files live at its PARENT coordinate
-      p -> bucketDir(storePath, e.physBucket(p), e.base.get)
-    }
-    (v, schema, dirs)
-  }
-
   /** POINT LOOKUP against the partition-scoped store: serve the rows for
     * a bounded set of keys reading ONLY the buckets those keys hash to —
     * the O(|keys|/n · store) read path a keyed snapshot store owes its
@@ -1953,23 +1923,10 @@ object Cdc {
       nBuckets: Int,
       version: Option[Long] = None): DataFrame = {
     import spark.implicits._
-    val vs = manifestVersions(spark, storePath)
-    val v = version.getOrElse {
-      if (vs.isEmpty) throw new IllegalStateException(s"no committed snapshot under $storePath")
-      vs.max
-    }
-    require(vs.contains(v), s"version $v is not committed under $storePath")
-    val manifest = readManifestFull(spark, storePath, v)
+    val (v, meta, manifest, _) = servingState(spark, storePath, version)
     // a wrong layout hash wouldn't fail — it would silently MISS rows
-    // (the keys' true buckets are never read): validate against the
-    // layout the store records
-    for (m <- storedMeta(spark, storePath, v)) {
-      m.nBuckets.foreach(n => require(n == nBuckets,
-        s"nBuckets mismatch for $storePath: store is bucketed mod $n, caller passed $nBuckets"))
-      if (m.keys.nonEmpty) require(m.keys == keys,
-        s"merge-key mismatch for $storePath: store records (${m.keys.mkString(",")}), " +
-          s"caller passed (${keys.mkString(",")})")
-    }
+    // (the keys' true buckets are never read)
+    requireLayout(meta, storePath, keys, nBuckets)
     // ONE driver job over the (bounded, by point-lookup contract) key
     // panel: the distinct key tuples collect once (limit-capped so a
     // join-in-disguise lookup can't flood the driver); their buckets
@@ -1982,33 +1939,28 @@ object Cdc {
     // conjunction is a SUPERSET of the wanted tuples (safe under the
     // fold: key predicates drop every level of a key together); the
     // broadcast semi-join below restores tuple exactness.
-    val MaxPanel = 1024
     val keyed = lookup.select(keys.map(col): _*)
-    val panelRows = keyed.distinct().limit(MaxPanel + 1).collect()
-    val bounded = panelRows.length <= MaxPanel
-    val keyTypes = keyed.schema.fields.map(_.dataType)
+    val panelRows = keyed.distinct().limit(graft.sources.cdc.CdcScan.MaxInPanel + 1).collect()
+    val bounded = panelRows.length <= graft.sources.cdc.CdcScan.MaxInPanel
+    val keyTypes = keyed.schema.fields.map(_.dataType).toSeq
     val wantedBuckets: Set[Int] =
       if (bounded)
-        panelRows.iterator.map { r =>
-          val lits = keyTypes.indices.map(i =>
-            org.apache.spark.sql.catalyst.expressions.Literal.create(r.get(i), keyTypes(i)))
-          val h = org.apache.spark.sql.catalyst.expressions.XxHash64(lits, 42L)
-            .eval(null).asInstanceOf[Long]
-          val m = h % nBuckets
-          (if (m < 0) m + nBuckets else m).toInt
-        }.toSet
+        panelRows.iterator.map(r =>
+          bucketOfLiterals(keyTypes.indices.map(r.get).zip(keyTypes), nBuckets)).toSet
       else // over the cap: bounded distributed bucket collect, no panel
         lookup.select(bucketExpr(keys, nBuckets).as("_b")).distinct().as[Int].collect().toSet
     val entries = manifest.toSeq.filter { case (p, _) => wantedBuckets.contains(p) }.sortBy(_._1)
     if (entries.isEmpty)
-      return readPartitionedSnapshot(spark, storePath, Some(v)).limit(0).filter(lit(false))
+      return readResolvedBuckets(spark, storePath, v, Some(meta), manifest.toSeq.sortBy(_._1),
+        keys, nBuckets = nBuckets).limit(0).filter(lit(false))
     val keyPanel: Option[Column] =
       if (!bounded) None // a huge panel is a join, not a point lookup
       else Some(keys.zipWithIndex.map { case (k, i) =>
         val vs = panelRows.iterator.map(_.get(i)).filter(_ != null).toArray[Any].distinct
         if (vs.isEmpty) lit(false) else col(k).isin(vs.toIndexedSeq: _*)
       }.reduce(_ && _))
-    readResolvedBuckets(spark, storePath, v, entries, keys, keyPanel, nBuckets = nBuckets)
+    readResolvedBuckets(spark, storePath, v, Some(meta), entries, keys, keyPanel,
+      nBuckets = nBuckets)
       .join(broadcast(lookup.select(keys.map(col): _*).distinct()), keys, "left_semi")
   }
 
@@ -2120,8 +2072,9 @@ object Cdc {
     // read. From-versions with pending deltas refuse (their delta dirs
     // live at pre-split coordinates the child-entry bookkeeping cannot
     // address): compact, or bootstrap from snapshots.
+    val toMeta = storedMeta(spark, storePath, toV)
     val mod1 = storedMeta(spark, storePath, fromV).flatMap(_.nBuckets)
-    val mod2 = storedMeta(spark, storePath, toV).flatMap(_.nBuckets)
+    val mod2 = toMeta.flatMap(_.nBuckets)
     val curMod = mod2.getOrElse(0)
     val m1 = (mod1, mod2) match {
       case (Some(a), Some(b)) if a != b =>
@@ -2152,7 +2105,8 @@ object Cdc {
     def slice(manifest: Map[Int, BucketEntry]): Option[DataFrame] = {
       val entries = changed.flatMap(p => manifest.get(p).map(p -> _))
       if (entries.isEmpty) None
-      else Some(readResolvedBuckets(spark, storePath, toV, entries, keys, nBuckets = curMod))
+      else Some(readResolvedBuckets(spark, storePath, toV, toMeta, entries, keys,
+        nBuckets = curMod))
     }
     // schema source for empty sides: whichever side has data; if NEITHER
     // version stores any row in a changed bucket the feed is empty — but
@@ -2429,20 +2383,11 @@ object Cdc {
     require(zorderCols.isEmpty || zorderCols.size == 2 || zorderCols.size == 3,
       s"zorderCols clusters 2 or 3 columns, got ${zorderCols.size}")
     require(zorderFilesPerBucket >= 1, "zorderFilesPerBucket >= 1")
-    val vs = manifestVersions(spark, storePath)
-    require(vs.nonEmpty, s"no committed snapshot under $storePath")
-    val v = vs.max
-    val entries = readManifestFull(spark, storePath, v)
-    val meta = storedMeta(spark, storePath, v).getOrElse(
-      StoreMeta(readPartitionedSnapshot(spark, storePath, Some(v)).schema))
+    val (v, meta, entries, _) = servingState(spark, storePath)
     // compaction REWRITES buckets: wrong layout arguments would silently
     // collapse distinct keys (fold on the wrong identity) or scatter rows
-    // into buckets no reader looks in — validate against the recorded meta
-    meta.nBuckets.foreach(n => require(n == nBuckets,
-      s"nBuckets mismatch for $storePath: store is bucketed mod $n, caller passed $nBuckets"))
-    if (meta.keys.nonEmpty) require(meta.keys == keys,
-      s"merge-key mismatch for $storePath: store records (${meta.keys.mkString(",")}), " +
-        s"caller passed (${keys.mkString(",")})")
+    // into buckets no reader looks in
+    requireLayout(meta, storePath, keys, nBuckets)
     // dirty = pending deltas to fold, OR a lazily-split child still
     // serving a slice of its parent's files ([[splitBuckets]]) — the
     // "rewritten natively on next compaction touch" half of the split
@@ -2455,8 +2400,8 @@ object Cdc {
     }
     if (dirty.isEmpty) return None
     val token = mintCasToken()
-    val resolved = readResolvedBuckets(spark, storePath, v, dirty.toSeq.sortBy(_._1), keys,
-      nBuckets = nBuckets)
+    val resolved = readResolvedBuckets(spark, storePath, v, Some(meta), dirty.toSeq.sortBy(_._1),
+      keys, nBuckets = nBuckets)
     val physKeys = keys.map(meta.phys)
     val statsOn = statsCollectionOn(meta.schema)
     val renamed = resolved
@@ -2858,25 +2803,6 @@ object Cdc {
     fs.create(new org.apache.hadoop.fs.Path(staging, "_SUCCESS"), true).close()
   }
 
-  /** Recorded row counts per bucket of `version` (default newest) — only
-    * buckets whose manifest entry carries one (pre-migration manifests
-    * may lack counts until their buckets are next rewritten). The DSv2
-    * scan sums these into `estimateStatistics.numRows`. */
-  def servingRowCounts(
-      spark: org.apache.spark.sql.SparkSession,
-      storePath: String,
-      version: Option[Long] = None): Map[Int, Long] = {
-    val vs = manifestVersions(spark, storePath)
-    val v = version.getOrElse {
-      if (vs.isEmpty) throw new IllegalStateException(s"no committed snapshot under $storePath")
-      vs.max
-    }
-    require(vs.contains(v), s"version $v is not committed under $storePath")
-    readManifestFull(spark, storePath, v).collect { case (p, e) if e.rows.isDefined =>
-      p -> e.rows.get
-    }
-  }
-
   /** `DESCRIBE HISTORY`-shape audit surface over the store's own
     * metadata (the Delta/Iceberg history table every lake exposes): one
     * row per committed version with its commit wall-clock (the manifest
@@ -3007,69 +2933,46 @@ object Cdc {
     }.toDF("_bucket", "rows", "base_writer", "delta_depth", "base_mod")
   }
 
-  /** The serving version's column-mapping metadata for external readers
-    * (the DSv2 scan): logical schema plus the logical→physical name map
-    * files are spelled in. Identity for stores that never renamed or
-    * dropped. */
-  def servingMeta(
+  /** The committed version a call serves: `version` when it is
+    * committed, else the newest committed one. The one place that
+    * refuses an empty store or an uncommitted version. */
+  private def resolveVersion(
       spark: org.apache.spark.sql.SparkSession,
       storePath: String,
-      version: Option[Long] = None): StoreMeta = {
+      version: Option[Long]): Long = {
     val vs = manifestVersions(spark, storePath)
     val v = version.getOrElse {
       if (vs.isEmpty) throw new IllegalStateException(s"no committed snapshot under $storePath")
       vs.max
     }
     require(vs.contains(v), s"version $v is not committed under $storePath")
-    storedMeta(spark, storePath, v).getOrElse(
-      StoreMeta(readPartitionedSnapshot(spark, storePath, Some(v)).schema))
+    v
   }
 
-  /** Everything the DSv2 store table needs to serve `version`, resolved
-    * from ONE manifest read plus one schema-metadata read: the catalog
-    * constructs a table object per resolution, so separate
-    * rows/colstats/meta accessors would each re-run the manifest parquet
-    * job on the query hot path. Returns (version, schema metadata, full
-    * manifest (writer, rows, colstats per bucket), bucket → parts dir). */
+  /** Everything one call needs to serve `version` (default: newest
+    * committed), resolved ONCE — one version resolution, one manifest
+    * read, one metadata read — and passed down instead of re-read: the
+    * snapshot and lookup readers, maintenance, metadata-only commits,
+    * the DSv2 store table and the feed table all project from it.
+    * Returns (version, schema metadata, full manifest (writer, rows,
+    * colstats, deltas per bucket), bucket → base parts dir). */
   def servingState(
       spark: org.apache.spark.sql.SparkSession,
       storePath: String,
       version: Option[Long] = None)
       : (Long, StoreMeta, Map[Int, BucketEntry], Map[Int, String]) = {
-    val vs = manifestVersions(spark, storePath)
-    val v = version.getOrElse {
-      if (vs.isEmpty) throw new IllegalStateException(s"no committed snapshot under $storePath")
-      vs.max
-    }
-    require(vs.contains(v), s"version $v is not committed under $storePath")
+    val v = resolveVersion(spark, storePath, version)
     val manifest = readManifestFull(spark, storePath, v)
-    val meta = storedMeta(spark, storePath, v).getOrElse {
-      if (manifest.isEmpty)
-        throw new IllegalStateException(s"snapshot v=$v is empty (all buckets deleted)")
-      StoreMeta(readPartitionedSnapshot(spark, storePath, Some(v)).schema)
-    }
+    // a version without recorded metadata (a store written before it was
+    // recorded) serves its file-derived schema; an empty one has none
+    // and refuses (all buckets deleted)
+    val meta = storedMeta(spark, storePath, v).getOrElse(StoreMeta(
+      readResolvedBuckets(spark, storePath, v, None, manifest.toSeq.sortBy(_._1), Nil).schema))
     val dirs = manifest.collect { case (p, e) if e.base.isDefined =>
       // a lazily-split child's base files live at its PARENT coordinate
       p -> bucketDir(storePath, e.physBucket(p), e.base.get)
     }
     (v, meta, manifest, dirs)
-  }
-
-  /** Recorded per-column footer statistics per bucket of `version`
-    * (default newest) — empty maps for buckets whose manifests predate
-    * stat recording. The DSv2 scan folds these into V2 column statistics
-    * (min/max/nullCount) for the CBO's filter-selectivity estimates. */
-  def servingColumnStats(
-      spark: org.apache.spark.sql.SparkSession,
-      storePath: String,
-      version: Option[Long] = None): Map[Int, Map[String, ColStatRec]] = {
-    val vs = manifestVersions(spark, storePath)
-    val v = version.getOrElse {
-      if (vs.isEmpty) throw new IllegalStateException(s"no committed snapshot under $storePath")
-      vs.max
-    }
-    require(vs.contains(v), s"version $v is not committed under $storePath")
-    readManifestFull(spark, storePath, v).map { case (p, e) => p -> e.stats }
   }
 
   /** Row count of one bucket directory from its parquet FOOTERS — driver

@@ -60,11 +60,6 @@ object CoreQueries {
   private def cdcStoreFor(s: SparkSession, sf: String): String =
     cdcStores.getOrElseUpdate(sf, buildCdcStore(s, sf))
 
-  /** Bench hook: build the session artifacts up front so their cost lands
-    * in `artifact_build_sec`, not inside the first serving query. */
-  def prebuildArtifacts(s: SparkSession, sf: String): Unit =
-    Tables.runNamedBuildUnits(prebuildUnits(s, sf).map { case (n, _, u) => (n, u) })
-
   /** The session artifacts as (name, estimated seconds, thunk) units for
     * the concurrent artifact phase — same contract as
     * [[LlmQueries.prebuildUnits]] (guide §2.6): independent offline

@@ -57,16 +57,6 @@ object LlmQueries {
       }
     }
 
-  /** Build the offline artifacts (both IVF indexes — float and
-    * int8-quantized — and the dedup signature store) for a dataset ahead
-    * of query execution — what a serving deployment does at index-build
-    * time, and what Bench's warm-up calls so `d4_topk_ivf`/`d4_topk_ivf_q`
-    * measure the PROBE and `d0_corpus_prep_incr` the SHARD-VS-STORE pass
-    * (the recurring costs), not the one-time builds. Idempotent per
-    * session. */
-  def prebuildIndexes(s: SparkSession, sf: String): Unit =
-    Tables.runNamedBuildUnits(prebuildUnits(s, sf).map { case (n, _, u) => (n, u) })
-
   /** The offline builds as (name, estimated seconds, thunk) units for the
     * concurrent artifact phase (guide §2.6): a serving deployment builds
     * these as separate pipelines, so they run as independent pool units

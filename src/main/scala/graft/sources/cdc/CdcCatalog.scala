@@ -235,7 +235,8 @@ object CdcCatalog {
     // post-split count rather than multiplying each sibling's own
     // (possibly already-stale) nBuckets — the update heals a drifted
     // registration instead of compounding its error
-    val newN = Cdc.servingMeta(spark, d.storePath).nBuckets.getOrElse(d.nBuckets * factor)
+    val (_, meta, _, _) = Cdc.servingState(spark, d.storePath)
+    val newN = meta.nBuckets.getOrElse(d.nBuckets * factor)
     registry.foreach { case (n, def_) =>
       if (def_.storePath == d.storePath && def_.version.isEmpty)
         registry.put(n, def_.copy(nBuckets = newN))
@@ -431,7 +432,7 @@ class CdcCatalog extends TableCatalog with FunctionCatalog {
     * bucket split must validate (and prune) against the old layout, not
     * the live registration's evolved one. */
   private def pinnedAt(d: CdcCatalog.StoreDef, v: Long): CdcCatalog.StoreDef = {
-    val recorded = Cdc.servingMeta(SparkSession.active, d.storePath, Some(v))
+    val (_, recorded, _, _) = Cdc.servingState(SparkSession.active, d.storePath, Some(v))
     d.copy(version = Some(v),
       keys = if (recorded.keys.nonEmpty) recorded.keys else d.keys,
       nBuckets = recorded.nBuckets.getOrElse(d.nBuckets))

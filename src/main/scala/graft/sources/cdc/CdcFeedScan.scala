@@ -43,8 +43,11 @@ class CdcFeedTable(tableName: String, d: CdcCatalog.FeedDef) extends Table with 
 
   private[cdc] val tableSchema: StructType = {
     // additive evolution means the STORE's newest recorded schema is the
-    // superset every feed version's files clip into
-    val (_, payload, _) = Cdc.servingLayout(SparkSession.active, d.storePath)
+    // superset every feed version's files clip into; schema and mapping
+    // come from ONE resolution, so a commit landing mid-load cannot pair
+    // one version's schema with another's column mapping
+    val (_, meta, _, _) = Cdc.servingState(SparkSession.active, d.storePath)
+    val payload = meta.schema
     // COLUMN MAPPING boundary (the Delta CDF restriction, enforced
     // loudly): feed versions materialized at or before a rename/drop
     // carry the OLD column names — clipping them into the post-mapping
@@ -52,7 +55,6 @@ class CdcFeedTable(tableName: String, d: CdcCatalog.FeedDef) extends Table with 
     // exactly when the RETAINED feed history straddles the boundary;
     // once old versions are vacuumed/re-materialized past the change the
     // feed serves again (bootstrap new consumers from the snapshot).
-    val meta = Cdc.servingMeta(SparkSession.active, d.storePath)
     for (chg <- meta.mapChangeV) {
       val oldestRetained = CdcFeedScan.retainedUnits(d.feedPath).headOption.map(_.lo)
       require(oldestRetained.forall(_ > chg),
@@ -491,8 +493,7 @@ class CdcFeedStream(
     * dropping `v` mid-bootstrap fails LOUDLY here (a consumer must not
     * silently continue from a snapshot that no longer exists). */
   private def snapshotDirs(v: Long): Seq[String] = {
-    val (_, _, dirs) = graft.operators.Cdc.servingLayout(
-      SparkSession.active, d.storePath, Some(v))
+    val (_, _, _, dirs) = Cdc.servingState(SparkSession.active, d.storePath, Some(v))
     dirs.toSeq.sortBy(_._1).map(_._2)
   }
 

@@ -34,7 +34,7 @@ import graft.sources.SessionHadoopConf
   *    file's own schema, so buckets carried by reference across an
   *    ADDITIVE schema evolution serve typed NULLs for columns their
   *    files predate (the same contract as
-  *    [[graft.operators.Cdc.servingLayout]]'s DataFrame readers).
+  *    [[graft.operators.Cdc.readPartitionedSnapshot]]'s DataFrame readers).
   *  - FILTERS that pin the merge key prune BUCKETS: an `=` conjunct on
   *    every key (or a bounded `IN` panel on a single-key store) hashes
   *    its literals through the store's own bucket function driver-side
@@ -87,7 +87,7 @@ class CdcScanBuilder(table: CdcStoreTable, d: CdcCatalog.StoreDef)
     import CdcScan.MaxInPanel
     val keyTypes = d.keys.map(k => table.schema()(k).dataType)
     def bucketOf(values: Seq[Any]): Int =
-      CdcScan.bucketOfLiterals(values.zip(keyTypes), d.nBuckets)
+      graft.operators.Cdc.bucketOfLiterals(values.zip(keyTypes), d.nBuckets)
     // per-key literal value panel from `=` / null-safe `=` / IN
     // (several conjuncts on one key → the tightest panel wins)
     val panels: Map[String, Seq[Any]] = filters.toSeq.collect {
@@ -332,24 +332,9 @@ object CdcScan {
   }
 
   /** Bounded IN panels only: a million-value IN is a join in disguise —
-    * the driver must not hash data-sized literal lists. */
-  private[cdc] val MaxInPanel = 1024
-
-  /** The store's layout hash over literal key values, driver-side — the
-    * same `pmod(xxhash64(keys), n)` as [[graft.operators.Cdc.bucketExpr]],
-    * evaluated through Catalyst's own XxHash64. Accepts both EXTERNAL
-    * literals (v1 Filter pushdown: String, java.sql.Date) and INTERNAL
-    * ones (V2 runtime predicates: UTF8String, epoch-day Int). */
-  private[cdc] def bucketOfLiterals(values: Seq[(Any, DataType)], n: Int): Int = {
-    val lits = values.map {
-      case (u: UTF8String, t)                       => Literal(u, t)
-      case (i: Integer, t) if t == DateType         => Literal(i, t)
-      case (v, t)                                   => Literal.create(v, t)
-    }
-    val h = XxHash64(lits, 42L).eval(null).asInstanceOf[Long]
-    val m = h % n
-    (if (m < 0) m + n else m).toInt
-  }
+    * the driver must not hash data-sized literal lists. Also caps
+    * [[graft.operators.Cdc.lookupKeys]]' driver-collected key panel. */
+  private[graft] val MaxInPanel = 1024
 
   /** Parse V2 predicate conjuncts into the bounded EXTERNAL key tuples
     * they pin: every conjunct must be `=` / bounded `IN` on a merge key
@@ -491,7 +476,7 @@ class CdcScan(
         }
         if (combos.length <= CdcScan.MaxInPanel)
           runtimeBuckets = Some(combos.map(c =>
-            CdcScan.bucketOfLiterals(c.zip(keyTypes), nBuckets)).toSet)
+            graft.operators.Cdc.bucketOfLiterals(c.zip(keyTypes), nBuckets)).toSet)
       }
     }
   }

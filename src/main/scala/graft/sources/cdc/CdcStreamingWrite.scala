@@ -82,12 +82,11 @@ class CdcStreamingWrite(
     // this slot did not — that must fail LOUDLY, never skip as a replay.
     val replayed = hasIntent(spark, d.storePath, queryId, epochId)
     // OWN commit = non-CAS at our slot: batch DML (CAS) commits are
-    // provable on disk — only commitCas lands `_schema.ddl` inside the
-    // manifest dir — so a slot occupied by DML can never masquerade as
-    // this stream's replay (without this check, a crash between intent
-    // and commit followed by a DML taking the slot would SKIP the epoch
-    // on replay and silently drop its data).
-    val ownAtSlot = committed.contains(version) && !isDmlCommit(spark, d.storePath, version)
+    // provable on disk ([[Cdc.isCasCommit]]), so a slot occupied by DML
+    // can never masquerade as this stream's replay (without this check,
+    // a crash between intent and commit followed by a DML taking the
+    // slot would SKIP the epoch on replay and silently drop its data).
+    val ownAtSlot = committed.contains(version) && !Cdc.isCasCommit(spark, d.storePath, version)
     if (!ownAtSlot || !replayed) {
       if (committed.max >= version) {
         // the version line moved under the stream. DML COEXISTENCE: when
@@ -99,7 +98,7 @@ class CdcStreamingWrite(
         // maintenance calls): that stays the loud single-maintainer
         // error, exactly as before.
         val foreign = committed.filter(_ >= version)
-        require(foreign.forall(v => isDmlCommit(spark, d.storePath, v)),
+        require(foreign.forall(v => Cdc.isCasCommit(spark, d.storePath, v)),
           s"$tableName version line moved: this stream's epoch $epochId maps to " +
             s"version $version but versions ${foreign.sorted.mkString(",")} were " +
             "committed by another MAINTAINER (non-DML commits without this stream's " +
@@ -175,17 +174,6 @@ object CdcStreamingWrite {
       }
       base
     }
-  }
-
-  /** Batch-DML (CAS) commit provenance: only
-    * [[graft.operators.Cdc]]'s `commitCas` lands `_schema.ddl` INSIDE
-    * the manifest dir (the streaming/non-CAS path writes the schema
-    * sidecar elsewhere) — the on-disk signal that separates "catalog DML
-    * moved the version line" (re-pin and continue) from "another
-    * maintainer is writing" (loud). */
-  private def isDmlCommit(spark: SparkSession, storePath: String, v: Long): Boolean = {
-    val marker = new Path(s"$storePath/manifest/v=$v/_schema.ddl")
-    marker.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(marker)
   }
 
   /** Drop the query's pinned base so the next [[baseFor]] re-derives it

@@ -656,6 +656,29 @@ class CdcSpec extends AnyFunSuite {
     assert(got === full)
   }
 
+  test("store entry points refuse an empty store and an uncommitted version " +
+      "with the version resolver's messages") {
+    val empty = java.nio.file.Files.createTempDirectory("graft_cdc_none").toString
+    val store = java.nio.file.Files.createTempDirectory("graft_cdc_resolve").toString
+    runBatch(store, snap((1L, "a", 1.0)), 0L)
+    val lookup = Seq(1L).toDF("k")
+    // each versioned entry point: (store path, version) => call
+    val versioned: Seq[(String, (String, Option[Long]) => Any)] = Seq(
+      "readPartitionedSnapshot" -> ((p, v) => Cdc.readPartitionedSnapshot(spark, p, v)),
+      "lookupKeys" -> ((p, v) => Cdc.lookupKeys(spark, p, keys, lookup, nBuckets, v)),
+      "servingState" -> ((p, v) => Cdc.servingState(spark, p, v)))
+    val cases: Seq[(String, () => Any, String)] = versioned.flatMap { case (name, call) =>
+      Seq((name, () => call(empty, None), "no committed snapshot under"),
+        (name, () => call(store, Some(7L)), "version 7 is not committed under"))
+    } :+ (("maintainStore",
+      () => Cdc.maintainStore(spark, empty, keys, nBuckets, maxDepth = 0),
+      "no committed snapshot under"))
+    for ((name, call, msg) <- cases) {
+      val e = intercept[Exception](call())
+      assert(e.getMessage.contains(msg), s"$name refused with: ${e.getMessage}")
+    }
+  }
+
   /** Total input records read by the jobs `action` runs (listener-fed,
     * so drain the listener bus before reading). */
   private def recordsReadDuring(action: => Unit): Long = {

@@ -1298,8 +1298,8 @@ class CdcCatalogSpec extends AnyFunSuite {
       // count) — and LIMIT over the sliced store must still return rows
       // (regression: a false rows=0 would make LIMIT plan zero buckets)
       spark.sql("ALTER TABLE graft.cat_split ADD COLUMN note STRING")
-      assert(Cdc.servingRowCounts(spark, store).isEmpty ||
-        Cdc.servingRowCounts(spark, store).values.forall(_ > 0L),
+      val rowCounts = Cdc.servingState(spark, store)._3.values.flatMap(_.rows)
+      assert(rowCounts.isEmpty || rowCounts.forall(_ > 0L),
         "metadata commit recorded phantom counts for sliced children")
       assert(spark.table("graft.cat_split").limit(10).count() === 10L,
         "LIMIT over a lazily-split store dropped rows")

@@ -426,7 +426,7 @@ class CdcFeedTableSpec extends AnyFunSuite {
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
       val nonEmpty = batches.filter(_._2.nonEmpty)
-      val dirCount = Cdc.servingLayout(spark, store)._3.size
+      val dirCount = Cdc.servingState(spark, store)._4.size
       val expectedChunks = (dirCount + 2) / 3
       assert(nonEmpty.length === expectedChunks,
         s"snapshot should span ceil($dirCount/3)=$expectedChunks batches, " +

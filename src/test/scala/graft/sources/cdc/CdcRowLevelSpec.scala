@@ -214,7 +214,7 @@ class CdcRowLevelSpec extends AnyFunSuite {
       assert(pruned.isDefined,
         s"the runtime panel never reached the MERGE target scan (captured ${captured.size} scans)")
       val want = Set(5L, 7L).map(k =>
-        CdcScan.bucketOfLiterals(Seq(k -> org.apache.spark.sql.types.LongType), n))
+        Cdc.bucketOfLiterals(Seq(k -> org.apache.spark.sql.types.LongType), n))
       assert(pruned.get === want, s"pruned to ${pruned.get}, expected buckets $want")
     } finally CdcCatalog.unregister("rlo_dpp")
   }
