@@ -7,17 +7,20 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
 import org.apache.spark.sql.{GraftBridge, SparkSession}
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** What one measured body cost, layer by layer.
   *
-  * `scanBytes` sums `filesSize` over the file scans of every query the
-  * body executed: the on-disk size of the files each scan listed, so it
+  * `scanBytes` sums `filesSize` over the scans of every query the body
+  * executed: for file scans the on-disk size of the files each scan
+  * listed, for the CDC catalog's DSv2 scans the on-disk size of the files
+  * its readers opened (its footer-only aggregate scans report none). It
   * does not depend on how the reader fetched them. (Parquet's vectored
   * reads bypass `inputMetrics.bytesRead`, which then counts little more
-  * than the footers.) DSv2 scans, the CDC catalog's among them, report no
-  * byte metric and are not counted. `driverGapMs` is the wall time of the
-  * body that no Spark job covers: planning, listing, commits. */
+  * than the footers.) Other DSv2 scans report no byte metric and are not
+  * counted. `driverGapMs` is the wall time of the body that no Spark job
+  * covers: planning, listing, commits. */
 final case class QuerySnapshot(
     wallNs: Long,
     jobs: Int,
@@ -64,7 +67,8 @@ final class QueryMetrics(spark: SparkSession) {
   private val executions = new QueryExecutionListener {
     override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
       val bytes = QueryMetrics.Plans.collectWithSubqueries(qe.executedPlan) {
-        case s: FileSourceScanExec => s.metrics.get("filesSize").map(_.value).getOrElse(0L)
+        case s @ (_: FileSourceScanExec | _: BatchScanExec) =>
+          s.metrics.get("filesSize").map(_.value).getOrElse(0L)
       }.sum
       val ms = qe.tracker.phases.values.map(p => p.endTimeMs - p.startTimeMs).sum
       QueryMetrics.this.synchronized { scanBytes += bytes; planMs += ms }

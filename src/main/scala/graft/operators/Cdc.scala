@@ -94,8 +94,8 @@ object Cdc {
   //
   // Layout:
   //   storePath/parts/_bucket=<p>/_writer=<batch>/part-*.parquet
-  //   storePath/manifest/v=<batch>/   (rows: _bucket INT, _writer LONG)
-  //   storePath/schema/v=<batch>/     (one line: payload schema as DDL)
+  //   storePath/manifest/v=<batch>/   (rows: _bucket INT, _writer LONG,
+  //                                    plus _schema.ddl: the version's metadata)
   //
   // The manifest write is the COMMIT POINT (Spark's _SUCCESS marker): a
   // crash mid-parts-write leaves orphan (bucket, writer) directories that
@@ -107,7 +107,6 @@ object Cdc {
 
   private def partsPath(storePath: String)    = s"$storePath/parts"
   private def manifestPath(storePath: String) = s"$storePath/manifest"
-  private def schemaPath(storePath: String)   = s"$storePath/schema"
   private def bucketDir(storePath: String, p: Int, w: Long): String =
     s"${partsPath(storePath)}/_bucket=$p/_writer=$w"
 
@@ -149,156 +148,136 @@ object Cdc {
   }
 
   /** A version's full schema metadata: the LOGICAL payload schema the
-    * version serves, the COLUMN MAPPING from logical names to the
-    * physical names stored in parquet files (entries only for columns
-    * whose names diverged — renames; lookups go through
-    * [[StoreMeta.phys]]), and the RETIRED physical names of dropped
-    * columns (a re-added logical column of the same name must mint a
-    * FRESH physical name, or dropped data would resurrect out of carried
-    * files). Physical names are immutable for a column's whole life —
-    * that is what makes RENAME and DROP metadata-only commits: no data
-    * file is rewritten, ever. */
+    * version serves, the store's LAYOUT (merge keys and bucket count),
+    * the COLUMN MAPPING from logical names to the physical names stored
+    * in parquet files (entries only for columns whose names diverged —
+    * renames; lookups go through [[StoreMeta.phys]]), and the RETIRED
+    * physical names of dropped columns (a re-added logical column of the
+    * same name must mint a FRESH physical name, or dropped data would
+    * resurrect out of carried files). Physical names are immutable for a
+    * column's whole life — that is what makes RENAME and DROP
+    * metadata-only commits: no data file is rewritten, ever. */
   private[graft] case class StoreMeta(
       schema: org.apache.spark.sql.types.StructType,
+      /** The store's MERGE KEYS as recorded at commit time — what makes a
+        * store self-describing enough for READ-TIME work that needs row
+        * identity (the merge-on-read fold, the split slice): a reader of
+        * a store with pending delta files never guesses the key columns. */
+      keys: Seq[String],
+      /** The layout's bucket count, recorded at commit time — what lets
+        * maintenance entry points ([[compactStore]]) validate a caller's
+        * layout arguments instead of silently re-bucketing the store
+        * wrong. */
+      nBuckets: Int,
       mapping: Map[String, String] = Map.empty,
       retired: Seq[String] = Nil,
       /** The newest version id that changed the mapping (rename/drop) —
         * the CDF boundary: feed versions at or before it carry pre-change
         * column names. None for never-mapped stores. */
-      mapChangeV: Option[Long] = None,
-      /** The store's MERGE KEYS as recorded at commit time — what makes a
-        * store self-describing enough for READ-TIME work that needs row
-        * identity (the merge-on-read fold): a reader of a store with
-        * pending delta files must not have to guess the key columns.
-        * Empty for stores last written before keys were recorded (those
-        * cannot carry deltas — delta commits always record keys). */
-      keys: Seq[String] = Nil,
-      /** The layout's bucket count, recorded at commit time — what lets
-        * maintenance entry points ([[compactStore]]) validate a caller's
-        * layout arguments instead of silently re-bucketing the store
-        * wrong. None for stores last written before it was recorded. */
-      nBuckets: Option[Int] = None) {
+      mapChangeV: Option[Long] = None) {
     def phys(logical: String): String = mapping.getOrElse(logical, logical)
     /** The schema as the parquet files spell it (same positions/types). */
     def physicalSchema: org.apache.spark.sql.types.StructType =
       org.apache.spark.sql.types.StructType(
         schema.fields.map(f => f.copy(name = phys(f.name))))
-    def isIdentity: Boolean = mapping.isEmpty && retired.isEmpty
     /** Every physical name ever used — the pool fresh names must avoid. */
     def usedPhysical: Set[String] =
       schema.fieldNames.map(phys).toSet ++ retired
   }
 
-  /** Sidecar line format: plain DDL for identity-mapped stores (the
-    * common case and the pre-mapping on-disk format, unchanged), or a
-    * JSON object `{"ddl": ..., "mapping": {...}, "retired": [...]}` once
-    * a rename/drop exists. */
-  private[operators] def metaLine(m: StoreMeta): String =
-    if (m.isIdentity && m.mapChangeV.isEmpty && m.keys.isEmpty) m.schema.toDDL
-    else {
-      import org.json4s.JsonDSL._
-      import org.json4s.jackson.JsonMethods
-      JsonMethods.compact(JsonMethods.render(
-        ("ddl" -> m.schema.toDDL) ~
-          ("mapping" -> m.mapping) ~
-          ("retired" -> m.retired) ~
-          ("mapChangeV" -> m.mapChangeV) ~
-          ("keys" -> m.keys) ~
-          ("nBuckets" -> m.nBuckets)))
-    }
+  /** The metadata file's one line: a JSON object
+    * `{"ddl": ..., "mapping": {...}, "retired": [...], "mapChangeV": ...,
+    * "keys": [...], "nBuckets": n}`. */
+  private def metaLine(m: StoreMeta): String = {
+    import org.json4s.JsonDSL._
+    import org.json4s.jackson.JsonMethods
+    JsonMethods.compact(JsonMethods.render(
+      ("ddl" -> m.schema.toDDL) ~
+        ("mapping" -> m.mapping) ~
+        ("retired" -> m.retired) ~
+        ("mapChangeV" -> m.mapChangeV) ~
+        ("keys" -> m.keys) ~
+        ("nBuckets" -> m.nBuckets)))
+  }
 
-  private[operators] def parseMetaLine(line: String): StoreMeta =
-    if (!line.trim.startsWith("{"))
-      StoreMeta(org.apache.spark.sql.types.StructType.fromDDL(line))
-    else {
-      import org.json4s._
-      val j = org.json4s.jackson.JsonMethods.parse(line)
-      val ddl = (j \ "ddl") match {
-        case JString(s) => s
-        case other => throw new IllegalStateException(s"bad schema sidecar: $other")
-      }
-      val mapping = (j \ "mapping") match {
-        case JObject(fs) => fs.collect { case (k, JString(v)) => k -> v }.toMap
-        case _ => Map.empty[String, String]
-      }
-      val retired = (j \ "retired") match {
-        case JArray(vs) => vs.collect { case JString(s) => s }
-        case _ => Nil
-      }
-      val mapChangeV = (j \ "mapChangeV") match {
-        case JInt(v)    => Some(v.toLong)
-        case JLong(v)   => Some(v)
-        case _          => None
-      }
-      val mkeys = (j \ "keys") match {
-        case JArray(vs) => vs.collect { case JString(s) => s }
-        case _ => Nil
-      }
-      val mBuckets = (j \ "nBuckets") match {
-        case JInt(v)  => Some(v.toInt)
-        case JLong(v) => Some(v.toInt)
-        case _        => None
-      }
-      StoreMeta(org.apache.spark.sql.types.StructType.fromDDL(ddl), mapping, retired, mapChangeV,
-        mkeys, mBuckets)
+  private def parseMetaLine(line: String): StoreMeta = {
+    import org.json4s._
+    val j = org.json4s.jackson.JsonMethods.parse(line)
+    def bad(field: String): Nothing =
+      throw new IllegalStateException(s"bad store metadata ($field): $line")
+    def strings(field: String): Seq[String] = (j \ field) match {
+      case JArray(vs) => vs.collect { case JString(s) => s }
+      case _ => Nil
     }
+    val ddl = (j \ "ddl") match {
+      case JString(s) => s
+      case _ => bad("ddl")
+    }
+    val mapping = (j \ "mapping") match {
+      case JObject(fs) => fs.collect { case (k, JString(v)) => k -> v }.toMap
+      case _ => Map.empty[String, String]
+    }
+    val mapChangeV = (j \ "mapChangeV") match {
+      case JInt(v)  => Some(v.toLong)
+      case JLong(v) => Some(v)
+      case _        => None
+    }
+    val nBuckets = (j \ "nBuckets") match {
+      case JInt(v)  => v.toInt
+      case JLong(v) => v.toInt
+      case _        => bad("nBuckets")
+    }
+    StoreMeta(org.apache.spark.sql.types.StructType.fromDDL(ddl), strings("keys"), nBuckets,
+      mapping, strings("retired"), mapChangeV)
+  }
 
-  /** A version's recorded metadata. Per-version payload schema, written
-    * just before the manifest commit so every COMMITTED version carries
-    * one: this is what makes ADDITIVE EVOLUTION serveable — buckets
-    * carried by reference keep their old files, and reading them under
-    * the version's recorded schema fills the absent columns with NULL
-    * (plain parquet schema-on-read, no footer merge, no rewrite). None
-    * for stores written before schemas were recorded (their schema is
-    * uniform by construction, so the file-derived read stays correct). */
+  /** The file inside every committed `manifest/v=<id>/` dir that holds the
+    * version's [[StoreMeta]] line. Both commit protocols write it into
+    * their staging dir, so one rename commits manifest and metadata
+    * together. */
+  private val MetaFile = "_schema.ddl"
+
+  /** A committed version's recorded metadata — the per-version payload
+    * schema and layout: this is what makes ADDITIVE EVOLUTION serveable —
+    * buckets carried by reference keep their old files, and reading them
+    * under the version's recorded schema fills the absent columns with
+    * NULL (plain parquet schema-on-read, no footer merge, no rewrite). A
+    * committed version without the file is refused, naming the path. */
   private[graft] def storedMeta(
       spark: org.apache.spark.sql.SparkSession,
       storePath: String,
-      v: Long): Option[StoreMeta] = {
-    val dir = new org.apache.hadoop.fs.Path(s"${schemaPath(storePath)}/v=$v")
-    val fs  = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // the metadata EMBEDDED in a CAS-committed manifest dir is
-    // AUTHORITATIVE: commitCas renames it atomically with the manifest,
-    // while the sidecar dir can be a stale leftover of a crashed earlier
-    // (non-CAS) attempt at the same id — preferring the sidecar would
-    // serve the crashed attempt's schema for a committed version in the
-    // window before the winner's sidecar overwrite
-    if (isCasCommit(spark, storePath, v))
-      Some(parseMetaLine(readUtf8(fs,
-        new org.apache.hadoop.fs.Path(s"${manifestPath(storePath)}/v=$v/$CasMetaFile"))))
-    else if (fs.exists(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"))) {
-      // r22: read the one-line sidecar DRIVER-SIDE — spark.read.text spun
-      // up a whole Spark job (scheduling >> the few hundred bytes read)
-      // on every meta lookup of a streaming-committed store
-      val part = fs.listStatus(dir)
-        .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-          !st.getPath.getName.startsWith("."))
-        .sortBy(_.getPath.getName)
-        .headOption
-        .getOrElse(throw new IllegalStateException(
-          s"schema sidecar $dir carries _SUCCESS but no data file"))
-      Some(parseMetaLine(readUtf8(fs, part.getPath).linesIterator.next()))
-    } else None
+      v: Long): StoreMeta = {
+    val p = new org.apache.hadoop.fs.Path(s"${manifestPath(storePath)}/v=$v/$MetaFile")
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val line =
+      try readUtf8(fs, p)
+      catch { case _: java.io.FileNotFoundException =>
+        throw new IllegalStateException(s"committed version v=$v of $storePath has no " +
+          s"recorded metadata: $p is missing") }
+    parseMetaLine(line)
   }
-
-  /** The metadata file [[commitCas]] embeds inside the manifest dir it
-    * renames onto `v=<id>`. Only CAS commits write it. */
-  private val CasMetaFile = "_schema.ddl"
 
   /** COMMIT PROVENANCE: whether `v` was committed through [[commitCas]]
     * (batch DML, compaction, splits, metadata-only commits) rather than
     * by a streaming epoch — provable on disk because only commitCas
-    * lands [[CasMetaFile]] inside the manifest dir. The one place that
-    * knows how that is marked: the stream's version reservation, its
-    * mixed-mode guards and the catalog's streaming write all ask here. */
+    * lands an empty `_cas` marker inside the manifest dir. The one place
+    * that knows how that is marked: the stream's version reservation,
+    * its mixed-mode guards and the catalog's streaming write all ask
+    * here. */
   private[graft] def isCasCommit(
       spark: org.apache.spark.sql.SparkSession, storePath: String, v: Long): Boolean = {
-    val marker = new org.apache.hadoop.fs.Path(s"${manifestPath(storePath)}/v=$v/$CasMetaFile")
+    val marker = new org.apache.hadoop.fs.Path(s"${manifestPath(storePath)}/v=$v/$CasMarker")
     marker.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(marker)
   }
 
+  /** The empty provenance marker [[commitCas]] stages next to the
+    * metadata file. A separate file, not a metadata field: metadata-only
+    * commits copy the parent's [[StoreMeta]], and a provenance field
+    * would ride along with it. */
+  private val CasMarker = "_cas"
+
   /** A small metadata file's whole content, decoded as UTF-8. */
-  private def readUtf8(
+  private[graft] def readUtf8(
       fs: org.apache.hadoop.fs.FileSystem, p: org.apache.hadoop.fs.Path): String = {
     val buf = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
     val in = fs.open(p)
@@ -306,24 +285,12 @@ object Cdc {
     new String(buf, java.nio.charset.StandardCharsets.UTF_8)
   }
 
-  /** Write the one-line schema sidecar dir driver-side, in exactly the
-    * layout Spark's text writer produced (one part file + `_SUCCESS`) so
-    * sidecars from earlier versions and this one are indistinguishable to
-    * every reader. A Spark job per commit just to persist a metadata
-    * line was pure scheduling overhead (r22). */
-  private def writeSchemaSidecar(
-      spark: org.apache.spark.sql.SparkSession,
-      storePath: String,
-      v: Long,
-      metaLn: String): Unit = {
-    val dir = new org.apache.hadoop.fs.Path(s"${schemaPath(storePath)}/v=$v")
-    val fs  = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(dir)) fs.delete(dir, true)
-    fs.mkdirs(dir)
-    val out = fs.create(new org.apache.hadoop.fs.Path(dir, "part-00000"), true)
-    try out.write((metaLn + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+  /** Write a small metadata file whole, as UTF-8. */
+  private[graft] def writeUtf8(
+      fs: org.apache.hadoop.fs.FileSystem, p: org.apache.hadoop.fs.Path, content: String): Unit = {
+    val out = fs.create(p, true)
+    try out.write(content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
-    fs.create(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"), true).close()
   }
 
   /** The payload schema extended with the layout's two partition columns,
@@ -337,8 +304,7 @@ object Cdc {
   }
 
   /** Read bucket directories under the serving version's recorded
-    * metadata `meta` when one exists (nulls for columns predating the
-    * files), or file-derived schema for pre-evolution stores. Files are
+    * metadata `m` (nulls for columns predating the files). Files are
     * read under their PHYSICAL column names and served under the
     * version's LOGICAL names (column mapping — renames never rewrote
     * them). Returns payload columns only (`_bucket`/`_writer` dropped). */
@@ -346,17 +312,11 @@ object Cdc {
       spark: org.apache.spark.sql.SparkSession,
       storePath: String,
       dirs: Seq[String],
-      meta: Option[StoreMeta]): DataFrame = {
-    val base = spark.read.option("basePath", partsPath(storePath))
-    meta match {
-      case None =>
-        base.parquet(dirs: _*).drop("_bucket", "_writer")
-      case Some(m) =>
-        base.schema(withPartCols(m.physicalSchema))
-          .parquet(dirs: _*)
-          .select(m.schema.fields.map(f => col(m.phys(f.name)).as(f.name)).toIndexedSeq: _*)
-    }
-  }
+      m: StoreMeta): DataFrame =
+    spark.read.option("basePath", partsPath(storePath))
+      .schema(withPartCols(m.physicalSchema))
+      .parquet(dirs: _*)
+      .select(m.schema.fields.map(f => col(m.phys(f.name)).as(f.name)).toIndexedSeq: _*)
 
   /** Read merge-on-read DELTA directories: like [[readBucketDirs]]
     * (physical→logical names, recorded-schema NULL fill) plus the delta
@@ -365,21 +325,15 @@ object Cdc {
       spark: org.apache.spark.sql.SparkSession,
       storePath: String,
       dirs: Seq[String],
-      meta: Option[StoreMeta]): DataFrame = {
+      m: StoreMeta): DataFrame = {
     import org.apache.spark.sql.types.{StringType, StructField, StructType}
-    val base = spark.read.option("basePath", partsPath(storePath))
-    meta match {
-      case None =>
-        base.parquet(dirs: _*).drop("_bucket", "_writer")
-          .withColumnRenamed(DeltaOpCol, "__mor_op")
-      case Some(m) =>
-        val fileSchema = StructType(
-          m.physicalSchema.fields :+ StructField(DeltaOpCol, StringType, nullable = true))
-        base.schema(withPartCols(fileSchema))
-          .parquet(dirs: _*)
-          .select((m.schema.fields.map(f => col(m.phys(f.name)).as(f.name)) :+
-            col(DeltaOpCol).as("__mor_op")).toIndexedSeq: _*)
-    }
+    val fileSchema = StructType(
+      m.physicalSchema.fields :+ StructField(DeltaOpCol, StringType, nullable = true))
+    spark.read.option("basePath", partsPath(storePath))
+      .schema(withPartCols(fileSchema))
+      .parquet(dirs: _*)
+      .select((m.schema.fields.map(f => col(m.phys(f.name)).as(f.name)) :+
+        col(DeltaOpCol).as("__mor_op")).toIndexedSeq: _*)
   }
 
   /** The RESOLVED content of the given buckets at version `v`: buckets
@@ -391,15 +345,16 @@ object Cdc {
     * (clean buckets bypass it entirely), and compaction cadence
     * ([[compactStore]]) bounds how many delta levels ever stack, so at
     * 100 TB the fold is a bounded keyed shuffle over the DML-touched
-    * slice of the store, never the snapshot. */
+    * slice of the store, never the snapshot. The fold's identity and
+    * the split slice's modulus are the recorded layout (`meta.keys`,
+    * `meta.nBuckets`). */
   private def readResolvedBuckets(
       spark: org.apache.spark.sql.SparkSession,
       storePath: String,
       v: Long,
       /** `v`'s recorded metadata, resolved once by the caller. */
-      meta: Option[StoreMeta],
+      meta: StoreMeta,
       entries: Seq[(Int, BucketEntry)],
-      keys: Seq[String],
       /** Optional predicate over the MERGE KEY columns only (a bounded
         * point-lookup panel). Key predicates COMMUTE with the per-key
         * last-writer-wins fold — every level of a key's history passes or
@@ -409,20 +364,11 @@ object Cdc {
         * skip IO. Arbitrary payload predicates must NOT be passed here:
         * filtering a key's newest delta row while keeping its base row
         * would resurrect the stale version. */
-      keyFilter: Option[Column] = None,
-      /** The store's CURRENT bucket count — required only when `entries`
-        * contain lazily-split children (`baseMod` set): their parent-file
-        * rows slice to each child by `hash mod nBuckets`. */
-      nBuckets: Int = 0): DataFrame = {
+      keyFilter: Option[Column] = None): DataFrame = {
     if (entries.isEmpty)
       throw new IllegalStateException(s"snapshot v=$v is empty (all buckets deleted)")
+    val keys = meta.keys
     def sliced(df: DataFrame): DataFrame = keyFilter.fold(df)(df.filter)
-    if (entries.exists(_._2.baseMod.isDefined)) {
-      require(keys.nonEmpty,
-        s"reading a lazily-split store needs its merge keys ($storePath v=$v)")
-      require(nBuckets > 0,
-        s"reading a lazily-split store needs the current bucket count ($storePath v=$v)")
-    }
     // Base files of a group of entries: native entries stream their own
     // dirs; lazily-split children read their PARENT dirs — DEDUPED, since
     // sibling children share one — and slice rows to exactly the wanted
@@ -443,7 +389,7 @@ object Cdc {
           .distinct
         if (dirs.isEmpty) None
         else Some(readBucketDirs(spark, storePath, dirs, meta)
-          .filter(bucketExpr(keys, nBuckets).isin(legacy.map(_._1): _*)))
+          .filter(bucketExpr(keys, meta.nBuckets).isin(legacy.map(_._1): _*)))
       }
       (nativeDf, legacyDf) match {
         case (Some(a), Some(b)) => Some(a.unionByName(b))
@@ -455,8 +401,6 @@ object Cdc {
     val dirtyDf: Option[DataFrame] =
       if (dirty.isEmpty) None
       else {
-        require(keys.nonEmpty,
-          s"merge-on-read fold needs the store's merge keys ($storePath v=$v has pending deltas)")
         val byP = dirty.sortBy(_._1)
         val baseDf = baseOf(byP).map(df =>
           sliced(df).withColumn("__mor_op", lit("U")).withColumn("__mor_seq", lit(0)))
@@ -521,12 +465,13 @@ object Cdc {
   /** Refuse layout arguments that disagree with what the store RECORDED:
     * a wrong nBuckets silently writes rows into (or looks them up in)
     * buckets no reader's hash agrees with; wrong keys silently merge
-    * distinct identities. Stores that recorded neither pass. */
+    * distinct identities. */
   private def requireLayout(
       meta: StoreMeta, storePath: String, keys: Seq[String], nBuckets: Int): Unit = {
-    meta.nBuckets.foreach(n => require(n == nBuckets,
-      s"nBuckets mismatch for $storePath: store is bucketed mod $n, caller passed $nBuckets"))
-    if (meta.keys.nonEmpty) require(meta.keys == keys,
+    require(meta.nBuckets == nBuckets,
+      s"nBuckets mismatch for $storePath: store is bucketed mod ${meta.nBuckets}, " +
+        s"caller passed $nBuckets")
+    require(meta.keys == keys,
       s"merge-key mismatch for $storePath: store records (${meta.keys.mkString(",")}), " +
         s"caller passed (${keys.mkString(",")})")
   }
@@ -694,9 +639,7 @@ object Cdc {
         val committed = manifestVersions(spark, storePath)
         val v = math.max(id, committed.maxOption.map(_ + 1L).getOrElse(id))
         val tmp = new Path(dir, s".${id}_tmp")
-        val out = fs.create(tmp, true)
-        try out.write(v.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        finally out.close()
+        writeUtf8(fs, tmp, v.toString)
         if (fs.rename(tmp, f)) {
           // Retention: Spark replays at most the CURRENT batch id (the
           // checkpoint committed through id−1 before id ever ran), so
@@ -728,7 +671,7 @@ object Cdc {
     *
     * SCHEMA EVOLUTION (`payloadCols`): by default the store's schema is
     * bound to the parent version's recorded schema (or `seed`'s for a
-    * fresh/pre-evolution store) — a changelog column the store does not
+    * fresh store) — a changelog column the store does not
     * know is metadata (recency, op), not payload. Passing `payloadCols`
     * names the batch's payload explicitly, and the store evolves
     * ADDITIVELY: columns in `payloadCols` the stored schema lacks are
@@ -786,12 +729,12 @@ object Cdc {
     // throws [[ConcurrentCdcWriteException]] (retryable: re-read latest,
     // re-mint, re-apply). The store is readable at every instant: until
     // the rename the new version simply does not exist; after it the
-    // manifest is complete (the schema DDL rides INSIDE the renamed dir).
+    // manifest is complete (the metadata rides INSIDE the renamed dir).
     val writerId: Long = if (casCommit) mintCasToken() else id
     val parent = manifestVersions(spark, storePath).filter(_ < id).sorted.lastOption
     val parentEntries: Map[Int, BucketEntry] =
       parent.map(v => readManifestFull(spark, storePath, v)).getOrElse(Map.empty)
-    val parentMeta: Option[StoreMeta] = parent.flatMap(v => storedMeta(spark, storePath, v))
+    val parentMeta: Option[StoreMeta] = parent.map(v => storedMeta(spark, storePath, v))
     parentMeta.foreach(requireLayout(_, storePath, keys, nBuckets))
     val priorSchema = parentMeta.map(_.schema).getOrElse(seed.schema)
     require(!priorSchema.fieldNames.contains(DeltaOpCol) && !batch.columns.contains(DeltaOpCol),
@@ -822,7 +765,7 @@ object Cdc {
     // original): then a suffixed fresh name, so carried files' old data
     // can never resurrect under a re-added logical name
     val targetMeta: StoreMeta = {
-      val base = parentMeta.getOrElse(StoreMeta(priorSchema))
+      val base = parentMeta.getOrElse(StoreMeta(priorSchema, keys, nBuckets))
       var used = base.usedPhysical
       val newMap = target.fieldNames.filterNot(priorSchema.fieldNames.contains)
         .flatMap { c =>
@@ -830,8 +773,7 @@ object Cdc {
           used += p
           if (p == c) None else Some(c -> p)
         }.toMap
-      StoreMeta(target, base.mapping ++ newMap, base.retired, base.mapChangeV, keys,
-        Some(nBuckets))
+      base.copy(schema = target, mapping = base.mapping ++ newMap)
     }
     // Stale-attempt hygiene + mixed-mode guard for EVERY non-CAS commit
     // (copy-on-write and merge-on-read alike): an earlier uncommitted run
@@ -852,7 +794,7 @@ object Cdc {
     }
     if (morCommit && parent.isDefined)
       return morDeltaCommit(batch, keys, orderCols, opCol, storePath, nBuckets, id,
-        writerId, target, targetMeta, parent.get, parentEntries, parentMeta, morMaxDepth,
+        writerId, target, targetMeta, parent.get, parentEntries, parentMeta.get, morMaxDepth,
         casCommit)
     // the delta's bucket set — bounded by nBuckets (config, not data).
     // Also the CAS conflict-detection unit: a racing writer whose own
@@ -876,8 +818,8 @@ object Cdc {
         // byte-equivalent to the all-CoW history
         val touchedSnap =
           if (touchedEntries.isEmpty) conformTo(seed.limit(0), target)
-          else conformTo(readResolvedBuckets(spark, storePath, v, parentMeta, touchedEntries,
-            keys, nBuckets = nBuckets), target)
+          else conformTo(readResolvedBuckets(spark, storePath, v, parentMeta.get,
+            touchedEntries), target)
         (touchedSnap, parentEntries.view.filterKeys(p => !touchedBuckets.contains(p)).toMap)
     }
     // Stale-attempt hygiene: an EARLIER run of this same id (fresh
@@ -992,10 +934,10 @@ object Cdc {
         p -> BucketEntry(Some(writerId), Some(scanned(p)._1), scanned(p)._2)))
         .toSeq.sortBy(_._1)
     if (casCommit) {
-      commitCas(spark, storePath, id, writerId, entries, metaLine(targetMeta),
+      commitCas(spark, storePath, id, writerId, entries, targetMeta,
         touchedBuckets, parentEntries, parentMeta)
     } else {
-      commitNonCas(spark, storePath, id, entries, metaLine(targetMeta))
+      commitNonCas(spark, storePath, id, entries, targetMeta)
       id
     }
     } finally toWriteRdd.foreach(_.unpersist(blocking = false))
@@ -1013,17 +955,15 @@ object Cdc {
     * atomic point: the commit-time re-check refuses a CAS-committed
     * occupant loudly, a replay deletes only its OWN previous commit, and
     * a rename that did not land AS the manifest (a racer recreated the
-    * dir) throws — Spark fails the epoch and the replay re-resolves. */
+    * dir) throws — Spark fails the epoch and the replay re-resolves. The
+    * version's metadata rides INSIDE the staged dir, so the one rename
+    * commits manifest and metadata together. */
   private def commitNonCas(
       spark: org.apache.spark.sql.SparkSession,
       storePath: String,
       id: Long,
       entries: Seq[(Int, BucketEntry)],
-      metaLn: String): Unit = {
-    // schema sidecar FIRST, manifest commit second: a committed version
-    // always carries its schema; a crash between the two leaves an
-    // uncommitted version whose replay overwrites both
-    writeSchemaSidecar(spark, storePath, id, metaLn)
+      meta: StoreMeta): Unit = {
     val stagingName = s"_attempt_v=$id"
     val staging = new org.apache.hadoop.fs.Path(s"${manifestPath(storePath)}/$stagingName")
     val dst = new org.apache.hadoop.fs.Path(s"${manifestPath(storePath)}/v=$id")
@@ -1032,6 +972,7 @@ object Cdc {
     require(fs.exists(new org.apache.hadoop.fs.Path(staging, "_SUCCESS")),
       "manifest commit requires the _SUCCESS visibility marker " +
         s"(written by writeManifestParquet): staged manifest $staging has none")
+    writeUtf8(fs, new org.apache.hadoop.fs.Path(staging, MetaFile), metaLine(meta))
     val dstSuccess = new org.apache.hadoop.fs.Path(dst, "_SUCCESS")
     if (fs.exists(dst)) {
       // commit-point re-check of the mixed-mode guard: the epoch-start
@@ -1095,7 +1036,7 @@ object Cdc {
       targetMeta: StoreMeta,
       parentV: Long,
       parentEntries: Map[Int, BucketEntry],
-      parentMeta: Option[StoreMeta],
+      parentMeta: StoreMeta,
       morMaxDepth: Int,
       casCommit: Boolean): Long = {
     require(morMaxDepth >= 1, "morMaxDepth >= 1")
@@ -1143,8 +1084,7 @@ object Cdc {
       else {
         val deepEntries = deep.toSeq.sorted.flatMap(p => parentEntries.get(p).map(p -> _))
         val prior = conformTo(
-          readResolvedBuckets(spark, storePath, parentV, parentMeta, deepEntries, keys,
-            nBuckets = nBuckets), target)
+          readResolvedBuckets(spark, storePath, parentV, parentMeta, deepEntries), target)
         val deepBatch = batch.filter(bucketExpr(keys, nBuckets).isin(deep.toSeq: _*))
         val merged = upsert(prior, deepBatch, keys, orderCols, opCol)
         val cp = layout(
@@ -1179,13 +1119,13 @@ object Cdc {
           p -> BucketEntry(Some(writerId), Some(deepScanned(p)._1), deepScanned(p)._2)))
         .toSeq.sortBy(_._1)
     if (casCommit)
-      commitCas(spark, storePath, id, writerId, entries, metaLine(targetMeta),
-        touched = touched, parentEntries = parentEntries, parentMeta = parentMeta)
+      commitCas(spark, storePath, id, writerId, entries, targetMeta,
+        touched = touched, parentEntries = parentEntries, parentMeta = Some(parentMeta))
     else {
       // streaming epoch: writerId == id (deterministic), commit via the
       // same stage-and-rename every streaming epoch uses — a replay
       // recomputes the identical delta files and manifest
-      commitNonCas(spark, storePath, id, entries, metaLine(targetMeta))
+      commitNonCas(spark, storePath, id, entries, targetMeta)
       id
     }
     } finally deepCk.foreach(cp => cp.queryExecution.analyzed
@@ -1230,9 +1170,9 @@ object Cdc {
     // layout hash is over VALUES); the recorded keys follow the rename
     val newKeys = meta.keys.map(k => if (k == from) to else k)
     commitMetadataOnly(spark, storePath, parentV, parentEntries, meta,
-      StoreMeta(renamed, meta.mapping - from ++ (if (phys == to) Nil else Seq(to -> phys)),
-        meta.retired, mapChangeV = Some(parentV + 1), keys = newKeys,
-        nBuckets = meta.nBuckets))
+      meta.copy(schema = renamed, keys = newKeys,
+        mapping = meta.mapping - from ++ (if (phys == to) Nil else Seq(to -> phys)),
+        mapChangeV = Some(parentV + 1)))
   }
 
   /** See [[renameColumn]] — ADD COLUMN as a METADATA-ONLY commit: the
@@ -1371,18 +1311,14 @@ object Cdc {
       factor: Int = 2): Long = retryMetadataConflicts {
     require(factor >= 2, "splitBuckets needs factor >= 2")
     val (parentV, meta, parentEntries, _) = servingState(spark, storePath)
-    val oldN = meta.nBuckets.getOrElse(throw new IllegalStateException(
-      s"$storePath records no bucket count (written before layout recording) — " +
-        "commit one batch with the current maintenance API first"))
-    require(meta.keys.nonEmpty,
-      s"$storePath records no merge keys — the split's read-time slice needs them")
+    val oldN = meta.nBuckets
     val pendingDeltas = parentEntries.filter(_._2.deltas.nonEmpty).keys.toSeq.sorted
     require(pendingDeltas.isEmpty,
       s"splitBuckets refuses stores with pending merge-on-read deltas (buckets " +
         s"${pendingDeltas.take(8).mkString(",")}) — run compactStore first")
     val entries = expandEntries(parentEntries, oldN, oldN * factor).toSeq.sortBy(_._1)
     commitCas(spark, storePath, parentV + 1, mintCasToken(), entries,
-      metaLine(meta.copy(nBuckets = Some(oldN * factor))),
+      meta.copy(nBuckets = oldN * factor),
       touched = Set.empty, parentEntries = parentEntries, parentMeta = Some(meta),
       maxRebases = 0) // re-derive on conflict: the expansion is parent-shaped
   }
@@ -1409,13 +1345,11 @@ object Cdc {
     require(meta.schema.fieldNames.contains(name), s"no column $name in ${meta.schema.toDDL}")
     require(meta.schema.length > 1, "cannot drop the last column")
     commitMetadataOnly(spark, storePath, parentV, parentEntries, meta,
-      StoreMeta(
-        org.apache.spark.sql.types.StructType(meta.schema.fields.filterNot(_.name == name)),
-        meta.mapping - name,
-        meta.retired :+ meta.phys(name),
-        mapChangeV = Some(parentV + 1),
-        keys = meta.keys,
-        nBuckets = meta.nBuckets))
+      meta.copy(
+        schema = org.apache.spark.sql.types.StructType(meta.schema.fields.filterNot(_.name == name)),
+        mapping = meta.mapping - name,
+        retired = meta.retired :+ meta.phys(name),
+        mapChangeV = Some(parentV + 1)))
   }
 
   /** Mint a fresh PHYSICAL column name for logical name `name`: the name
@@ -1489,7 +1423,7 @@ object Cdc {
           else Some(dirRowCount(spark, bucketDir(storePath, p, e.base.get)))
         p -> e.copy(rows = rows)
       }.sortBy(_._1)
-    commitCas(spark, storePath, parentV + 1, mintCasToken(), entries, metaLine(newMeta),
+    commitCas(spark, storePath, parentV + 1, mintCasToken(), entries, newMeta,
       touched = Set.empty, parentEntries = parentEntries, parentMeta = Some(parentMeta),
       maxRebases = 0) // the caller re-derives on conflict (mapChangeV must match the id)
   }
@@ -1504,10 +1438,10 @@ object Cdc {
 
   /** Compare-and-swap manifest commit: stage the manifest parquet under a
     * token-unique `_attempt_w=<token>` dir (underscore-prefixed —
-    * invisible to every manifest reader), embed the version's schema DDL
-    * inside it as [[CasMetaFile]] (so ONE atomic rename commits manifest
-    * and schema together; [[storedMeta]] reads it from the committed
-    * dir), then rename onto `v=<id>`.
+    * invisible to every manifest reader), with the version's metadata
+    * file and the empty [[CasMarker]] provenance marker inside it (so
+    * ONE atomic rename commits manifest, metadata and provenance
+    * together), then rename onto `v=<id>`.
     *
     * Rename-as-CAS needs one extra verification on local filesystems:
     * HDFS `rename` atomically fails when the destination exists, but
@@ -1544,7 +1478,7 @@ object Cdc {
       id: Long,
       writerId: Long,
       entries: Seq[(Int, BucketEntry)],
-      metaLn: String,
+      meta: StoreMeta,
       touched: Set[Int],
       parentEntries: Map[Int, BucketEntry],
       parentMeta: Option[StoreMeta],
@@ -1557,10 +1491,10 @@ object Cdc {
     // rebases (the part files are already on disk and stay valid as long
     // as every winner we rebase past left those buckets alone)
     val ours: Map[Int, BucketEntry] = entries.toMap.view.filterKeys(touched.contains).toMap
+    val metaLn = metaLine(meta)
     var curId = id
     var curEntries: Seq[(Int, BucketEntry)] = entries
     var curParent: Map[Int, BucketEntry] = parentEntries
-    var curParentMeta: Option[StoreMeta] = parentMeta
     var rebases = 0
     def conflict(detail: String): Nothing = {
       if (fs.exists(staging)) fs.delete(staging, true)
@@ -1579,9 +1513,8 @@ object Cdc {
       require(fs.exists(new org.apache.hadoop.fs.Path(staging, "_SUCCESS")),
         "CAS commit requires the _SUCCESS visibility marker " +
           s"(written by writeManifestParquet): staged manifest $staging has none")
-      val out = fs.create(new org.apache.hadoop.fs.Path(staging, CasMetaFile), true)
-      try out.write(metaLn.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
+      writeUtf8(fs, new org.apache.hadoop.fs.Path(staging, MetaFile), metaLn)
+      writeUtf8(fs, new org.apache.hadoop.fs.Path(staging, CasMarker), "")
       // TORN-DIRECTORY HEAL: a v=<id> dir WITHOUT _SUCCESS is a crashed
       // non-CAS (streaming) attempt — invisible to committedVersions, so
       // without this purge every CAS retry would re-mint the same id,
@@ -1600,11 +1533,6 @@ object Cdc {
       val landed = renamed && fs.exists(dstSuccess) &&
         !fs.exists(new org.apache.hadoop.fs.Path(dst, stagingName))
       if (landed) {
-        // compatibility sidecar for external tooling that lists schema/
-        // dirs; the committed manifest's embedded metadata is
-        // authoritative (storedMeta reads it first), so a crash here
-        // loses nothing
-        writeSchemaSidecar(spark, storePath, curId, metaLn)
         maybeCheckpointHistory(spark, storePath, curId)
         return curId
       }
@@ -1622,8 +1550,10 @@ object Cdc {
         catch { case scala.util.control.NonFatal(_) =>
           conflict(s"v=$curId was committed by another writer while this batch was " +
             "staging, and its manifest is not yet readable") }
-      val winnerMeta = storedMeta(spark, storePath, curId)
-      val metaUnchanged = (curParentMeta, winnerMeta) match {
+      val winnerMeta =
+        try Some(storedMeta(spark, storePath, curId))
+        catch { case scala.util.control.NonFatal(_) => None }
+      val metaUnchanged = (parentMeta, winnerMeta) match {
         case (Some(a), Some(b)) =>
           a.schema == b.schema && a.mapping == b.mapping && a.retired == b.retired &&
             // a LAYOUT change (splitBuckets, key re-record) re-addresses
@@ -1668,8 +1598,7 @@ object Cdc {
       storePath: String,
       version: Option[Long] = None): DataFrame = {
     val (v, meta, manifest, _) = servingState(spark, storePath, version)
-    readResolvedBuckets(spark, storePath, v, Some(meta), manifest.toSeq.sortBy(_._1), meta.keys,
-      nBuckets = meta.nBuckets.getOrElse(0))
+    readResolvedBuckets(spark, storePath, v, meta, manifest.toSeq.sortBy(_._1))
   }
 
   /** Committed manifest versions (the store's serving history). */
@@ -1951,16 +1880,15 @@ object Cdc {
         lookup.select(bucketExpr(keys, nBuckets).as("_b")).distinct().as[Int].collect().toSet
     val entries = manifest.toSeq.filter { case (p, _) => wantedBuckets.contains(p) }.sortBy(_._1)
     if (entries.isEmpty)
-      return readResolvedBuckets(spark, storePath, v, Some(meta), manifest.toSeq.sortBy(_._1),
-        keys, nBuckets = nBuckets).limit(0).filter(lit(false))
+      return readResolvedBuckets(spark, storePath, v, meta, manifest.toSeq.sortBy(_._1))
+        .limit(0).filter(lit(false))
     val keyPanel: Option[Column] =
       if (!bounded) None // a huge panel is a join, not a point lookup
       else Some(keys.zipWithIndex.map { case (k, i) =>
         val vs = panelRows.iterator.map(_.get(i)).filter(_ != null).toArray[Any].distinct
         if (vs.isEmpty) lit(false) else col(k).isin(vs.toIndexedSeq: _*)
       }.reduce(_ && _))
-    readResolvedBuckets(spark, storePath, v, Some(meta), entries, keys, keyPanel,
-      nBuckets = nBuckets)
+    readResolvedBuckets(spark, storePath, v, meta, entries, keyPanel)
       .join(broadcast(lookup.select(keys.map(col): _*).distinct()), keys, "left_semi")
   }
 
@@ -2073,20 +2001,19 @@ object Cdc {
     // live at pre-split coordinates the child-entry bookkeeping cannot
     // address): compact, or bootstrap from snapshots.
     val toMeta = storedMeta(spark, storePath, toV)
-    val mod1 = storedMeta(spark, storePath, fromV).flatMap(_.nBuckets)
-    val mod2 = toMeta.flatMap(_.nBuckets)
-    val curMod = mod2.getOrElse(0)
-    val m1 = (mod1, mod2) match {
-      case (Some(a), Some(b)) if a != b =>
-        require(b > a && b % a == 0,
-          s"cannot diff across incompatible layouts of $storePath (mod $a -> mod $b)")
+    val mod1 = storedMeta(spark, storePath, fromV).nBuckets
+    val mod2 = toMeta.nBuckets
+    val m1 =
+      if (mod1 == mod2) m1raw
+      else {
+        require(mod2 > mod1 && mod2 % mod1 == 0,
+          s"cannot diff across incompatible layouts of $storePath (mod $mod1 -> mod $mod2)")
         require(m1raw.values.forall(_.deltas.isEmpty),
           s"change feeds across a bucket split need a delta-free from-version " +
             s"(v=$fromV has pending merge-on-read deltas) — compact first, or " +
             "bootstrap from snapshots")
-        expandEntries(m1raw, a, b)
-      case _ => m1raw
-    }
+        expandEntries(m1raw, mod1, mod2)
+      }
     // identical (base, deltas, split marker) entry ⇒ identical FILES
     // (carried by reference) ⇒ zero diff, zero IO. rows/stats are
     // recording detail, not content identity — compare the file
@@ -2105,8 +2032,7 @@ object Cdc {
     def slice(manifest: Map[Int, BucketEntry]): Option[DataFrame] = {
       val entries = changed.flatMap(p => manifest.get(p).map(p -> _))
       if (entries.isEmpty) None
-      else Some(readResolvedBuckets(spark, storePath, toV, toMeta, entries, keys,
-        nBuckets = curMod))
+      else Some(readResolvedBuckets(spark, storePath, toV, toMeta, entries))
     }
     // schema source for empty sides: whichever side has data; if NEITHER
     // version stores any row in a changed bucket the feed is empty — but
@@ -2265,7 +2191,6 @@ object Cdc {
     }
     vs.filterNot(keep).foreach { v =>
       fs.delete(new org.apache.hadoop.fs.Path(s"${manifestPath(storePath)}/v=$v"), true)
-      fs.delete(new org.apache.hadoop.fs.Path(s"${schemaPath(storePath)}/v=$v"), true)
     }
   }
 
@@ -2400,8 +2325,7 @@ object Cdc {
     }
     if (dirty.isEmpty) return None
     val token = mintCasToken()
-    val resolved = readResolvedBuckets(spark, storePath, v, Some(meta), dirty.toSeq.sortBy(_._1),
-      keys, nBuckets = nBuckets)
+    val resolved = readResolvedBuckets(spark, storePath, v, meta, dirty.toSeq.sortBy(_._1))
     val physKeys = keys.map(meta.phys)
     val statsOn = statsCollectionOn(meta.schema)
     val renamed = resolved
@@ -2483,7 +2407,7 @@ object Cdc {
     val newEntries = ((entries -- dirty.keySet) ++ written.map(p =>
       p -> BucketEntry(Some(token), Some(scanned(p)._1), scanned(p)._2)))
       .toSeq.sortBy(_._1)
-    Some(commitCas(spark, storePath, v + 1, token, newEntries, metaLine(meta),
+    Some(commitCas(spark, storePath, v + 1, token, newEntries, meta,
       touched = dirty.keySet, parentEntries = entries, parentMeta = Some(meta)))
     } finally clusteredRdd.foreach(_.unpersist(blocking = false))
   }
@@ -2963,11 +2887,7 @@ object Cdc {
       : (Long, StoreMeta, Map[Int, BucketEntry], Map[Int, String]) = {
     val v = resolveVersion(spark, storePath, version)
     val manifest = readManifestFull(spark, storePath, v)
-    // a version without recorded metadata (a store written before it was
-    // recorded) serves its file-derived schema; an empty one has none
-    // and refuses (all buckets deleted)
-    val meta = storedMeta(spark, storePath, v).getOrElse(StoreMeta(
-      readResolvedBuckets(spark, storePath, v, None, manifest.toSeq.sortBy(_._1), Nil).schema))
+    val meta = storedMeta(spark, storePath, v)
     val dirs = manifest.collect { case (p, e) if e.base.isDefined =>
       // a lazily-split child's base files live at its PARENT coordinate
       p -> bucketDir(storePath, e.physBucket(p), e.base.get)

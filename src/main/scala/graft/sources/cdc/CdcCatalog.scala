@@ -62,7 +62,7 @@ object CdcCatalog {
       /** Per-store opt-in for STRING min/max footer-statistics pushdown:
         * set true only when every writer of this store provably keeps
         * binary statistics exact (no parquet.statistics.truncate.length)
-        * — the per-store decision the session-global toggle can't make. */
+        * — a per-store decision, so it lives on the registration. */
       trustStringStats: Boolean = false,
       /** Per-store opt-in for MERGE-ON-READ writes: SQL
         * MERGE/UPDATE/DELETE/INSERT — and streaming `writeStream.toTable`
@@ -235,8 +235,7 @@ object CdcCatalog {
     // post-split count rather than multiplying each sibling's own
     // (possibly already-stale) nBuckets — the update heals a drifted
     // registration instead of compounding its error
-    val (_, meta, _, _) = Cdc.servingState(spark, d.storePath)
-    val newN = meta.nBuckets.getOrElse(d.nBuckets * factor)
+    val newN = Cdc.storedMeta(spark, d.storePath, v).nBuckets
     registry.foreach { case (n, def_) =>
       if (def_.storePath == d.storePath && def_.version.isEmpty)
         registry.put(n, def_.copy(nBuckets = newN))
@@ -433,9 +432,7 @@ class CdcCatalog extends TableCatalog with FunctionCatalog {
     * the live registration's evolved one. */
   private def pinnedAt(d: CdcCatalog.StoreDef, v: Long): CdcCatalog.StoreDef = {
     val (_, recorded, _, _) = Cdc.servingState(SparkSession.active, d.storePath, Some(v))
-    d.copy(version = Some(v),
-      keys = if (recorded.keys.nonEmpty) recorded.keys else d.keys,
-      nBuckets = recorded.nBuckets.getOrElse(d.nBuckets))
+    d.copy(version = Some(v), keys = recorded.keys, nBuckets = recorded.nBuckets)
   }
 
   /** SQL time travel — `TIMESTAMP AS OF <t>` serves the newest version
@@ -729,10 +726,10 @@ class CdcStoreTable(tableName: String, d: CdcCatalog.StoreDef)
     // wrong nBuckets/key set wouldn't fail — key-panel and runtime bucket
     // pruning would hash into buckets the rows don't live in and serve
     // silently WRONG (missing) results
-    storeMeta.nBuckets.foreach(n => require(n == d.nBuckets,
+    require(storeMeta.nBuckets == d.nBuckets,
       s"$tableName registration bucket count ${d.nBuckets} does not match the store's " +
-        s"recorded layout (mod $n)"))
-    if (storeMeta.keys.nonEmpty) require(storeMeta.keys == d.keys,
+        s"recorded layout (mod ${storeMeta.nBuckets})")
+    require(storeMeta.keys == d.keys,
       s"$tableName registration keys (${d.keys.mkString(",")}) do not match the store's " +
         s"recorded merge keys (${storeMeta.keys.mkString(",")})")
   }

@@ -48,9 +48,13 @@ import org.apache.spark.sql.vectorized.ColumnarBatch
   *  - HADOOP CONF: files open with the session's Hadoop conf, captured
   *    on the driver ([[graft.sources.SessionHadoopConf]]) and shipped as
   *    `confMap`.
+  *  - FILE SIZES come with the paths, from the driver's planning listing:
+  *    they bound each file's split (no per-file status call) and are what
+  *    the `filesSize` task metric sums over the files opened.
   */
 class CdcColumnarReader(
-    files: Array[String],
+    /** (path, on-disk size in bytes) per file, in read order. */
+    files: Array[(String, Long)],
     requiredSchema: StructType,
     confMap: Map[String, String],
     keyFilters: Array[(String, Array[Any])] = Array.empty,
@@ -141,22 +145,25 @@ class CdcColumnarReader(
 
   private var fileIdx = -1
   private var opened = 0
+  private var openedBytes = 0L
   private var reader: VectorizedParquetRecordReader = _
   private var batch: ColumnarBatch = _ // the reader's reused batch, remapped
 
   /** Files opened so far (every file counts, row groups pruned or not). */
   def filesOpened: Int = opened
+  /** On-disk bytes of the files opened so far. */
+  def bytesOpened: Long = openedBytes
 
   override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    Array(CdcMetrics.Value("filesOpened", opened.toLong))
+    CdcMetrics.readValues(opened, openedBytes)
 
   private def openNext(): Boolean = {
     if (reader != null) { reader.close(); reader = null }
     batch = null
     fileIdx += 1
     if (fileIdx >= files.length) return false
-    val path = new Path(files(fileIdx))
-    val len = path.getFileSystem(conf).getFileStatus(path).getLen
+    val (file, len) = files(fileIdx)
+    val path = new Path(file)
     if (sourceFilters.nonEmpty) {
       // per-file: the translator needs the file's schema (one footer
       // metadata read; the panel part of the filter stays partition-
@@ -182,6 +189,7 @@ class CdcColumnarReader(
     r.enableReturningBatches()
     reader = r
     opened += 1
+    openedBytes += len
     true
   }
 

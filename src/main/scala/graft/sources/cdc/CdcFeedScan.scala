@@ -164,7 +164,6 @@ class CdcFeedScanBuilder(
 
   override def pushAggregation(
       aggregation: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean = {
-    if (!CdcStatsScan.enabled) return false
     if (pushed.nonEmpty || loV.isDefined || hiV.isDefined) return false
     // `_change_type` is data the files carry; the version/timestamp
     // CONSTANT columns are excluded (absent from fine-grained footers —
@@ -183,7 +182,7 @@ class CdcFeedScanBuilder(
       case Some(aggs) =>
         val filesByUnit: Map[Int, Array[String]] =
           CdcFeedScan.retainedUnits(d.feedPath).zipWithIndex.map { case (u, i) =>
-            i -> CdcFeedScan.dirFiles(CdcFeedScan.unitDir(d.feedPath, u)).toArray
+            i -> CdcFeedScan.dirFiles(CdcFeedScan.unitDir(d.feedPath, u)).map(_._1).toArray
           }.toMap
         return new CdcStatsScan(table.name(), aggs, filesByUnit)
       case None => ()
@@ -330,14 +329,15 @@ object CdcFeedScan {
   private[cdc] def retainedVersions(feedPath: String): Seq[Long] =
     retainedUnits(feedPath).flatMap(u => u.lo to u.hi)
 
-  /** Driver-side listing of one unit directory's part files. */
-  private[cdc] def dirFiles(dir: String): Seq[String] = {
+  /** Driver-side listing of one directory's part files: (path, on-disk
+    * size), by path. */
+  private[cdc] def dirFiles(dir: String): Seq[(String, Long)] = {
     val p = new Path(dir)
     val fs = p.getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration)
     fs.listStatus(p).toSeq
       .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-      .map(_.getPath.toString)
-      .sorted
+      .map(st => st.getPath.toString -> st.getLen)
+      .sortBy(_._1)
   }
 
   private[cdc] def unitDir(feedPath: String, u: FeedUnit): String = u match {
@@ -363,7 +363,8 @@ object CdcFeedScan {
 }
 
 case class CdcFeedPartition(
-    files: Array[String],
+    /** (path, on-disk size) per file. */
+    files: Array[(String, Long)],
     commitTsMicros: Long = 0L,
     tsInData: Boolean = false)
     extends InputPartition
@@ -372,7 +373,8 @@ case class CdcFeedPartition(
   * as CDF `insert` rows via per-partition constants (`_change_type`,
   * `_commit_version`, `_commit_timestamp` exist in no store file). */
 case class CdcSnapshotPartition(
-    files: Array[String],
+    /** (path, on-disk size) per file. */
+    files: Array[(String, Long)],
     commitVersion: Long,
     commitTsMicros: Long)
     extends InputPartition

@@ -12,7 +12,10 @@ import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, Cus
   * filtering): planned/statically-pruned/runtime-pruned bucket counts
   * and the planned file count. Task metrics (summed across readers):
   * files actually opened — with row-group pruning, fewer opens than
-  * planned files means the panel filter is biting. */
+  * planned files means the panel filter is biting — and `filesSize`,
+  * the on-disk bytes of those files (the definition of Spark's own file
+  * scan metric of that name; the footer-only stats and count scans
+  * report none). */
 object CdcMetrics {
   class PlannedBuckets extends CustomSumMetric {
     override def name(): String = "plannedBuckets"
@@ -34,6 +37,10 @@ object CdcMetrics {
     override def name(): String = "filesOpened"
     override def description(): String = "store files actually opened by readers"
   }
+  class FilesSize extends CustomSumMetric {
+    override def name(): String = "filesSize"
+    override def description(): String = "on-disk bytes of the store files readers opened"
+  }
   class StatsFallbackFiles extends CustomSumMetric {
     override def name(): String = "statsFallbackFiles"
     override def description(): String =
@@ -42,7 +49,11 @@ object CdcMetrics {
 
   def scanMetrics: Array[CustomMetric] = Array(
     new PlannedBuckets, new StaticPrunedBuckets, new RuntimePrunedBuckets,
-    new PlannedFiles, new FilesOpened, new StatsFallbackFiles)
+    new PlannedFiles, new FilesOpened, new FilesSize, new StatsFallbackFiles)
+
+  /** A file reader's task metrics: files opened and their on-disk bytes. */
+  def readValues(filesOpened: Int, bytes: Long): Array[CustomTaskMetric] =
+    Array(Value("filesOpened", filesOpened.toLong), Value("filesSize", bytes))
 
   case class Value(metricName: String, value: Long) extends CustomTaskMetric {
     override def name(): String = metricName

@@ -85,9 +85,6 @@ class CdcScanBuilder(table: CdcStoreTable, d: CdcCatalog.StoreDef)
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     import CdcScan.MaxInPanel
-    val keyTypes = d.keys.map(k => table.schema()(k).dataType)
-    def bucketOf(values: Seq[Any]): Int =
-      graft.operators.Cdc.bucketOfLiterals(values.zip(keyTypes), d.nBuckets)
     // per-key literal value panel from `=` / null-safe `=` / IN
     // (several conjuncts on one key → the tightest panel wins)
     val panels: Map[String, Seq[Any]] = filters.toSeq.collect {
@@ -98,21 +95,15 @@ class CdcScanBuilder(table: CdcStoreTable, d: CdcCatalog.StoreDef)
     }.groupBy(_._1).map { case (k, ps) => k -> ps.map(_._2).minBy(_.length) }
     keyPanels = panels
     dataFilters = filters
-    if (d.keys.forall(panels.contains)) {
-      // cross product of per-key panels (bounded: singletons except IN)
-      val combos = d.keys.foldLeft(Seq(Seq.empty[Any])) { (acc, k) =>
-        acc.flatMap(prefix => panels(k).map(v => prefix :+ v))
+    prunedBuckets = CdcScan.panelBuckets(
+      d.keys, d.keys.map(k => table.schema()(k).dataType), d.nBuckets, panels)
+    if (prunedBuckets.isDefined)
+      pushed = filters.filter {
+        case EqualTo(a, _) => d.keys.contains(a)
+        case EqualNullSafe(a, _) => d.keys.contains(a)
+        case In(a, _) => d.keys.contains(a)
+        case _ => false
       }
-      if (combos.length <= MaxInPanel) {
-        prunedBuckets = Some(combos.map(bucketOf).toSet)
-        pushed = filters.filter {
-          case EqualTo(a, _) => d.keys.contains(a)
-          case EqualNullSafe(a, _) => d.keys.contains(a)
-          case In(a, _) => d.keys.contains(a)
-          case _ => false
-        }
-      }
-    }
     filters // Spark re-evaluates everything; pruning is layout advice
   }
 
@@ -175,7 +166,6 @@ class CdcScanBuilder(table: CdcStoreTable, d: CdcCatalog.StoreDef)
 
   override def pushAggregation(
       aggregation: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean = {
-    if (!CdcStatsScan.enabled) return false
     if (pushed.nonEmpty || keyPanels.nonEmpty || prunedBuckets.nonEmpty) return false
     // pending merge-on-read deltas: footer statistics and manifest counts
     // describe PRE-FOLD rows (tombstones included) — folding aggregates
@@ -215,7 +205,7 @@ class CdcScanBuilder(table: CdcStoreTable, d: CdcCatalog.StoreDef)
           case CdcStatsScan.FCountStar        => CdcStatsScan.FCountStar
         }
         val statFiles: Map[Int, Array[String]] = table.bucketDirs.map { case (b, dir) =>
-          b -> CdcFeedScan.dirFiles(dir).toArray
+          b -> CdcFeedScan.dirFiles(dir).map(_._1).toArray
         }
         return new CdcStatsScan(table.name(), physAggs, statFiles)
       case None => ()
@@ -336,6 +326,26 @@ object CdcScan {
     * [[graft.operators.Cdc.lookupKeys]]' driver-collected key panel. */
   private[graft] val MaxInPanel = 1024
 
+  /** The bounded cross product of per-key literal panels, in key order:
+    * `None` when some key has no panel or the product would exceed
+    * [[MaxInPanel]] (over the cap the panel is a join in disguise). */
+  private def panelTuples(
+      keys: Seq[String], panels: Map[String, Iterable[Any]]): Option[Seq[Seq[Any]]] =
+    if (!keys.forall(panels.contains) ||
+      keys.map(k => panels(k).size.toLong).product > MaxInPanel) None
+    else Some(keys.foldLeft(Seq(Seq.empty[Any]))((acc, k) =>
+      acc.flatMap(t => panels(k).iterator.map(v => t :+ v))))
+
+  /** The buckets the [[panelTuples]] product hashes to through the layout
+    * function — a superset of every matching row's bucket, so a bucket
+    * outside it holds no match. What static and runtime bucket pruning
+    * share. */
+  private[cdc] def panelBuckets(
+      keys: Seq[String], keyTypes: Seq[DataType], nBuckets: Int,
+      panels: Map[String, Iterable[Any]]): Option[Set[Int]] =
+    panelTuples(keys, panels).map(_.iterator.map(t =>
+      graft.operators.Cdc.bucketOfLiterals(t.zip(keyTypes), nBuckets)).toSet)
+
   /** Parse V2 predicate conjuncts into the bounded EXTERNAL key tuples
     * they pin: every conjunct must be `=` / bounded `IN` on a merge key
     * (nested ANDs are flattened), every key must end up pinned, and the
@@ -380,10 +390,7 @@ object CdcScan {
     // nothing (an empty panel means the predicate matches no row at all)
     val byKey = conjuncts.flatMap(_.get)
       .groupBy(_._1).view.mapValues(_.map(_._2).reduce(_ intersect _).filter(_ != null)).toMap
-    if (!keys.forall(byKey.contains)) return None
-    val tuples = keys.map(k => byKey(k).toSeq)
-      .foldLeft(Seq(Seq.empty[Any]))((acc, vs) => acc.flatMap(t => vs.map(v => t :+ v)))
-    if (tuples.size > MaxInPanel) None else Some(tuples)
+    panelTuples(keys, byKey)
   }
 }
 
@@ -466,18 +473,10 @@ class CdcScan(
       val byKey = panels.groupBy(_._1).view
         .mapValues(_.map(_._2).reduce(_ intersect _).filter(_ != null)).toMap
       runtimePanels = byKey
-      if (keys.forall(byKey.contains)) {
-        // bounded cross-product of per-key panels → the bucket superset,
-        // exactly the static pushFilters construction. Over the cap the
-        // product is a join in disguise: keep row-group panels, skip
-        // bucket pruning.
-        val combos = keys.foldLeft(Seq(Seq.empty[Any])) { (acc, k) =>
-          acc.flatMap(prefix => byKey(k).toSeq.map(v => prefix :+ v))
-        }
-        if (combos.length <= CdcScan.MaxInPanel)
-          runtimeBuckets = Some(combos.map(c =>
-            graft.operators.Cdc.bucketOfLiterals(c.zip(keyTypes), nBuckets)).toSet)
-      }
+      // the bucket superset, exactly the static pushFilters construction;
+      // over the cap, keep row-group panels and skip bucket pruning
+      val buckets = CdcScan.panelBuckets(keys, keyTypes, nBuckets, byKey)
+      if (buckets.isDefined) runtimeBuckets = buckets
     }
   }
 
@@ -524,10 +523,10 @@ class CdcScan(
       .filter(b => runtimeBuckets.forall(_.contains(b)))
       .map { b =>
         // every delta level's files, oldest level first
-        val deltas = deltaFilesByBucket.getOrElse(b, Array.empty).flatMap(_.map(_._1))
+        val deltas = deltaFilesByBucket.getOrElse(b, Array.empty).flatten
         val sliced = slicedBuckets.contains(b)
         val rowPath = deltas.nonEmpty || sliced
-        CdcBucketPartition(b, filesByBucket.getOrElse(b, Array.empty).map(_._1), panels,
+        CdcBucketPartition(b, filesByBucket.getOrElse(b, Array.empty), panels,
           // a delta'd partition FOLDS: row-group/record pruning by
           // arbitrary payload predicates could drop a key's newest delta
           // row while keeping its base row — resurrecting the stale
@@ -694,12 +693,13 @@ class CdcScan(
 
 case class CdcBucketPartition(
     bucket: Int,
-    files: Array[String],
+    /** (path, on-disk size) per base file. */
+    files: Array[(String, Long)],
     keyFilters: Array[(String, Array[Any])] = Array.empty,
     sourceFilters: Array[Filter] = Array.empty,
     /** Merge-on-read delta files, levels in manifest (commit) order —
       * when non-empty the reader folds base + deltas last-writer-wins. */
-    deltaFiles: Array[String] = Array.empty,
+    deltaFiles: Array[(String, Long)] = Array.empty,
     /** The merge keys' PHYSICAL column names + types (set when
       * deltaFiles is non-empty or sliceN > 0): the fold's row identity
       * and the slice's hash input, read from the files even when the
@@ -794,9 +794,9 @@ class CdcReaderFactory(
   * the planner hands a folding partition none (`sourceFilters` reach the
   * base only, and only on partitions with no deltas and no slice). */
 class CdcMorPartitionReader(
-    baseFiles: Array[String],
+    baseFiles: Array[(String, Long)],
     /** Every delta level's files, oldest level first. */
-    deltaFiles: Array[String],
+    deltaFiles: Array[(String, Long)],
     requiredSchema: StructType,
     confMap: Map[String, String],
     keyNames: Array[String],
@@ -843,7 +843,7 @@ class CdcMorPartitionReader(
 
   // final verdict per delta'd key: true = tombstoned, false = row below wins
   private val verdicts = new java.util.LinkedHashMap[List[Any], (Boolean, InternalRow)]()
-  private val deltaFilesOpened: Int = {
+  private val (deltaFilesOpened, deltaBytesOpened) = {
     // constants (e.g. the `_bucket` metadata column) fill absent fields
     // inside the reader, same as for base files
     val r = new CdcColumnarReader(deltaFiles, deltaSchema, confMap, keyFilters, constants)
@@ -856,7 +856,7 @@ class CdcMorPartitionReader(
           verdicts.put(keyOf(row), (del, row))
         }
       }
-      r.filesOpened
+      (r.filesOpened, r.bytesOpened)
     } finally r.close()
   }
 
@@ -870,7 +870,8 @@ class CdcMorPartitionReader(
   private var current: InternalRow = _
 
   override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    Array(CdcMetrics.Value("filesOpened", (deltaFilesOpened + base.filesOpened).toLong))
+    CdcMetrics.readValues(deltaFilesOpened + base.filesOpened,
+      deltaBytesOpened + base.bytesOpened)
 
   // a verdict row carries the op marker (and any appended keys) past the
   // scan's declared schema

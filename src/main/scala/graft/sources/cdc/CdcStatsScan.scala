@@ -34,12 +34,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * Store files carry only LIVE rows (merge rewrites buckets, `op=D`
   * rows never land), so footer statistics ARE snapshot statistics. */
 object CdcStatsScan {
-  /** Session toggle (driver-side, default on) — the escape hatch for
-    * exotic writers whose footers lack statistics. */
-  private[cdc] def enabled: Boolean =
-    scala.util.Try(org.apache.spark.sql.SparkSession.active.conf
-      .get("graft.cdc.statsPushdown")).toOption.forall(_.toBoolean)
-
   /** One pushed aggregate, in output order. */
   private[cdc] sealed trait FooterAgg
   private[cdc] case class FMin(col: String, dt: DataType) extends FooterAgg
@@ -68,15 +62,12 @@ object CdcStatsScan {
     * jars), so the correct-or-loud guard can never fire and a pushed
     * `max(name)` could return a string that exists in no row. Upstream
     * Spark excludes String/Binary from parquet min/max aggregate
-    * pushdown for exactly this reason. Default OFF; opt in
-    * (`graft.cdc.statsPushdown.stringMinMax=true`) only for stores whose
-    * writers provably keep statistics exact — the engine's own writers
-    * do unless the session sets a truncate length (parquet-mr's default
-    * is no truncation; the 4 KB size-cap DROP is a separate case this
-    * scan already handles loudly). */
-  private[cdc] def stringMinMaxEnabled: Boolean =
-    scala.util.Try(org.apache.spark.sql.SparkSession.active.conf
-      .get("graft.cdc.statsPushdown.stringMinMax")).toOption.exists(_.toBoolean)
+    * pushdown for exactly this reason. Default OFF; a registration opts
+    * in (`trustStringStats = true`, [[CdcCatalog.StoreDef]]) only for
+    * stores whose writers provably keep statistics exact — the engine's
+    * own writers do unless the session sets a truncate length
+    * (parquet-mr's default is no truncation; the 4 KB size-cap DROP is a
+    * separate case this scan already handles loudly). */
 
   /** Pushed-aggregate output schema. Spark matches the scan's output to
     * the pushed expressions POSITIONALLY, but the names must still be
@@ -116,7 +107,7 @@ object CdcStatsScan {
       schema: StructType,
       excluded: Set[String],
       nonNullCols: Set[String],
-      trustStringStats: Boolean = false): Option[Seq[FooterAgg]] = {
+      trustStringStats: Boolean): Option[Seq[FooterAgg]] = {
     import org.apache.spark.sql.connector.expressions.aggregate.{Count, CountStar, Max, Min}
     import org.apache.spark.sql.connector.expressions.NamedReference
     if (aggregation.groupByExpressions().nonEmpty) return None
@@ -132,7 +123,7 @@ object CdcStatsScan {
       fieldOf(e).map(c => c -> schema(c).dataType)
         .filter { case (_, dt) =>
           MinMaxTypes.contains(dt) &&
-            (dt != StringType || trustStringStats || stringMinMaxEnabled) }
+            (dt != StringType || trustStringStats) }
     val parsed: Seq[Option[FooterAgg]] = aggregation.aggregateExpressions().toSeq.map {
       case _: CountStar => Some(FCountStar)
       case c: Count if !c.isDistinct =>
@@ -199,8 +190,7 @@ class CdcStatsReaderFactory(aggs: Seq[CdcStatsScan.FooterAgg], confMap: Map[Stri
   * failing the job — the other 99.9% of a large store keeps the
   * footer-only cost, and a 3-hour job never dies at hour two over one
   * exotic file. Exactness is preserved: the fallback reads rows, it
-  * never guesses. (The `graft.cdc.statsPushdown=false` session toggle
-  * remains the plan-level escape hatch.) */
+  * never guesses. */
 class CdcStatsReader(
     files: Array[String], aggs: Seq[CdcStatsScan.FooterAgg], confMap: Map[String, String])
     extends PartitionReader[InternalRow] {
@@ -325,8 +315,9 @@ class CdcStatsReader(
       mins: Array[Any], maxs: Array[Any], counts: Array[Long]): Unit = {
     // COUNT(*) / COUNT(non-null key) come from the footer's row count —
     // that metadata exists in every parquet file regardless of statistics
+    val in = HadoopInputFile.fromPath(new Path(f), conf)
     val fileRows = {
-      val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f), conf))
+      val r = ParquetFileReader.open(in)
       try r.getRecordCount finally r.close()
     }
     val needed: Seq[(String, DataType)] = aggs.collect {
@@ -337,7 +328,7 @@ class CdcStatsReader(
     val schema = StructType(needed.map { case (c, dt) => StructField(c, dt, nullable = true) })
     val idx: Map[String, Int] = needed.map(_._1).zipWithIndex.toMap
     if (needed.nonEmpty) {
-      val rdr = new CdcColumnarReader(Array(f), schema, confMap)
+      val rdr = new CdcColumnarReader(Array(f -> in.getLength), schema, confMap)
       try {
         while (rdr.next()) {
           val batch = rdr.get()

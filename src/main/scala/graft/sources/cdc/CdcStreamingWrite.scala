@@ -158,15 +158,11 @@ object CdcStreamingWrite {
       epochId: Long, maxCommitted: Long): Long = {
     val file = new Path(s"$storePath/_streams/q=$queryId")
     val fs = file.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(file)) {
-      val in = fs.open(file)
-      try new String(in.readAllBytes(), "UTF-8").trim.toLong
-      finally in.close()
-    } else {
+    if (fs.exists(file)) Cdc.readUtf8(fs, file).trim.toLong
+    else {
       val base = maxCommitted + 1 - epochId
       val tmp = new Path(s"$storePath/_streams/.q=$queryId.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(base.toString.getBytes("UTF-8")) finally out.close()
+      Cdc.writeUtf8(fs, tmp, base.toString)
       if (!fs.rename(tmp, file)) { // lost a (same-driver) race: trust the winner
         fs.delete(tmp, false)
         require(fs.exists(file), s"failed to pin stream base at $file")

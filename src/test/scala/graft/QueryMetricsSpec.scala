@@ -41,4 +41,27 @@ class QueryMetricsSpec extends AnyFunSuite {
     assert(lookup > 0, "the lookup is a file scan and must report its bytes")
     assert(lookup < full, s"pruned lookup read $lookup B, full scan $full B")
   }
+
+  test("a CDC catalog scan reports its live files' on-disk bytes; a key-pinned lookup fewer") {
+    import scala.jdk.CollectionConverters._
+    val store = Files.createTempDirectory("graft_qm_cat").toString
+    val keys = Seq("k")
+    val n = 8
+    val seed = (1L to 400L).map(k => (k, s"name$k", k * 1.5)).toDF("k", "name", "bal")
+    Cdc.processPartitionedBatch(
+      seed.withColumn("_seq", lit(0L)).withColumn("_op", lit("U")),
+      seed.limit(0), keys, Seq(col("_seq")), col("_op"), store, n, 0L)
+    // one commit: every data file under parts/ is live
+    val onDisk = Files.walk(Paths.get(store, "parts")).iterator.asScala
+      .filter(_.toString.endsWith(".parquet")).map(Files.size).sum
+    graft.sources.cdc.CdcCatalog.register("qm_cat", store, keys, n)
+    try {
+      // SUM is never answered from footers, so both queries read files
+      val full = scanBytesOf(spark.table("graft.qm_cat").agg(sum("bal")))
+      val lookup = scanBytesOf(spark.table("graft.qm_cat").filter(col("k") === 7L).agg(sum("bal")))
+      assert(full >= 0.9 * onDisk, s"catalog full scan reported $full B of $onDisk B live files")
+      assert(lookup > 0, "the catalog lookup opens its bucket's files and must report them")
+      assert(lookup < full, s"key-pinned catalog lookup read $lookup B, full scan $full B")
+    } finally graft.sources.cdc.CdcCatalog.unregister("qm_cat")
+  }
 }

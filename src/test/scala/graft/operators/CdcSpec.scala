@@ -933,7 +933,7 @@ class CdcSpec extends AnyFunSuite {
     }
     // the old physical data is still IN the old files (no rewrite), just
     // unreachable: the fresh physical name proves the isolation
-    val meta = Cdc.storedMeta(spark, store, 2L).get
+    val meta = Cdc.storedMeta(spark, store, 2L)
     assert(meta.phys("bal") !== "bal", "re-added column must mint a fresh physical name")
     assert(meta.retired.contains("bal"))
     // refusals: merge keys and the last column stay
@@ -1059,12 +1059,8 @@ class CdcSpec extends AnyFunSuite {
     casBatch(store, seed, 3L, (6L, "v3", 63.0, 300L, "U"))
     val v1Writer = Cdc.readManifestFull(spark, store, 1L)(bucketOf(5L)).base.get
     assert(v1Writer >= (1L << 62), "CAS writers must use token ids")
-    // schema resilience: drop v3's sidecar — the committed manifest's
-    // embedded _schema.ddl must keep the snapshot serving
     val fs = new org.apache.hadoop.fs.Path(store)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$store/schema/v=3"), true)
-    assert(readPart(store)(6L) === ("v3", 63.0))
     // vacuum keep=2: v0/v1 manifests age out; v1's token dir for the hot
     // bucket (superseded by v2's rewrite) must be REAPED, not leak forever
     Cdc.vacuum(spark, store, keepVersions = 2)
@@ -1074,6 +1070,42 @@ class CdcSpec extends AnyFunSuite {
     assert(!fs.exists(hotDir), "superseded CAS token dir leaked past vacuum")
     assert(readPart(store)(5L) === ("v2", 52.0))
     assert(readPart(store)(6L) === ("v3", 63.0))
+  }
+
+  test("every commit path records its metadata inside the manifest dir it renames: " +
+      "no schema/ sidecar, keys and bucket count recorded, _cas marks exactly the CAS commits") {
+    import org.apache.spark.sql.types.{IntegerType, LongType}
+    val store = java.nio.file.Files.createTempDirectory("graft_cdc_meta_home").toString
+    val seed = snap((1L to 40L).map(k => (k, s"orig$k", k * 1.0)): _*)
+    runBatch(store, seed, 0L)                                        // v0 non-CAS seed
+    Cdc.processPartitionedBatch(log((5L, "e1", 5.5, 100L, "U")), seed, keys,
+      Seq(col("seq")), col("op"), store, nBuckets, 1L, morCommit = true) // v1 non-CAS MoR
+    casBatch(store, seed, 2L, (6L, "c2", 6.5, 200L, "U"))           // v2 CAS CoW
+    morBatch(store, seed, 3L, (7L, "m3", 7.5, 300L, "U"))           // v3 CAS MoR
+    assert(Cdc.compactStore(spark, store, keys, nBuckets) === Some(4L))
+    assert(Cdc.renameColumn(spark, store, "name", "title") === 5L)
+    assert(Cdc.addColumn(spark, store, "tier", IntegerType) === 6L)
+    assert(Cdc.widenColumn(spark, store, "tier", LongType) === 7L)
+    assert(Cdc.dropColumn(spark, store, "tier", keys) === 8L)
+    assert(Cdc.splitBuckets(spark, store) === 9L)
+    val fs = new org.apache.hadoop.fs.Path(store)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$store/schema")),
+      "a schema/ sidecar dir was written")
+    val versions = Cdc.manifestVersions(spark, store).sorted
+    assert(versions === (0L to 9L))
+    versions.foreach { v =>
+      assert(fs.exists(new org.apache.hadoop.fs.Path(s"$store/manifest/v=$v/_schema.ddl")),
+        s"v=$v has no _schema.ddl in its manifest dir")
+      val meta = Cdc.storedMeta(spark, store, v)
+      assert(meta.keys === keys, s"v=$v recorded keys ${meta.keys}")
+      assert(meta.nBuckets === (if (v == 9L) nBuckets * 2 else nBuckets),
+        s"v=$v recorded bucket count ${meta.nBuckets}")
+      assert(Cdc.isCasCommit(spark, store, v) === (v >= 2L), s"v=$v provenance")
+    }
+    fs.delete(new org.apache.hadoop.fs.Path(s"$store/manifest/v=5/_schema.ddl"), false)
+    val e = intercept[IllegalStateException](Cdc.servingState(spark, store, Some(5L)))
+    assert(e.getMessage.contains(s"$store/manifest/v=5/_schema.ddl"), e.getMessage)
   }
 
   // ---- merge-on-read (delta commits) -----------------------------------
@@ -1635,7 +1667,7 @@ class CdcSpec extends AnyFunSuite {
       e.getMessage)
     // the DML commit is intact — detection, not destruction
     assert(readPart(store) === before)
-    assert(Cdc.storedMeta(spark, store, 1L).isDefined)
+    Cdc.storedMeta(spark, store, 1L) // throws when v1's metadata is gone
   }
 
   test("vacuum reaps ABANDONED attempt debris (staging manifests and unreferenced " +

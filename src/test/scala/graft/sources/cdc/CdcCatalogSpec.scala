@@ -592,13 +592,16 @@ class CdcCatalogSpec extends AnyFunSuite {
         .toDF("k", "name", "bal", "seq", "op"),
       seed40("t").toDF("k", "name", "bal"), keys, Seq(col("seq")), col("op"),
       store, nBuckets, 2L)
-    CdcCatalog.register("cat_stats", store, keys, nBuckets)
-    CdcCatalog.register("cat_stats_v0", store, keys, nBuckets, version = Some(0L))
-    // string min/max pushdown is OPT-IN (parquet-mr silently truncates
-    // binary footer statistics under parquet.statistics.truncate.length
-    // and marks nothing); this store is written by the engine's own
-    // non-truncating writer — the documented-safe case
-    spark.conf.set("graft.cdc.statsPushdown.stringMinMax", "true")
+    // string min/max pushdown is OPT-IN per registration (parquet-mr
+    // silently truncates binary footer statistics under
+    // parquet.statistics.truncate.length and marks nothing); this store
+    // is written by the engine's own non-truncating writer — the
+    // documented-safe case. `cat_stats_plain` serves the same store
+    // without the opt-in.
+    CdcCatalog.register("cat_stats", store, keys, nBuckets, trustStringStats = true)
+    CdcCatalog.register("cat_stats_v0", store, keys, nBuckets, version = Some(0L),
+      trustStringStats = true)
+    CdcCatalog.register("cat_stats_plain", store, keys, nBuckets)
     try {
       def scansIn(p: org.apache.spark.sql.execution.SparkPlan)
           : Seq[org.apache.spark.sql.connector.read.Scan] = p.collect {
@@ -646,28 +649,20 @@ class CdcCatalogSpec extends AnyFunSuite {
       assert(evoDf.collect().toSeq ===
         Cdc.readPartitionedSnapshot(spark, store).agg(evoAggs.head, evoAggs.tail: _*)
           .collect().toSeq)
-      // the escape hatch falls back to the ordinary scan
-      spark.conf.set("graft.cdc.statsPushdown", "false")
-      try {
-        val off = spark.table("graft.cat_stats").agg(min(col("bal")))
-        assert(scanOf(off).isInstanceOf[CdcScan], scanOf(off).description())
-      } finally spark.conf.unset("graft.cdc.statsPushdown")
       // by DEFAULT a string min/max refuses the footer path (parquet-mr
       // truncation is silent — see the truncating-writer law below) and
       // the whole aggregation takes the real scan, still exact
-      spark.conf.unset("graft.cdc.statsPushdown.stringMinMax")
-      val strOff = spark.table("graft.cat_stats").agg(min(col("name")), max(col("bal")))
+      val strOff = spark.table("graft.cat_stats_plain").agg(min(col("name")), max(col("bal")))
       assert(scanOf(strOff).isInstanceOf[CdcScan], scanOf(strOff).description())
       assert(strOff.collect().toSeq ===
         Cdc.readPartitionedSnapshot(spark, store)
           .agg(min(col("name")), max(col("bal"))).collect().toSeq)
       // ...while a string-free aggregate still pushes
-      val numOnly = spark.table("graft.cat_stats").agg(min(col("bal")), max(col("bal")))
+      val numOnly = spark.table("graft.cat_stats_plain").agg(min(col("bal")), max(col("bal")))
       assert(scanOf(numOnly).isInstanceOf[CdcStatsScan], scanOf(numOnly).description())
-      spark.conf.set("graft.cdc.statsPushdown.stringMinMax", "true")
     } finally {
       CdcCatalog.unregister("cat_stats"); CdcCatalog.unregister("cat_stats_v0")
-      spark.conf.unset("graft.cdc.statsPushdown.stringMinMax")
+      CdcCatalog.unregister("cat_stats_plain")
     }
   }
 
@@ -679,8 +674,7 @@ class CdcCatalogSpec extends AnyFunSuite {
     // old physical spelling, every catalog surface speaks the new names
     Cdc.renameColumn(spark, store, "name", "title")
     Cdc.renameColumn(spark, store, "k", "id")
-    CdcCatalog.register("cat_map", store, Seq("id"), nBuckets)
-    spark.conf.set("graft.cdc.statsPushdown.stringMinMax", "true")
+    CdcCatalog.register("cat_map", store, Seq("id"), nBuckets, trustStringStats = true)
     try {
       def scanOf(df: DataFrame) = df.queryExecution.executedPlan.collect {
         case b: BatchScanExec => Seq(b.scan)
@@ -738,10 +732,7 @@ class CdcCatalogSpec extends AnyFunSuite {
         fs.delete(new org.apache.hadoop.fs.Path(s"$feedDir/v=1"), true)
         assert(spark.table("graft.cat_map_feed").count() === 0L)
       } finally CdcCatalog.unregister("cat_map_feed")
-    } finally {
-      CdcCatalog.unregister("cat_map")
-      spark.conf.unset("graft.cdc.statsPushdown.stringMinMax")
-    }
+    } finally CdcCatalog.unregister("cat_map")
   }
 
   test("metadata tables: x$history and x$files serve the audit surfaces from pure " +
@@ -809,7 +800,7 @@ class CdcCatalogSpec extends AnyFunSuite {
       seed.toDF("k", "full_name", "bal").withColumn("name", lit(null).cast("string")),
       keys, Seq(col("seq")), col("op"), store, nBuckets, 2L,
       payloadCols = Seq("k", "full_name", "bal", "name"))
-    val meta = Cdc.storedMeta(spark, store, 2L).get
+    val meta = Cdc.storedMeta(spark, store, 2L)
     assert(meta.phys("name") === "name_1" && meta.phys("full_name") === "name",
       s"fixture must produce the collision mapping, got ${meta.mapping}")
     CdcCatalog.register("cat_collide", store, keys, nBuckets)

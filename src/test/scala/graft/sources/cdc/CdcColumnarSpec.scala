@@ -191,7 +191,8 @@ class CdcColumnarSpec extends AnyFunSuite {
       .filter(_.getName.endsWith(".parquet")).head.getAbsolutePath
     val schema = org.apache.spark.sql.types.StructType.fromDDL("v LONG, s STRING")
     def rowsReturned(filters: Array[org.apache.spark.sql.sources.Filter]): Long = {
-      val r = new CdcColumnarReader(Array(file), schema, Map.empty, sourceFilters = filters)
+      val r = new CdcColumnarReader(Array(file -> new java.io.File(file).length), schema,
+        Map.empty, sourceFilters = filters)
       var total = 0L
       while (r.next()) total += r.get().numRows()
       r.close(); total

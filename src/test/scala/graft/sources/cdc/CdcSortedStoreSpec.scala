@@ -52,7 +52,10 @@ class CdcSortedStoreSpec extends AnyFunSuite {
   }
 
   private def readKeys(file: String, filters: Array[(String, Array[Any])] = Array.empty): Seq[Long] = {
-    val r = new CdcColumnarReader(Array(file), payload, Map.empty, filters)
+    val p = new Path(file)
+    val r = new CdcColumnarReader(
+      Array(file -> p.getFileSystem(new Configuration()).getFileStatus(p).getLen),
+      payload, Map.empty, filters)
     val out = scala.collection.mutable.ArrayBuffer.empty[Long]
     try while (r.next()) {
       val batch = r.get()

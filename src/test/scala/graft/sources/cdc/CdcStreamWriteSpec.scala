@@ -455,7 +455,7 @@ class CdcStreamWriteSpec extends AnyFunSuite {
       assert(snap.contains((1L, "e0", 1.0)) && snap.contains((30L, "e1", 1.0)),
         s"epochs across the split must both serve: $snap")
       // the post-split epoch's commit recorded the NEW layout
-      assert(Cdc.servingState(spark, store)._2.nBuckets.contains(n * 2))
+      assert(Cdc.servingState(spark, store)._2.nBuckets === n * 2)
     } finally CdcCatalog.unregister("sw_split")
   }
 
