@@ -53,12 +53,26 @@ object CoreQueries {
 
   // The partitioned CDC store as a SESSION ARTIFACT (the IVF-index
   // discipline): c38_cdc_partitioned measures the MERGE writes themselves
-  // and (re)builds unconditionally — replay-idempotent over this same
-  // path — while the feed/lookup queries measure SERVING against the
-  // built store, not a rebuild.
+  // and rebuilds unconditionally at this same path (deleted first, see
+  // freshStore) — while the feed/lookup queries measure SERVING against
+  // the built store, not a rebuild.
   private val cdcStores = scala.collection.concurrent.TrieMap.empty[String, String]
   private def cdcStoreFor(s: SparkSession, sf: String): String =
     cdcStores.getOrElseUpdate(sf, buildCdcStore(s, sf))
+
+  /** A board CDC store's path under the temp dir, `graft_<name>_<sf>`. */
+  private def storePath(name: String, sf: String): String =
+    s"${System.getProperty("java.io.tmpdir")}/graft_${name}_" + sf.replaceAll("[^A-Za-z0-9._-]", "_")
+
+  /** [[storePath]], deleted first: every board store is built from
+    * nothing, so a build never replays over what an earlier run (or a
+    * tree with another on-disk format) left at the same path. */
+  private def freshStore(s: SparkSession, name: String, sf: String): String = {
+    val store = storePath(name, sf)
+    val p     = new org.apache.hadoop.fs.Path(store)
+    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+    store
+  }
 
   /** The session artifacts as (name, estimated seconds, thunk) units for
     * the concurrent artifact phase — same contract as
@@ -93,8 +107,7 @@ object CoreQueries {
   )
 
   private def buildCdcStore(s: SparkSession, sf: String): String = {
-    val store = s"${System.getProperty("java.io.tmpdir")}/graft_cdcstore_" +
-      sf.replaceAll("[^A-Za-z0-9._-]", "_")
+    val store = freshStore(s, "cdcstore", sf)
     val changelog = cdcChangelog(s, sf)
     val cut = to_date(lit("1995-06-01"))
     val ord = Seq(col("chg_ts"), col("chg_seq"))
@@ -126,14 +139,10 @@ object CoreQueries {
   /** The MoR store's on-disk location for `sf` — ONE definition shared by
     * the builder and [[partitionsOracleSql]] (a drifted duplicate would
     * point the oracle at a stale or nonexistent directory). */
-  private def morStorePath(sf: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_cdcmor_" +
-      sf.replaceAll("[^A-Za-z0-9._-]", "_")
+  private def morStorePath(sf: String): String = storePath("cdcmor", sf)
   private def morTableFor(s: SparkSession, sf: String): String =
     morTables.getOrElseUpdate(sf, {
-      val store = morStorePath(sf)
-      val p = new org.apache.hadoop.fs.Path(store)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      val store = freshStore(s, "cdcmor", sf)
       buildMorStore(s, sf, store)
       val t = "cdc_mor_" + sf.replaceAll("[^A-Za-z0-9]", "_").toLowerCase
       graft.sources.cdc.CdcCatalog.register(t, store, Seq("c_custkey"), 16,
@@ -152,10 +161,7 @@ object CoreQueries {
   private val splitTables = scala.collection.concurrent.TrieMap.empty[String, String]
   private def splitTableFor(s: SparkSession, sf: String): String =
     splitTables.getOrElseUpdate(sf, {
-      val store = s"${System.getProperty("java.io.tmpdir")}/graft_cdcsplit_" +
-        sf.replaceAll("[^A-Za-z0-9._-]", "_")
-      val p = new org.apache.hadoop.fs.Path(store)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      val store = freshStore(s, "cdcsplit", sf)
       val changelog = cdcChangelog(s, sf)
       val cut = to_date(lit("1995-06-01"))
       val ord = Seq(col("chg_ts"), col("chg_seq"))
@@ -191,8 +197,7 @@ object CoreQueries {
   private val activityStores = scala.collection.concurrent.TrieMap.empty[String, String]
   private def cdcActivityStoreFor(s: SparkSession, sf: String): String =
     activityStores.getOrElseUpdate(sf, {
-      val store = s"${System.getProperty("java.io.tmpdir")}/graft_cdcactivity_" +
-        sf.replaceAll("[^A-Za-z0-9._-]", "_")
+      val store = freshStore(s, "cdcactivity", sf)
       val cut = to_date(lit("1995-06-01"))
       val orders = Tables.orders(s, sf)
       def rollup(of: DataFrame): DataFrame = of.groupBy("o_custkey")
@@ -251,10 +256,7 @@ object CoreQueries {
   private val compactFeedTables = scala.collection.concurrent.TrieMap.empty[String, String]
   private def compactFeedTableFor(s: SparkSession, sf: String): String =
     compactFeedTables.getOrElseUpdate(sf, {
-      val store = s"${System.getProperty("java.io.tmpdir")}/graft_cdccompact_" +
-        sf.replaceAll("[^A-Za-z0-9._-]", "_")
-      val p = new org.apache.hadoop.fs.Path(store)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      val store = freshStore(s, "cdccompact", sf)
       val changelog = cdcChangelog(s, sf)
       val d1 = to_date(lit("1994-06-01"))
       val d2 = to_date(lit("1996-06-01"))
@@ -2037,12 +2039,11 @@ object CoreQueries {
     // rewrites ONLY the key-hash buckets its delta touches and carries
     // every other bucket by manifest reference — the lakehouse MERGE
     // file-skipping shape. The served snapshot must hash-match the
-    // one-shot c38 oracle exactly; idempotent under re-runs because a
-    // replayed batch id rewrites the same (bucket, writer) dirs from the
-    // same parent manifest.
+    // one-shot c38 oracle exactly; every run builds it from an empty
+    // store path, so re-runs serve the same snapshot.
     "c38_cdc_partitioned" -> ((s, sf) => {
       // measures the MERGE writes themselves: builds both versions
-      // unconditionally (replay-idempotent over the shared store path)
+      // unconditionally, from an empty store path
       val store = buildCdcStore(s, sf)
       cdcStores.put(sf, store) // downstream serving queries reuse this build
       Cdc.readPartitionedSnapshot(s, store).orderBy("c_custkey")
@@ -2078,10 +2079,7 @@ object CoreQueries {
     // Rebuilds unconditionally (measures delta write + compaction);
     // result identical to both twins' oracle.
     "c38_cdc_mor_compact" -> ((s, sf) => {
-      val store = s"${System.getProperty("java.io.tmpdir")}/graft_cdcmorc_" +
-        sf.replaceAll("[^A-Za-z0-9._-]", "_")
-      val p = new org.apache.hadoop.fs.Path(store)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      val store = freshStore(s, "cdcmorc", sf)
       buildMorStore(s, sf, store)
       Cdc.compactStore(s, store, Seq("c_custkey"), 16)
       Cdc.readPartitionedSnapshot(s, store).orderBy("c_custkey")
@@ -2302,11 +2300,8 @@ object CoreQueries {
     // buckets. Must hash-match the same merged recompute the imperative
     // API is checked against — one semantics, two front doors.
     "c38_cdc_merge_sql" -> ((s, sf) => {
-      val store = s"${System.getProperty("java.io.tmpdir")}/graft_cdcmerge_" +
-        sf.replaceAll("[^A-Za-z0-9._-]", "_")
       // fresh store every run: the query measures seed + one SQL MERGE
-      val p = new org.apache.hadoop.fs.Path(store)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      val store = freshStore(s, "cdcmerge", sf)
       val seed = Tables.customer(s, sf)
       Cdc.processPartitionedBatch(
         seed.withColumn("_seq", lit(0L)).withColumn("_op", lit("U")),

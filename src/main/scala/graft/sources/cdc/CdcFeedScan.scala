@@ -330,7 +330,10 @@ object CdcFeedScan {
     retainedUnits(feedPath).flatMap(u => u.lo to u.hi)
 
   /** Driver-side listing of one directory's part files: (path, on-disk
-    * size), by path. */
+    * size), by path. The one listing for every CDC scan (store buckets and
+    * their delta levels, feed units, footer statistics): a missing
+    * directory throws `FileNotFoundException`, so a dir that vanished
+    * under a planned scan fails it rather than reading as empty. */
   private[cdc] def dirFiles(dir: String): Seq[(String, Long)] = {
     val p = new Path(dir)
     val fs = p.getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration)

@@ -2,8 +2,6 @@ package graft.sources.cdc
 
 import java.util.OptionalLong
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
 import org.apache.spark.sql.connector.read._
@@ -219,26 +217,18 @@ class CdcScanBuilder(table: CdcStoreTable, d: CdcCatalog.StoreDef)
         .takeWhile { b => val need = acc < n; acc += table.bucketRows(b); need }
         .toSet
     }
-    // resolve each surviving bucket's file list now, on the driver
-    val conf = SparkSession.active.sparkContext.hadoopConfiguration
-    def listDir(dir: String): Array[(String, Long)] = {
-      val p = new Path(dir)
-      val fs = p.getFileSystem(conf)
-      if (!fs.exists(p)) Array.empty
-      else fs.listStatus(p)
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-        .map(s => s.getPath.toString -> s.getLen)
-        .sortBy(_._1)
-    }
+    // resolve each surviving bucket's file list now, on the driver; a
+    // manifest-listed dir that vanished (vacuum racing the scan) fails
+    // the scan instead of serving the bucket as empty
     def planned(b: Int): Boolean =
       prunedBuckets.forall(_.contains(b)) && limitBuckets.forall(_.contains(b))
     val files: Map[Int, Array[(String, Long)]] = table.bucketDirs
       .filter { case (b, _) => planned(b) }
-      .map { case (b, dir) => b -> listDir(dir) }
+      .map { case (b, dir) => b -> CdcFeedScan.dirFiles(dir).toArray }
     // merge-on-read delta levels, per planned bucket, manifest order
     val deltaFiles: Map[Int, Array[Array[(String, Long)]]] = table.bucketDeltaDirs
       .filter { case (b, _) => planned(b) }
-      .map { case (b, dirs) => b -> dirs.map(listDir).toArray }
+      .map { case (b, dirs) => b -> dirs.map(CdcFeedScan.dirFiles(_).toArray).toArray }
     val buckets = limitBuckets.map(_.toSeq.sorted)
       .orElse(prunedBuckets.map(_.toSeq.sorted))
       .getOrElse(0 until d.nBuckets)

@@ -1,7 +1,7 @@
 package graft.sources.cdc
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec, DataSourceV2Relation}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -1031,6 +1031,25 @@ class CdcCatalogSpec extends AnyFunSuite {
       assert(served.contains((7L, "c7", 10.5)) && served.contains((8L, "c8", 12.0)), served)
       assert(served === collectRows(Cdc.readPartitionedSnapshot(spark, store)))
     } finally CdcCatalog.unregister("cat_coerce")
+  }
+
+  test("a bucket dir that vanishes under a resolved table fails the scan instead of serving fewer rows") {
+    val store = buildStore("vanish", seed40("v"))
+    CdcCatalog.register("cat_vanish", store, keys, nBuckets)
+    try {
+      // resolving the table reads the manifest; the scan lists at planning
+      val df = spark.table("graft.cat_vanish")
+      val table = df.queryExecution.analyzed.collectFirst {
+        case r: DataSourceV2Relation => r.table.asInstanceOf[CdcStoreTable]
+      }.get
+      val (_, dir) = table.bucketDirs.head
+      assert(CdcFeedScan.dirFiles(dir).nonEmpty)
+      val path = new org.apache.hadoop.fs.Path(dir)
+      path.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(path, true)
+      val e = intercept[Exception](df.collect())
+      assert(Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
+        .exists(_.isInstanceOf[java.io.FileNotFoundException]), e)
+    } finally CdcCatalog.unregister("cat_vanish")
   }
 
   test("unknown table and non-additive surface fail loudly") {
