@@ -867,7 +867,7 @@ object Cdc {
     // IO): the commit used to READ BACK every file it had just written
     // for the ANALYZE-on-write pass — a second full pass over the touched
     // buckets, doubling commit read IO at any scale. The merged frame is
-    // eagerly checkpointed instead: the write job AND the stats aggregate
+    // eagerly checkpointed instead: the write job AND the stats pass
     // both read the cached blocks, and the freshly-written files are
     // never re-opened. Recorded stats are identical by construction (the
     // frame IS the files' content, and count/min/max/null-count/HLL-ndv
@@ -1045,9 +1045,14 @@ object Cdc {
     val missing = target.fieldNames.filterNot(batch.columns.contains)
     require(missing.isEmpty, s"changelog lacks payload columns: ${missing.mkString(",")}")
     val physKeys = keys.map(targetMeta.phys)
-    val touched: Set[Int] = batch
-      .select(bucketExpr(keys, nBuckets).as("_b")).distinct().as[Int].collect().toSet
-    val deep: Set[Int] = touched.filter(p =>
+    // the batch's bucket set costs a Spark job, and only a parent bucket
+    // already at the depth cap can make `deep` non-empty; otherwise the
+    // write's own listing below is the touched set
+    val batchBuckets: Option[Set[Int]] =
+      if (!parentEntries.valuesIterator.exists(_.deltas.length >= morMaxDepth)) None
+      else Some(batch.select(bucketExpr(keys, nBuckets).as("_b")).distinct()
+        .as[Int].collect().toSet)
+    val deep: Set[Int] = batchBuckets.getOrElse(Set.empty).filter(p =>
       parentEntries.get(p).exists(_.deltas.length >= morMaxDepth))
     def layout(df: DataFrame): DataFrame = df
       .withColumn("_bucket", bucketExpr(physKeys, nBuckets))
@@ -1096,6 +1101,9 @@ object Cdc {
       }
     try {
     val written = listWrittenBuckets(spark, storePath, writerId)
+    // exact without deep buckets: every key's survivor row, tombstones
+    // included, lands in its bucket
+    val touched = batchBuckets.getOrElse(written)
     // fresh bases record rows (+ stats when enabled), same as CoW commits
     val statsOn = statsCollectionOn(target)
     val writtenDeep = (written intersect deep).toSeq.sorted
@@ -2384,7 +2392,7 @@ object Cdc {
       }
     // r22: same no-read-back commit as processPartitionedBatch — the
     // rewrite frame is checkpointed once, the write and the ANALYZE
-    // aggregate both read the cached blocks, and the fresh files are
+    // pass both read the cached blocks, and the fresh files are
     // never re-opened (stats identical by construction; see
     // [[bucketStatsAgg]]).
     val clusteredCk = clustered.localCheckpoint(true)
@@ -2566,12 +2574,6 @@ object Cdc {
       .filter(col("_commit_version") > sinceV)
   }
 
-  /** Manifest entries of version `v` — per bucket: base writer, recorded
-    * row count / column statistics (None/empty for manifests written
-    * before they rode along, or for buckets with pending deltas — the
-    * next full rewrite records them forward; readers treat absence as
-    * unknown, never as zero), and the ordered merge-on-read delta
-    * writers. nBuckets-bounded: config, not data. */
   /** In-JVM manifest cache (r22): a committed `v=<id>` manifest dir is
     * immutable — every writer stages under a fresh name and RENAMES onto
     * the version, so new content always means a new `_SUCCESS` mtime and
@@ -2595,6 +2597,14 @@ object Cdc {
       }
     } catch { case _: java.io.FileNotFoundException => None }
 
+  /** Manifest entries of version `v` — per bucket: base writer, recorded
+    * row count / column statistics (None/empty for manifests written
+    * before they rode along, or for buckets with pending deltas — the
+    * next full rewrite records them forward; readers treat absence as
+    * unknown, never as zero), and the ordered merge-on-read delta
+    * writers. nBuckets-bounded: config, not data. Served from
+    * [[manifestCache]] when the dir's token matches, else decoded on the
+    * driver ([[readManifestFullUncached]]): no Spark job either way. */
   private[graft] def readManifestFull(
       spark: org.apache.spark.sql.SparkSession,
       storePath: String,
@@ -2614,32 +2624,61 @@ object Cdc {
     }
   }
 
+  /** Decode a `v=<id>` manifest dir on the driver with parquet-java, the
+    * way [[writeManifestParquet]] writes it: a few KB of nBuckets-bounded
+    * metadata, where `spark.read.parquet` + `collect` paid a schema-
+    * inference job and a collect job. Reads every part file (skipping
+    * `_`/`.` names, as Spark does) under its own footer schema, so the
+    * optional columns older manifests lack decode as absent. A missing dir
+    * fails loudly, naming the path. */
   private def readManifestFullUncached(
       spark: org.apache.spark.sql.SparkSession,
       storePath: String,
       v: Long): Map[Int, BucketEntry] = {
-    import spark.implicits._
-    val df = spark.read.parquet(s"${manifestPath(storePath)}/v=$v")
-    val cols = df.columns.toSet
-    val rowsCol =
-      if (cols("_rows")) col("_rows").cast("long") else lit(null).cast("long")
-    val csCol =
-      if (cols("_colstats")) col("_colstats")
-      else typedLit(Map.empty[String, ColStatRec])
-    val dCol =
-      if (cols("_deltas")) col("_deltas") else typedLit(Seq.empty[Long])
-    val bmCol =
-      if (cols("_basemod")) col("_basemod").cast("int") else lit(null).cast("int")
-    df.select(col("_bucket").cast("int"), col("_writer").cast("long"),
-        rowsCol.as("_rows"), csCol.as("_colstats"), dCol.as("_deltas"),
-        bmCol.as("_basemod"))
-      .as[(Int, Long, Option[Long], Option[Map[String, ColStatRec]], Option[Seq[Long]],
-        Option[Int])]
-      .collect()
-      .map { case (p, w, r, cs, ds, bm) =>
-        p -> BucketEntry(if (w < 0) None else Some(w), r, cs.getOrElse(Map.empty),
-          ds.getOrElse(Nil), bm)
-      }.toMap
+    import org.apache.parquet.example.data.Group
+    val conf = spark.sparkContext.hadoopConfiguration
+    val dir = new org.apache.hadoop.fs.Path(s"${manifestPath(storePath)}/v=$v")
+    val parts = dir.getFileSystem(conf).listStatus(dir).filter { st =>
+      val n = st.getPath.getName
+      st.isFile && !n.startsWith("_") && !n.startsWith(".")
+    }.sortBy(_.getPath.getName)
+    def present(g: Group, f: String): Boolean =
+      g.getType.containsField(f) && g.getFieldRepetitionCount(f) > 0
+    def num(g: Group, f: String): Option[Long] =
+      if (!present(g, f)) None
+      else if (g.getType.getType(f).asPrimitiveType.getPrimitiveTypeName ==
+          org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT32)
+        Some(g.getInteger(f, 0).toLong)
+      else Some(g.getLong(f, 0))
+    def str(g: Group, f: String): Option[String] =
+      if (present(g, f)) Some(g.getString(f, 0)) else None
+    // a MAP's key_value / a LIST's list entries: the one repeated child
+    def entries(g: Group, f: String): Seq[Group] =
+      if (!present(g, f)) Nil
+      else {
+        val c = g.getGroup(f, 0)
+        (0 until c.getFieldRepetitionCount(0)).map(c.getGroup(0, _))
+      }
+    parts.iterator.flatMap { st =>
+      val reader = org.apache.parquet.hadoop.ParquetReader
+        .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(), st.getPath)
+        .withConf(conf)
+        .build()
+      try Iterator.continually(reader.read()).takeWhile(_ != null).map { g =>
+        val w = num(g, "_writer").get
+        num(g, "_bucket").get.toInt -> BucketEntry(
+          if (w < 0) None else Some(w),
+          num(g, "_rows"),
+          entries(g, "_colstats").map { kv =>
+            val st = kv.getGroup("value", 0)
+            kv.getString("key", 0) ->
+              ColStatRec(num(st, "nulls").get, num(st, "ndv"), str(st, "min"), str(st, "max"))
+          }.toMap,
+          entries(g, "_deltas").map(e => num(e, "element").get),
+          num(g, "_basemod").map(_.toInt))
+      }.toVector
+      finally reader.close()
+    }.toMap
   }
 
   /** Parquet layout of a manifest part file — byte-for-byte the shape
@@ -2685,7 +2724,7 @@ object Cdc {
     * leaves the same layout the Spark job left: one part file plus the
     * `_SUCCESS` marker the commit protocol's rename carries along as its
     * visibility token. */
-  private def writeManifestParquet(
+  private[graft] def writeManifestParquet(
       spark: org.apache.spark.sql.SparkSession,
       staging: org.apache.hadoop.fs.Path,
       entries: Seq[(Int, BucketEntry)]): Unit = {
@@ -2934,22 +2973,20 @@ object Cdc {
     * a tracked type (the ONE definition every commit path shares — CoW,
     * merge-on-read auto-compaction, and compactStore must record stats
     * under identical rules or CBO estimates become path-dependent).
-    * Per-bucket column statistics cost ONE aggregate read-back over the
-    * buckets just written — IO of the same order as the write itself,
-    * distributed, touched-buckets-bounded. */
+    * Per-bucket column statistics cost ONE narrow pass over the rows the
+    * commit just wrote ([[bucketStatsAgg]]): one Spark job, no shuffle,
+    * touched-buckets-bounded. */
   private def statsCollectionOn(schema: org.apache.spark.sql.types.StructType): Boolean =
-    schema.fields.exists(f =>
-      CboMinMaxTypes.contains(f.dataType) ||
-        f.dataType == org.apache.spark.sql.types.StringType)
+    schema.fields.exists(statsTracked)
 
-  /** ANALYZE-on-write: one distributed aggregate over the named bucket
-    * directories (freshly written or being backfilled), grouped by the
-    * layout's `_bucket` partition column — exact rows/nulls/min/max plus
-    * HLL distinct counts per tracked column, the stats Spark's
-    * FilterEstimation needs (it refuses to estimate a range predicate
-    * without BOTH min/max and a distinct count — verified against the
-    * shipped catalyst bytecode). Returns per-bucket row counts and
-    * column records ready for the manifest. */
+  /** A column ANALYZE-on-write records: a [[CboMinMaxTypes]] type or a
+    * string. */
+  private def statsTracked(f: org.apache.spark.sql.types.StructField): Boolean =
+    CboMinMaxTypes.contains(f.dataType) || f.dataType == org.apache.spark.sql.types.StringType
+
+  /** ANALYZE-on-write backfill: [[bucketStatsAgg]] over the named bucket
+    * directories (carried buckets whose manifests predate stat
+    * recording), read with the layout's `_bucket` partition column. */
   private def bucketStatsScan(
       spark: org.apache.spark.sql.SparkSession,
       storePath: String,
@@ -2964,60 +3001,102 @@ object Cdc {
       schema, withStats = true)
   }
 
-  /** The ANALYZE aggregate itself, over any `_bucket`-carrying frame.
-    * Called on the freshly-written COMMIT FRAME (r22: the checkpointed
-    * rows the write job emitted — identical to what the files contain, so
-    * stats never re-open what was just written; every aggregate here is
-    * order- and partitioning-independent: count/min/max/null-count
-    * trivially, HLL ndv because register-max merge is associative and
-    * commutative) and on read-back frames for carried-bucket backfill.
-    * `withStats = false` records row counts only. */
-  private def bucketStatsAgg(
+  /** ANALYZE-on-write over any `_bucket`-carrying frame: exact
+    * rows/nulls/min/max plus HLL distinct counts per tracked column, the
+    * stats Spark's FilterEstimation needs (it refuses to estimate a range
+    * predicate without BOTH min/max and a distinct count). Commits call
+    * it on their checkpointed COMMIT FRAME (the rows the write job
+    * emitted, identical to the files' content, so stats never re-open
+    * what was just written); backfill calls it on a read-back frame.
+    *
+    * ONE narrow pass, not a Catalyst aggregate: a `groupBy(_bucket).agg`
+    * of `approx_count_distinct` plans two 1-task stages, and
+    * `HashAggregateExec` cannot codegen the HLL++ buffer, so every task
+    * rebuilds its projection — hundreds of ms to move a few KB. Each
+    * partition here folds its rows into per-bucket partials (row and
+    * non-null counts, HLL++ registers through the same
+    * `HyperLogLogPlusPlusHelper` `approx_count_distinct` uses, min/max
+    * under the type's catalyst ordering), and the driver merges them.
+    * Every statistic is order- and partitioning-independent, so the
+    * recorded values equal the aggregate's (law in CdcCommitPathSpec).
+    * Min/max are stringified INTERNAL values (DATE = epoch days), what
+    * the scan side parses. `withStats = false` records row counts only. */
+  private[graft] def bucketStatsAgg(
       df: DataFrame,
       schema: org.apache.spark.sql.types.StructType,
       withStats: Boolean)
       : Map[Int, (Long, Map[String, ColStatRec])] = {
-    import org.apache.spark.sql.types._
     val tracked =
-      if (withStats)
-        schema.fields.filter(f =>
-          CboMinMaxTypes.contains(f.dataType) || f.dataType == StringType)
-      else Array.empty[StructField]
-    val aggs: Seq[Column] = count(lit(1)).as("__rows") +: tracked.toSeq.flatMap { f =>
-      val c = col(s"`${f.name}`")
-      Seq(count(c).as(s"__nn:${f.name}"),
-        approx_count_distinct(c).as(s"__ndv:${f.name}")) ++
-        (if (CboMinMaxTypes.contains(f.dataType))
-           Seq(min(c).as(s"__min:${f.name}"), max(c).as(s"__max:${f.name}"))
-         else Nil)
+      if (withStats) schema.fields.filter(statsTracked)
+      else Array.empty[org.apache.spark.sql.types.StructField]
+    val ordinals = tracked.map(f => df.schema.fieldIndex(f.name))
+    val types = tracked.map(_.dataType)
+    val ranged = tracked.map(f => CboMinMaxTypes.contains(f.dataType))
+    val bucketOrdinal = df.schema.fieldIndex("_bucket")
+    val partials = df.queryExecution.toRdd.mapPartitions { rows =>
+      val acc = scala.collection.mutable.HashMap.empty[Int, BucketStats]
+      rows.foreach { r =>
+        acc.getOrElseUpdate(r.getInt(bucketOrdinal), new BucketStats(types, ranged))
+          .add(r, ordinals)
+      }
+      acc.iterator
+    }.collect() // nBuckets-bounded per partition
+    partials.groupMapReduce(_._1)(_._2)(_ merge _).map { case (p, b) =>
+      p -> (b.rows, tracked.indices.map(i => tracked(i).name -> b.record(i)).toMap)
     }
-    // external (Row-level) value → stringified INTERNAL value, matching
-    // the scan-side parse (DATE = epoch days)
-    def internalString(v: Any): String = v match {
-      case d: java.sql.Date       => d.toLocalDate.toEpochDay.toString
-      case d: java.time.LocalDate => d.toEpochDay.toString
-      case other                  => other.toString
+  }
+
+  /** One bucket's partial ANALYZE state for [[bucketStatsAgg]]: the row
+    * count, and per tracked column its non-null count, HLL++ registers
+    * (relative SD 0.05, `approx_count_distinct`'s default) and min/max as
+    * internal values. */
+  private final class BucketStats(
+      types: Array[org.apache.spark.sql.types.DataType],
+      ranged: Array[Boolean]) extends Serializable {
+    import org.apache.spark.sql.catalyst.types.PhysicalDataType
+    private val hll = new org.apache.spark.sql.catalyst.util.HyperLogLogPlusPlusHelper(0.05)
+    private val words = hll.numWords
+    var rows = 0L
+    private val nonNull = new Array[Long](types.length)
+    private val registers = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+      Array.fill[Any](types.length * words)(0L))
+    private val lo, hi = new Array[Any](types.length)
+    @transient private lazy val orderings = types.map(PhysicalDataType.ordering)
+
+    def add(r: org.apache.spark.sql.catalyst.InternalRow, ordinals: Array[Int]): Unit = {
+      rows += 1
+      var i = 0
+      while (i < types.length) {
+        if (!r.isNullAt(ordinals(i))) {
+          val v = r.get(ordinals(i), types(i))
+          nonNull(i) += 1
+          hll.update(registers, i * words, v, types(i))
+          if (ranged(i)) keep(i, v, v)
+        }
+        i += 1
+      }
     }
-    df.groupBy(col("_bucket"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect() // nBuckets-bounded: one row per bucket
-      .map { r =>
-        val rows = r.getLong(r.fieldIndex("__rows"))
-        val stats = tracked.iterator.map { f =>
-          val nn = r.getLong(r.fieldIndex(s"__nn:${f.name}"))
-          val ndv = r.getLong(r.fieldIndex(s"__ndv:${f.name}"))
-          val (mn, mx) =
-            if (!CboMinMaxTypes.contains(f.dataType)) (None, None)
-            else {
-              val mi = r.fieldIndex(s"__min:${f.name}")
-              val ma = r.fieldIndex(s"__max:${f.name}")
-              (if (r.isNullAt(mi)) None else Some(internalString(r.get(mi))),
-               if (r.isNullAt(ma)) None else Some(internalString(r.get(ma))))
-            }
-          f.name -> ColStatRec(rows - nn, Some(ndv), mn, mx)
-        }.toMap
-        r.getInt(r.fieldIndex("_bucket")) -> (rows, stats)
-      }.toMap
+
+    /** Widen column `i`'s range by [vlo, vhi]; a tie keeps the value
+      * already held. */
+    private def keep(i: Int, vlo: Any, vhi: Any): Unit = {
+      if (lo(i) == null || orderings(i).lt(vlo, lo(i))) lo(i) = vlo
+      if (hi(i) == null || orderings(i).gt(vhi, hi(i))) hi(i) = vhi
+    }
+
+    def merge(o: BucketStats): BucketStats = {
+      rows += o.rows
+      for (i <- types.indices) {
+        nonNull(i) += o.nonNull(i)
+        hll.merge(registers, o.registers, i * words, i * words)
+        if (o.lo(i) != null) keep(i, o.lo(i), o.hi(i))
+      }
+      this
+    }
+
+    def record(i: Int): ColStatRec =
+      ColStatRec(rows - nonNull(i), Some(hll.query(registers, i * words)),
+        Option(lo(i)).map(_.toString), Option(hi(i)).map(_.toString))
   }
 
   /** Delete every `_bucket=*` / `_writer=<id>` directory under the store —
